@@ -60,12 +60,23 @@ object StreamGateQueries extends QueryModule {
                                   k: Int): String =
     stageWaves((0 until k).map(i => df.filter(col(splitCol) % k === i)))
 
-  /** Write explicit wave frames as single-file batches (wave i = one
-    * file, modification times 2 s apart so the file stream processes
-    * them in wave order) — the mixed add/delete feeds the streamed-
-    * tombstone gates stage, where a wave's rows are not a simple
-    * `splitCol % k` slice. Returns the watch dir. */
-  private def writeWaves(waves: Seq[DataFrame]): String = stageWaves(waves)
+  /** Seed the standing ANN index the maintenance gates extend: the
+    * quantizer trained on `standing` at `root/centroids`, and its lists
+    * as the manual base `root/lists/graft_batch=-1`. */
+  private def seedStandingIndex(standing: DataFrame, root: String): Unit = {
+    val (cent, lists) = graft.similarity.Similarity.ivfBuildQuantized(
+      Tables.spread(standing), nlist = 16, lloydIters = 2)
+    cent.write.mode("overwrite").parquet(root + "/centroids")
+    lists.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
+  }
+
+  /** The gates' ordered file source: the parquet files in `watch` as a
+    * stream of `schema` rows, one file per micro-batch, oldest first
+    * (the order [[stageWaves]] stamps). */
+  private def fileStream(s: SparkSession, schema: String,
+                         watch: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(watch)
 
   /** T11: late-data accounting. Three event batches stream through
     * [[LateData.splitLate]] (delay 3600 s); each batch's rows land in the
@@ -77,10 +88,8 @@ object StreamGateQueries extends QueryModule {
     val watch = writeOrderedBatches(ev, "event_id", 3)
     val root = Dsl.tempDir("graft_t11_")
     val (mainDir, lateDir) = (s"$root/main", s"$root/late")
-    val stream = s.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT",
+      watch)
     LateData.splitLate(stream, "ts", delaySeconds = 3600L,
       mainDir, lateDir, s"$root/state", s"$root/ckpt")
       .awaitTermination()
@@ -125,10 +134,8 @@ object StreamGateQueries extends QueryModule {
       .select("event_id", "user_id", "event_type")
     val watch = writeOrderedBatches(ev, "event_id", 3)
     val root = Dsl.tempDir("graft_t12_")
-    val stream = s.readStream
-      .schema("event_id BIGINT, user_id BIGINT, event_type STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s,
+      "event_id BIGINT, user_id BIGINT, event_type STRING", watch)
     ViewMaintenance.maintain(stream, s"$root/state", s"$root/ckpt",
       keys = Seq("event_type"),
       measures = Seq(
@@ -156,10 +163,7 @@ object StreamGateQueries extends QueryModule {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
     val root = Dsl.tempDir("graft_m8adm_")
-    val stream = s.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
     DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
       s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
       portable = true)
@@ -240,10 +244,7 @@ object StreamGateQueries extends QueryModule {
       .withColumn("slice", col("doc_id") % 4)
     val watch = writeOrderedBatches(streamed, "slice", 3)
     val root = Dsl.tempDir("graft_m8cmp_")
-    val stream = s.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
     DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
       s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
       portable = true)
@@ -296,10 +297,7 @@ object StreamGateQueries extends QueryModule {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
     val root = Dsl.tempDir("graft_m8slbl_")
-    val stream = s.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
     DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
       s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
       portable = true, labelsDir = Some(s"$root/labels"))
@@ -345,10 +343,7 @@ object StreamGateQueries extends QueryModule {
     val docs = Tables.documents(s, dir).select("doc_id", "n_chars")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
     val root = Dsl.tempDir("graft_m8ssam_")
-    val stream = s.readStream
-      .schema("doc_id LONG, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id LONG, n_chars LONG", watch)
     SampleStream.maintainSample(stream, s"$root/state", s"$root/ckpt",
         k = 50, salt = "ssam", idCol = "doc_id", weightCol = "n_chars")
       .awaitTermination()
@@ -385,15 +380,9 @@ object StreamGateQueries extends QueryModule {
     val delta = emb.filter(col("vec_id") % 5 === 4)
       .select("vec_id", "embedding")
     val root = Dsl.tempDir("graft_t13_")
-    val (cent, lists0) = Similarity.ivfBuildQuantized(
-      Tables.spread(standing), nlist = 16, lloydIters = 2)
-    cent.write.mode("overwrite").parquet(root + "/centroids")
-    lists0.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
+    seedStandingIndex(standing, root)
     val watch = writeOrderedBatches(delta, "vec_id", 3)
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>", watch)
     IndexStream.maintainIndex(stream, root + "/centroids", root + "/lists",
         Dsl.tempDir("graft_t13_ckpt_"))
       .awaitTermination()
@@ -422,10 +411,7 @@ object StreamGateQueries extends QueryModule {
     import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
     val root = Dsl.tempDir("graft_t14_")
     PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt")
       .awaitTermination()
@@ -450,10 +436,7 @@ object StreamGateQueries extends QueryModule {
     import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
     val root = Dsl.tempDir("graft_t15_")
     PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
       positions = true).awaitTermination()
@@ -488,10 +471,8 @@ object StreamGateQueries extends QueryModule {
     // back-fill): start the sparse drain first, build + drain the
     // dense leg while it runs, await both before the serves.
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val dstream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(docs, "doc_id", 3))
+    val dstream = fileStream(s, "doc_id BIGINT, text STRING",
+      writeOrderedBatches(docs, "doc_id", 3))
     val sparseDrain = PostingsStream.maintainPostings(dstream,
       root + "/postings", Dsl.tempDir("graft_t16_pckpt_"))
     // dense leg: the T13 store shape — batch-built quantized lists plus
@@ -500,14 +481,9 @@ object StreamGateQueries extends QueryModule {
     val standing = emb.filter(col("vec_id") % 5 =!= 4)
     val delta = emb.filter(col("vec_id") % 5 === 4)
       .select("vec_id", "embedding")
-    val (cent, lists0) = Similarity.ivfBuildQuantized(
-      Tables.spread(standing), nlist = 16, lloydIters = 2)
-    cent.write.mode("overwrite").parquet(root + "/centroids")
-    lists0.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
-    val vstream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(delta, "vec_id", 3))
+    seedStandingIndex(standing, root)
+    val vstream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      writeOrderedBatches(delta, "vec_id", 3))
     IndexStream.maintainIndex(vstream, root + "/centroids", root + "/lists",
       Dsl.tempDir("graft_t16_ickpt_")).awaitTermination()
     sparseDrain.awaitTermination()
@@ -576,10 +552,7 @@ object StreamGateQueries extends QueryModule {
     import graft.streaming.{BatchStore, PostingsStream}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
     val root = Dsl.tempDir("graft_t17_")
     PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
       positions = true).awaitTermination()
@@ -650,14 +623,9 @@ object StreamGateQueries extends QueryModule {
     val delta = emb.filter(col("vec_id") % 5 === 4)
       .select("vec_id", "embedding")
     val root = Dsl.tempDir("graft_t18_")
-    val (cent, lists0) = Similarity.ivfBuildQuantized(
-      Tables.spread(standing), nlist = 16, lloydIters = 2)
-    cent.write.mode("overwrite").parquet(root + "/centroids")
-    lists0.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(delta, "vec_id", 3))
+    seedStandingIndex(standing, root)
+    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      writeOrderedBatches(delta, "vec_id", 3))
     IndexStream.maintainIndex(stream, root + "/centroids", root + "/lists",
       Dsl.tempDir("graft_t18_ckpt_")).awaitTermination()
     IndexStream.deleteVectors(s, root + "/lists",
@@ -750,10 +718,8 @@ object StreamGateQueries extends QueryModule {
     AnnIndex.init(s, root, corpus.filter(col("vec_id") % 5 =!= 4),
       nlist = 16, lloydIters = 2)
     val delta = corpus.filter(col("vec_id") % 5 === 4)
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(delta, "vec_id", 3))
+    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      writeOrderedBatches(delta, "vec_id", 3))
     AnnIndex.maintain(stream, root, Dsl.tempDir("graft_t19_ckpt_"))
       .awaitTermination()
     val queries = corpus.filter(col("vec_id") % 5 === 4 && col("vec_id") < 80)
@@ -822,10 +788,7 @@ object StreamGateQueries extends QueryModule {
     import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
     val root = Dsl.tempDir("graft_t20_")
     PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
       positions = true).awaitTermination()
@@ -873,10 +836,7 @@ object StreamGateQueries extends QueryModule {
     val mutated = Tables.documents(s, dir)
       .select(col("doc_id"), expr(TextQueries.mutateSqlExpr).as("text"))
     val watch = writeOrderedBatches(mutated, "doc_id", 3)
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
     val root = Dsl.tempDir("graft_t21_")
     PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
       positions = true,
@@ -943,15 +903,13 @@ object StreamGateQueries extends QueryModule {
       .select(lit("del").as("kind"), col("doc_id"),
         lit(null).cast("string").as("text"))
     val dDel = col("doc_id") % 7 === 3
-    val dWatch = writeWaves(Seq(
+    val dWatch = stageWaves(Seq(
       addD(0),
       addD(1).unionByName(delD(dDel && col("doc_id") % 3 =!= 2)),
       addD(2).unionByName(delD(dDel && col("doc_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t22_")
-    val dstream = s.readStream
-      .schema("kind STRING, doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dWatch)
+    val dstream = fileStream(s, "kind STRING, doc_id BIGINT, text STRING",
+      dWatch)
     // the postings and ANN-lists stores are disjoint: drain both
     // CONCURRENTLY (guide §2.6) and do each leg's admin/serve steps
     // after ITS drain lands
@@ -962,10 +920,7 @@ object StreamGateQueries extends QueryModule {
     // del rows (vec_id only, NULL embedding) tombstone every 9th vector
     val emb = Tables.embeddings(s, dir)
     val standing = emb.filter(col("vec_id") % 5 =!= 4)
-    val (cent, lists0) = Similarity.ivfBuildQuantized(
-      Tables.spread(standing), nlist = 16, lloydIters = 2)
-    cent.write.mode("overwrite").parquet(root + "/centroids")
-    lists0.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
+    seedStandingIndex(standing, root)
     def addV(i: Int) = emb.filter(col("vec_id") % 5 === 4 &&
         col("vec_id") % 3 === i)
       .select(lit("add").as("kind"), col("vec_id"), col("embedding"))
@@ -976,14 +931,12 @@ object StreamGateQueries extends QueryModule {
     // split across waves by PARITY instead — both cross-batch and
     // same-batch add+del pairs occur
     val vDel = col("vec_id") % 9 === 2
-    val vWatch = writeWaves(Seq(
+    val vWatch = stageWaves(Seq(
       addV(0),
       addV(1).unionByName(delV(vDel && col("vec_id") % 2 === 0)),
       addV(2).unionByName(delV(vDel && col("vec_id") % 2 === 1))))
-    val vstream = s.readStream
-      .schema("kind STRING, vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(vWatch)
+    val vstream = fileStream(s,
+      "kind STRING, vec_id BIGINT, embedding ARRAY<FLOAT>", vWatch)
     val annDrain = IndexStream.maintainIndex(vstream,
       root + "/centroids", root + "/lists",
       Dsl.tempDir("graft_t22_ickpt_"), kindCol = Some("kind"))
@@ -1068,15 +1021,12 @@ object StreamGateQueries extends QueryModule {
       .select(lit("del").as("kind"), col("doc_id"),
         lit(null).cast("string").as("text"))
     val d = col("doc_id") % 11 === 6
-    val watch = writeWaves(Seq(
+    val watch = stageWaves(Seq(
       adds(0),
       adds(1).unionByName(dels(d && col("doc_id") % 3 =!= 2)),
       adds(2).unionByName(dels(d && col("doc_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t23_")
-    val stream = s.readStream
-      .schema("kind STRING, doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "kind STRING, doc_id LONG, text STRING", watch)
     DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
       s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
       portable = true, kindCol = Some("kind"))
@@ -1084,17 +1034,13 @@ object StreamGateQueries extends QueryModule {
     val verdicts = s.read.parquet(s"$root/verdicts")
       .select(lit("verdict").as("leg"), col("doc_id"), col("verdict"),
         col("dup_of"), col("best_agreement"), col("n_dups"), col("batch_id"))
-    val ids = BatchStore.read(s, s"$root/store").select("id")
-    val live =
-      (if (!BatchStore.hasDeletes(s, s"$root/store")) ids
-       else ids.join(BatchStore.readDeletes(s, s"$root/store"),
-         col("id") === col("del_id"), "left_anti"))
-        .select(lit("store").as("leg"), col("id").as("doc_id"),
-          lit(null).cast("string").as("verdict"),
-          lit(null).cast("long").as("dup_of"),
-          lit(null).cast("double").as("best_agreement"),
-          lit(null).cast("long").as("n_dups"),
-          lit(null).cast("long").as("batch_id"))
+    val live = BatchStore.readLive(s, s"$root/store", "id")(_.select("id"))
+      .select(lit("store").as("leg"), col("id").as("doc_id"),
+        lit(null).cast("string").as("verdict"),
+        lit(null).cast("long").as("dup_of"),
+        lit(null).cast("double").as("best_agreement"),
+        lit(null).cast("long").as("n_dups"),
+        lit(null).cast("long").as("batch_id"))
     verdicts.unionByName(live)
   }
 
@@ -1146,10 +1092,8 @@ object StreamGateQueries extends QueryModule {
     // start its drain FIRST so the whole init→drain→refresh dense leg
     // overlaps it (guide §2.6)
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val dstream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(docs, "doc_id", 3))
+    val dstream = fileStream(s, "doc_id BIGINT, text STRING",
+      writeOrderedBatches(docs, "doc_id", 3))
     val sparseDrain = PostingsStream.maintainPostings(dstream,
       root + "/postings", Dsl.tempDir("graft_t24_pckpt_"))
     val corpus = Tables.spread(plantedDrift(s, dir))
@@ -1157,10 +1101,8 @@ object StreamGateQueries extends QueryModule {
     AnnIndex.init(s, root + "/ann", corpus.filter(col("vec_id") % 5 =!= 4),
       nlist = 16, lloydIters = 2)
     val delta = corpus.filter(col("vec_id") % 5 === 4)
-    val vstream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(delta, "vec_id", 3))
+    val vstream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      writeOrderedBatches(delta, "vec_id", 3))
     AnnIndex.maintain(vstream, root + "/ann", Dsl.tempDir("graft_t24_ckpt_"))
       .awaitTermination()
     val v2 = AnnIndex.refresh(s, root + "/ann", corpus,
@@ -1240,10 +1182,7 @@ object StreamGateQueries extends QueryModule {
         slice(arr, lit(3), greatest(size(arr) - 2, lit(0)))), " ")
         .as("text"))
     val watch = writeOrderedBatches(mutated, "doc_id", 3)
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
     val root = Dsl.tempDir("graft_m8pxan_")
     PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
       positions = true,
@@ -1259,22 +1198,22 @@ object StreamGateQueries extends QueryModule {
     def leg(name: String, df: DataFrame) =
       df.select(lit(name).as("leg"), col("query_id"), col("rank"),
         col("doc_id"), col("n_windows"))
-    // ONE positional-store scan shared by all four serve legs (guide
-    // §6): read + tombstone-mask once, materialize (the count — four
-    // concurrently-scheduled union branches would otherwise race the
-    // lazy cache fill and each re-scan), serve from the cached frame.
+    // ONE positional-store scan shared by all four serve legs: read +
+    // tombstone-mask once and materialize it EAGERLY — four
+    // concurrently-scheduled union branches would otherwise each
+    // re-scan — as a local checkpoint, which (unlike a persist) leaves
+    // no cache entry behind the query
     val pos = PostingsStream.readPositional(s, root + "/index")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pos.count()
+      .localCheckpoint()
     val analyzer = PostingsStream.storeAnalyzer(s, root + "/index")
-    leg("prox_s1",
-        PostingsStream.proximityServeFrom(pos, analyzer, queries, 10, 1))
-      .unionByName(leg("prox_s2",
-        PostingsStream.proximityServeFrom(pos, analyzer, queries, 10, 2)))
-      .unionByName(leg("near_s1",
-        PostingsStream.nearServeFrom(pos, analyzer, queries, 10, 1)))
-      .unionByName(leg("near_s2",
-        PostingsStream.nearServeFrom(pos, analyzer, queries, 10, 2)))
+    leg("prox_s1", TextCorpus.proximityMatchTopK(pos, queries, 10, 1,
+        analyzer = analyzer))
+      .unionByName(leg("prox_s2", TextCorpus.proximityMatchTopK(pos,
+        queries, 10, 2, analyzer = analyzer)))
+      .unionByName(leg("near_s1", TextCorpus.nearMatchTopK(pos, queries,
+        10, 1, analyzer = analyzer)))
+      .unionByName(leg("near_s2", TextCorpus.nearMatchTopK(pos, queries,
+        10, 2, analyzer = analyzer)))
   }
 
   private val m8ProximityAnalyzedSql = {
@@ -1330,10 +1269,7 @@ object StreamGateQueries extends QueryModule {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val root = Dsl.tempDir("graft_t25_")
     val watch = writeOrderedBatches(docs, "doc_id", 2)
-    val stream = s.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
     // the ledger and sample stores are disjoint: drain both
     // CONCURRENTLY (guide §2.6), then run each store's takedown after
     // ITS drain lands
@@ -1342,10 +1278,8 @@ object StreamGateQueries extends QueryModule {
       bands = 8, rowsPerBand = 4, minAgreement = 0.5,
       portable = true, labelsDir = Some(s"$root/labels"))
     val sdocs = Tables.documents(s, dir).select("doc_id", "n_chars")
-    val sstream = s.readStream
-      .schema("doc_id LONG, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(sdocs, "doc_id", 2))
+    val sstream = fileStream(s, "doc_id LONG, n_chars LONG",
+      writeOrderedBatches(sdocs, "doc_id", 2))
     val sampleDrain = SampleStream.maintainSample(sstream, s"$root/sample",
       s"$root/sckpt", k = 50, salt = "ssam",
       idCol = "doc_id", weightCol = "n_chars")
@@ -1422,15 +1356,12 @@ object StreamGateQueries extends QueryModule {
       .select(lit("del").as("kind"), col("doc_id"),
         lit(null).cast("long").as("n_chars"))
     val d = col("doc_id") % 13 === 4
-    val watch = writeWaves(Seq(
+    val watch = stageWaves(Seq(
       adds(0),
       adds(1).unionByName(dels(d && col("doc_id") % 3 =!= 2)),
       adds(2).unionByName(dels(d && col("doc_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t26_")
-    val stream = s.readStream
-      .schema("kind STRING, doc_id LONG, n_chars LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "kind STRING, doc_id LONG, n_chars LONG", watch)
     SampleStream.maintainSample(stream, s"$root/state", s"$root/ckpt",
         k = 50, salt = "ssam", idCol = "doc_id", weightCol = "n_chars",
         kindCol = Some("kind"))
@@ -1464,7 +1395,7 @@ object StreamGateQueries extends QueryModule {
   }
 
   /** Append one more single-file wave to an existing watch dir, mtime
-    * stamped NOW — strictly after anything [[writeWaves]] /
+    * stamped NOW — strictly after anything [[stageWaves]] /
     * [[writeOrderedBatches]] stamped (their base rides an hour in the
     * past), so a second drain over the same checkpoint picks it up as
     * the next batch. */
@@ -1503,15 +1434,14 @@ object StreamGateQueries extends QueryModule {
       Measure("min_id", "min", col("event_id")),
       Measure("max_id", "max", col("event_id")))
     val w01 = ev.filter(col("event_id") % 3 =!= 2)
-    val watch = writeWaves(Seq(
+    val watch = stageWaves(Seq(
       ev.filter(col("event_id") % 3 === 0),
       ev.filter(col("event_id") % 3 === 1)))
     val root = Dsl.tempDir("graft_t27_")
     def drain(): Unit =
       ViewMaintenance.maintain(
-        s.readStream
-          .schema("event_id BIGINT, user_id BIGINT, event_type STRING")
-          .option("maxFilesPerTrigger", "1").parquet(watch),
+        fileStream(s, "event_id BIGINT, user_id BIGINT, event_type STRING",
+          watch),
         s"$root/state", s"$root/ckpt",
         keys = Seq("event_type"), measures = measures).awaitTermination()
     drain()
@@ -1585,17 +1515,14 @@ object StreamGateQueries extends QueryModule {
         lit(null).cast("long").as("user_id"),
         lit(null).cast("string").as("event_type"))
     val dMain = col("event_id") % 13 === 2 || col("event_id") < 3
-    val watch = writeWaves(Seq(
+    val watch = stageWaves(Seq(
       adds(0),
       adds(1).unionByName(dels(dMain && col("event_id") % 3 =!= 1)),
       adds(2).unionByName(dels((dMain && col("event_id") % 3 === 1) ||
         (col("event_id") % 13 === 7 && col("event_id") % 3 === 2)))))
     val root = Dsl.tempDir("graft_t29_")
-    val stream = s.readStream
-      .schema("kind STRING, event_id BIGINT, user_id BIGINT, " +
-        "event_type STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s,
+      "kind STRING, event_id BIGINT, user_id BIGINT, event_type STRING", watch)
     // compactIdsOver = 1: the third wave folds the first two ledger
     // dirs into a base generation BEFORE its own takedowns run — the
     // gate's hash certifies that ledger compaction cannot change a
@@ -1679,10 +1606,8 @@ object StreamGateQueries extends QueryModule {
     AnnIndex.init(s, root, corpus.filter(col("vec_id") % 5 =!= 4),
       nlist = 16, lloydIters = 2)
     val delta = corpus.filter(col("vec_id") % 5 === 4)
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(writeOrderedBatches(delta, "vec_id", 3))
+    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      writeOrderedBatches(delta, "vec_id", 3))
     // production corpus source: the float vectors sit in an
     // admitVectors-shaped BatchStore the trigger reads AT REFRESH TIME
     // (pointer filter + tombstone mask + pinned schema) — the pinned-
@@ -1735,10 +1660,7 @@ object StreamGateQueries extends QueryModule {
     val watch = writeOrderedBatches(
       emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id", 3)
     val root = Dsl.tempDir("graft_m8ssem_")
-    val stream = s.readStream
-      .schema("doc_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id BIGINT, embedding ARRAY<FLOAT>", watch)
     DedupStream.admitVectors(stream, s"$root/store", s"$root/verdicts",
         s"$root/ckpt", planes = planes, minCosine = 0.4, portable = true)
       .awaitTermination()
@@ -1845,15 +1767,13 @@ object StreamGateQueries extends QueryModule {
       .select(lit("del").as("kind"), col("vec_id").as("doc_id"),
         lit(null).cast("array<float>").as("embedding"))
     val d = col("vec_id") % 11 === 6
-    val watch = writeWaves(Seq(
+    val watch = stageWaves(Seq(
       adds(0),
       adds(1).unionByName(dels(d && col("vec_id") % 3 =!= 2)),
       adds(2).unionByName(dels(d && col("vec_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t30_")
-    val stream = s.readStream
-      .schema("kind STRING, doc_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s,
+      "kind STRING, doc_id BIGINT, embedding ARRAY<FLOAT>", watch)
     DedupStream.admitVectors(stream, s"$root/store", s"$root/verdicts",
         s"$root/ckpt", planes = planes, minCosine = 0.4, portable = true,
         kindCol = Some("kind"))
@@ -1862,17 +1782,13 @@ object StreamGateQueries extends QueryModule {
       .select(lit("verdict").as("leg"), col("doc_id"), col("verdict"),
         col("dup_of"), round(col("best_cosine"), 6).as("best_cosine"),
         col("n_dups"), col("batch_id"))
-    val ids = BatchStore.read(s, s"$root/store").select("id")
-    val live =
-      (if (!BatchStore.hasDeletes(s, s"$root/store")) ids
-       else ids.join(BatchStore.readDeletes(s, s"$root/store"),
-         col("id") === col("del_id"), "left_anti"))
-        .select(lit("store").as("leg"), col("id").as("doc_id"),
-          lit(null).cast("string").as("verdict"),
-          lit(null).cast("long").as("dup_of"),
-          lit(null).cast("double").as("best_cosine"),
-          lit(null).cast("long").as("n_dups"),
-          lit(null).cast("long").as("batch_id"))
+    val live = BatchStore.readLive(s, s"$root/store", "id")(_.select("id"))
+      .select(lit("store").as("leg"), col("id").as("doc_id"),
+        lit(null).cast("string").as("verdict"),
+        lit(null).cast("long").as("dup_of"),
+        lit(null).cast("double").as("best_cosine"),
+        lit(null).cast("long").as("n_dups"),
+        lit(null).cast("long").as("batch_id"))
     verdicts.unionByName(live)
   }
 
@@ -1904,10 +1820,7 @@ object StreamGateQueries extends QueryModule {
     val watch = writeOrderedBatches(
       docs.filter(col("doc_id") % 97 =!= 0), "doc_id", 3)
     val root = Dsl.tempDir("graft_m8decon_")
-    val stream = s.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch)
+    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
     graft.streaming.DecontaminateStream.screen(stream, bench,
       s"$root/admitted", s"$root/flagged", s"$root/ckpt", w = 5)
       .awaitTermination()

@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Lifecycle management for the per-batch (`graft_batch=<id>`) store
-  * layout [[DedupStream]] and [[IndexStream]] write: without compaction
-  * every micro-batch leaves one subdirectory forever, and at production
-  * batch counts the store read degrades into a small-file listing
-  * problem (the 100 TB admission pipeline's missing lifecycle piece —
-  * round-12 verdict).
+  * layout every maintained store writes, and the one [[drain]] that
+  * runs their streams: without compaction every micro-batch leaves one
+  * subdirectory forever, and at production batch counts the store read
+  * degrades into a small-file listing problem.
   *
   * Layout and protocol:
   *  - positive `graft_batch=N` dirs are live per-batch appends (the
@@ -47,7 +47,8 @@ import org.apache.spark.sql.types.StructType
   * recent batch dirs unfolded, and structured streaming only ever
   * re-delivers the last uncommitted batch — whose dir is live and still
   * the overwrite target. Run [[compact]] between drains (the
-  * AvailableNow admission/maintenance shape), not mid-stream.
+  * AvailableNow admission/maintenance shape), not mid-stream — which is
+  * where [[drain]] runs a maintainer's compaction step.
   */
 object BatchStore {
 
@@ -64,40 +65,6 @@ object BatchStore {
 
   private def fsFor(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Spread a micro-batch across the session's cores before CPU-heavy
-    * per-row work (MinHash signing, tokenization, centroid assignment).
-    *
-    * A `maxFilesPerTrigger`-paced file-stream batch arrives as ONE scan
-    * partition per file — a single-row-group parquet file is
-    * unsplittable — and every maintainer's expensive stage is map-side
-    * (the aggregation's partial step runs before its exchange), so
-    * without this the whole per-row cost of a batch serializes on one
-    * core REGARDLESS of cluster size (measured round 18: a ~1.5 s
-    * single-task scan→generate→partial-agg stage per admission batch at
-    * sf0.1 while 31 cores idled). The repartition moves batch-sized
-    * bytes — the cheapest term in the loop — and `defaultParallelism`
-    * scales with the session, not a local constant. Round-robin
-    * repartition is retry-deterministic (sortBeforeRepartition, on by
-    * default) and every downstream consumer is an aggregation/join, so
-    * results are partitioning-independent. */
-  private[streaming] def spreadBatch(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  // NOTE (round 19, measured NEGATIVE — do not re-try blindly): scoping
-  // `spark.sql.adaptive.enabled=false` (+ shuffle partitions pinned to
-  // defaultParallelism) over every foreachBatch body was hypothesized
-  // (round-18 verdict item 1) to kill the per-batch driver-gap term. It
-  // does cut Spark JOB count (m8_stream_clusters 186 → 115 jobs,
-  // gap share 50% → 35%) but the ABSOLUTE driver gap stays ~10 s — the
-  // gap is per-action planning/FS overhead, not AQE stage roundtrips —
-  // while losing AQE's runtime SMJ→BHJ conversion and partition
-  // coalescing storms 32 tiny tasks per stage: wall time regressed
-  // 40-45% on all four lifecycle gates (e.g. m8_stream_clusters
-  // 20.9 → 29.2 s, t25 13.8 → 19.4 s at sf0.1/local[32]). AQE stays ON
-  // inside foreachBatch; the driver-gap work that DID land is fewer
-  // per-batch actions (one-aggregate splitMixed, probe-free deletes,
-  // lazy localCheckpoints fused into their first action).
 
   private val PtrRe = """gen=(\d+);hwm=(-?\d+)""".r
 
@@ -275,20 +242,73 @@ object BatchStore {
       .parquet(dirs.map(_._2.toString): _*)
   }
 
-  /** Split one MIXED add/delete micro-batch for the streaming
-    * maintainers' `kindCol` mode: returns (add rows with the kind
-    * column dropped, delete rows, add count, delete count). Fails the
+  /** Rows of `rows` whose `key` is not tombstoned in store `dir` — the
+    * read-time mask every store owner applies. A store that never had
+    * a delete skips the anti-join, so its plan is the plain read. */
+  def mask(spark: SparkSession, dir: String, rows: DataFrame,
+           key: String): DataFrame =
+    if (!hasDeletes(spark, dir)) rows
+    else rows.join(readDeletes(spark, dir), col(key) === col(DeleteCol),
+      "left_anti")
+
+  /** The store's live rows, tombstone-masked on `key`: [[read]], then
+    * `shape` (the owner's filter/projection, applied BEFORE the anti-join
+    * so the join carries only the columns the reader wants), then
+    * [[mask]]. */
+  def readLive(spark: SparkSession, dir: String, key: String,
+               schema: Option[StructType] = None)(
+      shape: DataFrame => DataFrame): DataFrame =
+    mask(spark, dir, shape(read(spark, dir, schema)), key)
+
+  // ------------------------------------------------------------------
+  // The drain — the one streaming lifecycle every maintainer
+  // ([[DedupStream]], [[AnnIndex]], [[IndexStream]], [[PostingsStream]],
+  // [[SampleStream]], [[ViewMaintenance]], [[DecontaminateStream]],
+  // [[LateData]]) runs. A maintainer supplies its per-batch body, its
+  // compaction step and where its takedowns land; the drain owns the
+  // start, when compaction runs, the add/delete split and the order in
+  // which a batch's writes and tombstones land.
+  //
+  // Measured NEGATIVE (do not re-try blindly): scoping
+  // `spark.sql.adaptive.enabled=false` (+ shuffle partitions pinned to
+  // defaultParallelism) over every batch body cuts Spark JOB count
+  // (m8_stream_clusters 186 → 115 jobs, gap share 50% → 35%) but the
+  // ABSOLUTE driver gap stays ~10 s — it is per-action planning/FS
+  // overhead, not AQE stage roundtrips — while losing AQE's runtime
+  // SMJ→BHJ conversion and partition coalescing: wall time regressed
+  // 40-45% on all four lifecycle gates (sf0.1, local[32]). AQE stays ON
+  // inside the body; the driver-gap work that DID land is fewer
+  // per-batch actions (the one-aggregate split, probe-free deletes,
+  // lazy localCheckpoints fused into their first action).
+  // ------------------------------------------------------------------
+
+  /** One micro-batch as a [[drain]] body sees it: the add rows (kind
+    * column dropped), the del rows and their counts. Without a kind
+    * column every row is an add, `dels` is empty and `nAdds` is −1 —
+    * nothing counted the batch. */
+  private[streaming] case class Batch(id: Long, adds: DataFrame,
+                                      dels: DataFrame, nAdds: Long,
+                                      nDels: Long) {
+    def spark: SparkSession = adds.sparkSession
+
+    /** Tombstone the batch's del ids (column `key`) in every store in
+      * `dirs` — [[deleteNonEmpty]]: the split already counted them. */
+    def tombstoneIn(key: String, dirs: String*): Unit =
+      dirs.foreach(d => deleteNonEmpty(spark, d, dels.select(key)))
+  }
+
+  /** Split one MIXED add/delete micro-batch on `kindCol`. Fails the
     * batch on any kind value outside {add, del} — a mis-tagged row
     * silently ingested as an add or silently dropped are both wrong
     * answers, and a streaming takedown feed must be strict about which.
     *
     * ONE aggregate job serves the validation probe AND the counts the
-    * callers' downstream branches need (skip the delete publish on a
-    * delete-free batch, size-gate a broadcast) — previously each was
-    * its own per-batch action, pure driver-roundtrip overhead on
-    * micro-batch frames. */
-  private[streaming] def splitMixed(batch: DataFrame, kindCol: String)
-      : (DataFrame, DataFrame, Long, Long) = {
+    * bodies' downstream branches need (skip the delete publish on a
+    * delete-free batch, size-gate a broadcast) — each its own per-batch
+    * action would be pure driver-roundtrip overhead on micro-batch
+    * frames. */
+  private def splitMixed(batch: DataFrame, kindCol: String,
+                         batchId: Long): Batch = {
     // NULL-safe bad-kind predicate: a NULL kind fails `isin` with NULL,
     // and a plain `!` filter would class the row as neither add, del
     // NOR bad — the silent-drop outcome the check exists to prevent
@@ -302,9 +322,54 @@ object BatchStore {
       throw new IllegalArgumentException(
         s"mixed stream column '$kindCol' carries values outside " +
           s"{add, del} — refusing the batch (e.g. ${r.getString(1)})")
-    (batch.filter(col(kindCol) === "add").drop(kindCol),
-     batch.filter(col(kindCol) === "del"),
-     r.getLong(2), r.getLong(3))
+    Batch(batchId, batch.filter(col(kindCol) === "add").drop(kindCol),
+      batch.filter(col(kindCol) === "del"), r.getLong(2), r.getLong(3))
+  }
+
+  /** Start `src` as a maintained-store stream checkpointed at
+    * `checkpointDir`: AvailableNow (drain what exists, then stop — the
+    * scheduled-ingest shape) unless `continuous`.
+    *
+    * Compaction: with `compactOver = Some(threshold)`, `compact(threshold)`
+    * runs at drain START — between drains by construction (the previous
+    * drain has committed, this one has not begun). A continuous stream
+    * never reaches another drain start, so there it ALSO runs at the top
+    * of every micro-batch, before the batch writes anything: the
+    * previous batch has committed, and a replay's first-attempt dir is
+    * the newest, which compaction's `keepBatches ≥ 1` keeps out of the
+    * fold. Below threshold the step costs one directory listing.
+    *
+    * Each micro-batch is split on `kindCol` (streamed tombstones:
+    * `"add"` rows are ingested, `"del"` rows carry only an id), handed
+    * to `body`, then — when it carried dels — to `tombstone`, and last
+    * to `finish` with the body's result. A batch's tombstones therefore
+    * land AFTER its adds: a same-batch add+del leaves the row deleted
+    * (a takedown must not lose to ingest ordering), and a replay
+    * re-lands them as one more duplicate-tolerant tombstone set, so it
+    * converges. */
+  private[streaming] def drain[R](src: DataFrame, checkpointDir: String,
+                                  continuous: Boolean,
+                                  kindCol: Option[String] = None,
+                                  compactOver: Option[Int] = None,
+                                  compact: Int => Unit = _ => (),
+                                  tombstone: Batch => Unit = _ => (),
+                                  finish: (Batch, R) => Unit =
+                                    (_: Batch, _: R) => ())(
+      body: Batch => R): StreamingQuery = {
+    def compactStep(): Unit = compactOver.foreach(compact)
+    compactStep()
+    val writer = src.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (continuous) compactStep()
+        val b = kindCol.map(splitMixed(batch, _, batchId))
+          .getOrElse(Batch(batchId, batch, batch.limit(0), -1L, 0L))
+        val r = body(b)
+        if (b.nDels > 0) tombstone(b)
+        finish(b, r)
+      }
+      .option("checkpointLocation", checkpointDir)
+    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
+      .start()
   }
 
   /** Tombstone the keys in `ids` (its FIRST column, cast to long).
@@ -477,12 +542,8 @@ object BatchStore {
     val foldInput0 = read(spark, dir)
       .filter(col(BatchCol) <= newHwm) // base gens are negative: included
     // physical tombstone drop: deleted-key rows never enter the new base
-    val foldInput = dropDeletedOn match {
-      case Some(key) if hasDeletes(spark, dir) =>
-        foldInput0.join(readDeletes(spark, dir),
-          col(key) === col(DeleteCol), "left_anti")
-      case _ => foldInput0
-    }
+    val foldInput =
+      dropDeletedOn.fold(foldInput0)(mask(spark, dir, foldInput0, _))
     val folded = merge.map(m => m(foldInput)).getOrElse(foldInput)
       .drop(BatchCol)
     folded.write.mode("overwrite").parquet(s"$dir/$BatchCol=-$newGen")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.TextFns
 import graft.ops.Provenance
 
@@ -58,41 +58,36 @@ object DecontaminateStream {
       .select(explode(TextFns.word_shingles(col("text"), w)).as("shingle"))
       .distinct()
       .localCheckpoint()
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // spread the one-file batch before the shingle explode — see
-        // [[BatchStore.spreadBatch]]
-        val delta = BatchStore.spreadBatch(batch).persist()
-        // word_shingles dedups within the doc, so count(*) after the
-        // join is the DISTINCT overlap count — exactly the batch
-        // operator's statistic.
-        val hits = delta
-          .select(col("doc_id"),
-            explode(TextFns.word_shingles(col("text"), w)).as("shingle"))
-          .join(broadcast(benchShingles), Seq("shingle"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-        val judged = delta
-          .join(hits, Seq("doc_id"), "left")
-          .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-          .persist()
-        judged.filter(col("n_hits") > 0)
-          .withColumn("source", Provenance.render_token("decontam", Seq(
-            "n_hits" -> col("n_hits"),
-            "w" -> lit(w))))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"$flaggedDir/graft_batch=$batchId")
-        judged.filter(col("n_hits") === 0)
-          .drop("n_hits")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"$admittedDir/graft_batch=$batchId")
-        judged.unpersist()
-        delta.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
+    BatchStore.drain(docs, checkpointDir, continuous) { b =>
+      // spread the one-file batch before the shingle explode — see
+      // [[graft.Tables.spread]]
+      val delta = graft.Tables.spread(b.adds).persist()
+      // word_shingles dedups within the doc, so count(*) after the
+      // join is the DISTINCT overlap count — exactly the batch
+      // operator's statistic.
+      val hits = delta
+        .select(col("doc_id"),
+          explode(TextFns.word_shingles(col("text"), w)).as("shingle"))
+        .join(broadcast(benchShingles), Seq("shingle"))
+        .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+      val judged = delta
+        .join(hits, Seq("doc_id"), "left")
+        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
+        .persist()
+      judged.filter(col("n_hits") > 0)
+        .withColumn("source", Provenance.render_token("decontam", Seq(
+          "n_hits" -> col("n_hits"),
+          "w" -> lit(w))))
+        .withColumn("batch_id", lit(b.id))
+        .write.mode("overwrite")
+        .parquet(s"$flaggedDir/graft_batch=${b.id}")
+      judged.filter(col("n_hits") === 0)
+        .drop("n_hits")
+        .withColumn("batch_id", lit(b.id))
+        .write.mode("overwrite")
+        .parquet(s"$admittedDir/graft_batch=${b.id}")
+      judged.unpersist()
+      delta.unpersist()
+    }
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import graft.dedup.Dedup
 
@@ -52,30 +52,75 @@ object DedupStream {
     StructField("v", ArrayType(org.apache.spark.sql.types.FloatType)),
     StructField("graft_batch", LongType)))
 
-  /** Start the admission stream over a streaming `docs` frame with
-    * (doc_id, text) columns. AvailableNow by default: drain what exists,
-    * then stop — the scheduled-ingest shape; pass `continuous = true`
-    * for a long-running micro-batch loop.
-    *
-    * `compactWhenBatchesExceed`: the store-lifecycle policy — when set,
-    * each call runs [[BatchStore.compactIfOver]] on `sigStoreDir` at
-    * drain START (between drains by construction: the previous drain
-    * has committed, this one has not begun), folding old batch dirs
-    * into a base generation whenever the live dir count passes the
-    * threshold. A scheduled admission loop thus keeps store-read cost
-    * bounded for life without any operator running compactions by
-    * hand. With `continuous = true` the policy ALSO re-runs at the top
-    * of each micro-batch (a continuous loop has no next drain start);
-    * either way it only ever fires between batches — before the
-    * current batch has written anything — and the in-flight replay
-    * batch's dir is protected by compact's `keepBatches ≥ 1`
-    * contract. */
+  /** The signature/vector store's threshold compaction step — the
+    * tombstoned rows drop physically in the fold. */
+  private def compactStore(spark: SparkSession, storeDir: String,
+                           threshold: Int): Unit =
+    BatchStore.compactIfOver(spark, storeDir, threshold,
+      dropDeletedOn = Some("id"))
+
+  /** The prior corpus batch `b` screens against: the store's live rows
+    * minus the batch's own dir (a replayed batch must not self-collide
+    * against its first attempt's identical rows), masked by the stored
+    * tombstones ([[deleteDocs]] — a new doc that duplicates ONLY deleted
+    * content must be admitted) and, with `maskOwnDels`, by the batch's
+    * own dels (post-takedown verdicts + replay convergence — the
+    * [[admitDocuments]] kindCol contract). Existence is checked
+    * explicitly: a missing store means "first batch, empty corpus", but
+    * a genuine read failure (FS error, corrupt files) must fail the
+    * batch, NOT silently admit everything against an empty corpus. */
+  private def screenCorpus(b: BatchStore.Batch, storeDir: String,
+                           schema: StructType,
+                           maskOwnDels: Boolean): DataFrame = {
+    val spark = b.spark
+    val storePath = new Path(storeDir)
+    if (!storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(storePath))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(schema.dropRight(1)))
+    else {
+      val live = BatchStore.read(spark, storeDir, Some(schema))
+        .filter(col("graft_batch") =!= lit(b.id))
+        .select(schema.fieldNames.toSeq.dropRight(1).map(col): _*)
+      val storeDels =
+        if (BatchStore.hasDeletes(spark, storeDir))
+          Some(BatchStore.readDeletes(spark, storeDir))
+        else None
+      val ownDels =
+        if (maskOwnDels) Some(b.dels.select(col("doc_id").as("del_id")))
+        else None
+      (storeDels.toSeq ++ ownDels)
+        .reduceOption(_ unionByName _)
+        .map(d => live.join(d, col("id") === col("del_id"), "left_anti"))
+        .getOrElse(live)
+    }
+  }
+
+  /** Batch `b`'s verdicts to the audit sink and its ADMITTED rows to the
+    * store (rejected ones are dropped: their surviving twin already
+    * stands in for them), each in the batch's own dir with overwrite —
+    * a batch replayed after a crash-before-checkpoint-commit REPLACES
+    * its previous attempt instead of appending duplicate rows. */
+  private def writeVerdicts(b: BatchStore.Batch, verdicts: DataFrame,
+                            delta: DataFrame, verdictDir: String,
+                            storeDir: String): Unit = {
+    verdicts.withColumn("batch_id", lit(b.id))
+      .write.mode("overwrite")
+      .parquet(s"$verdictDir/graft_batch=${b.id}")
+    delta.join(
+        verdicts.filter(col("verdict") === "admit")
+          .select(col("doc_id").as("id")),
+        Seq("id"), "left_semi")
+      .write.mode("overwrite")
+      .parquet(s"$storeDir/graft_batch=${b.id}")
+  }
+
   /** Tombstone `docIds` (first column) out of the signature store — the
     * takedown path: subsequent admission batches stop screening against
     * the deleted docs (content that left the corpus must not veto new
     * arrivals), and the next compaction physically drops their
     * signature rows. Run between drains. */
-  def deleteDocs(spark: org.apache.spark.sql.SparkSession,
+  def deleteDocs(spark: SparkSession,
                  sigStoreDir: String, docIds: DataFrame): Unit =
     BatchStore.delete(spark, sigStoreDir, docIds)
 
@@ -115,90 +160,139 @@ object DedupStream {
                    compactWhenBatchesExceed: Option[Int] = None,
                    broadcastDeltaUpTo: Long = 500000L,
                    kindCol: Option[String] = None): StreamingQuery = {
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val spark = vecs.sparkSession
-      val p = new Path(vecStoreDir)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        BatchStore.compactIfOver(spark, vecStoreDir, threshold,
-          dropDeletedOn = Some("id"))
+    BatchStore.drain(vecs, checkpointDir, continuous, kindCol,
+        compactOver = compactWhenBatchesExceed,
+        compact = compactStore(vecs.sparkSession, vecStoreDir, _),
+        tombstone = _.tombstoneIn("doc_id", vecStoreDir)) { b =>
+      // spread the one-file batch before the screen's per-row work
+      // (hyperplane bucketing + candidate cosines) — see
+      // [[graft.Tables.spread]]
+      val delta = graft.Tables.spread(b.adds)
+        .select(col("doc_id").as("id"), col("embedding").as("v"))
+        .persist()
+      val corpus = screenCorpus(b, vecStoreDir, vecSchema, kindCol.nonEmpty)
+      // the size decision reuses splitMixed's add count where one ran
+      // (delta is 1:1 with add rows here) — a kindCol-free batch pays
+      // the one cached-frame count it always did
+      val useBroadcast = broadcastDeltaUpTo > 0 &&
+        (if (b.nAdds >= 0) b.nAdds else delta.count()) <= broadcastDeltaUpTo
+      val verdicts = Dedup.embeddingIncremental(corpus, delta,
+        planes, minCosine, portable, dim,
+        broadcastDelta = useBroadcast).persist()
+      writeVerdicts(b, verdicts, delta, verdictDir, vecStoreDir)
+      verdicts.unpersist()
+      delta.unpersist()
     }
-    runPolicy()
-    val writer = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        val spark = batch.sparkSession
-        val (addRows, dels, nAdds, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        // spread the one-file batch before the screen's per-row work
-        // (hyperplane bucketing + candidate cosines) — see
-        // [[BatchStore.spreadBatch]]
-        val delta = BatchStore.spreadBatch(addRows)
-          .select(col("doc_id").as("id"), col("embedding").as("v"))
-          .persist()
-        val storePath = new Path(vecStoreDir)
-        val storeFs =
-          storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // existence checked explicitly — a missing store is "first
-        // batch"; a genuine read failure must fail the batch, never
-        // silently admit everything (the admitDocuments contract)
-        val corpus =
-          if (storeFs.exists(storePath)) {
-            val live = BatchStore.read(spark, vecStoreDir, Some(vecSchema))
-              .filter(col("graft_batch") =!= lit(batchId))
-              .select(col("id"), col("v"))
-            // stored tombstones AND the batch's own dels pre-mask the
-            // screen (post-takedown verdicts + convergent replay — the
-            // admitDocuments contract); the kindCol-free plan is
-            // byte-identical to before the mode existed
-            val storeDels =
-              if (BatchStore.hasDeletes(spark, vecStoreDir))
-                Some(BatchStore.readDeletes(spark, vecStoreDir))
-              else None
-            val ownDels = kindCol.map(_ =>
-              dels.select(col("doc_id").as("del_id")))
-            (storeDels.toSeq ++ ownDels.toSeq)
-              .reduceOption(_ unionByName _)
-              .map(d => live.join(d, col("id") === col("del_id"),
-                "left_anti"))
-              .getOrElse(live)
-          } else
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(vecSchema.dropRight(1)))
-        // the size decision reuses splitMixed's add count where one ran
-        // (delta is 1:1 with add rows here) — a kindCol-free batch pays
-        // the one cached-frame count it always did
-        val useBroadcast = broadcastDeltaUpTo > 0 &&
-          (if (nAdds >= 0) nAdds else delta.count()) <= broadcastDeltaUpTo
-        val verdicts = Dedup.embeddingIncremental(corpus, delta,
-          planes, minCosine, portable, dim,
-          broadcastDelta = useBroadcast).persist()
-        verdicts.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"$verdictDir/graft_batch=$batchId")
-        delta.join(
-            verdicts.filter(col("verdict") === "admit")
-              .select(col("doc_id").as("id")),
-            Seq("id"), "left_semi")
-          .write.mode("overwrite")
-          .parquet(s"$vecStoreDir/graft_batch=$batchId")
-        // the batch's tombstones land LAST: the takedown covers a
-        // vector this same batch admitted, and later batches' screens
-        // read through the mask
-        if (kindCol.nonEmpty && nDels > 0)
-          BatchStore.deleteNonEmpty(spark, vecStoreDir, dels.select("doc_id"))
-        verdicts.unpersist()
-        delta.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
   }
 
-  /** `kindCol` ([[PostingsStream.maintainPostings]] has the full
+  /** Optional duplicate-group LEDGER: fold batch `batchId`'s verdict
+    * edges (rejected doc → its dup_of) into the maintained
+    * (doc_id, cluster_id) labeling at `ld`, DELTA-PUBLISHED through
+    * [[DeltaLedger]] — per-batch READS are two ledger scans with
+    * lookup-sized semi-joins (one combined standing-label lookup for
+    * batch docs + dup targets, one live-cluster membership read; scans
+    * prune through the compacted base and shuffle nothing corpus-sized),
+    * the fold runs over that affected neighborhood plus the batch, and
+    * the WRITE is just the fold's output dir. Nothing corpus-sized moves
+    * per batch, yet the latest-wins read equals reclustering the full
+    * verdict-edge graph from scratch (the incremental-fold identity —
+    * the fold-blind `m8_stream_clusters` oracle hashes it). Every doc
+    * ever seen gets a row; a rejected doc's cluster names the standing
+    * twin its content collapsed into — the queryable provenance a corpus
+    * audit needs ("where did my document go?"). Every reader excludes
+    * the batch's own dir, so a replayed batch folds against the
+    * pre-attempt state and its overwrite REPLACES the first attempt;
+    * `useBroadcast` is the screen's size decision (bounded micro-batch
+    * lookups broadcast, backlog-sized ones take the shuffled semi-join). */
+  private def foldLedger(spark: SparkSession, ld: String,
+                         verdicts: DataFrame, batchId: Long,
+                         useBroadcast: Boolean): Unit = {
+    val singles = verdicts
+      .select(col("doc_id"), col("doc_id").as("cluster_id"))
+    val edges = verdicts.filter(col("verdict") === "reject")
+      .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
+    // CLEAN-BATCH fast path — the common production case: a batch
+    // with zero reject edges touches no standing cluster, so the
+    // delta is exactly the fresh singletons. One standing-label
+    // scan (still required: a re-seen doc must NOT have its
+    // standing label clobbered by a fresh (d, d) row — latest
+    // batch wins on read) instead of two scans + the whole CC
+    // fold. The cheap emptiness probe runs on the persisted
+    // verdicts frame.
+    if (edges.isEmpty) {
+      val standingBatch = DeltaLedger.labelsFor(spark, ld,
+        verdicts.select(col("doc_id")), excludeBatch = batchId,
+        broadcastLookup = useBroadcast)
+      DeltaLedger.write(
+        singles.join(standingBatch, Seq("doc_id"), "left_anti"),
+        ld, batchId)
+    } else {
+      val endpoints = edges.select(col("id_a").as("doc_id"))
+        .unionByName(edges.select(col("id_b").as("doc_id"))).distinct()
+      // ONE combined standing-label lookup serves both consumers —
+      // batch doc_ids (re-seen docs keep their standing label) and
+      // edge endpoints (dup_of targets' clusters are the touched
+      // set): endpoints ⊆ batch docs ∪ dup_of targets, so the
+      // union covers both, and the result is lookup-sized
+      // (persisted for its two derivations below). Two ledger
+      // scans per batch total (this + membersOfLive), not four.
+      val standingAll = DeltaLedger.labelsFor(spark, ld,
+        verdicts.select(col("doc_id"))
+          .unionByName(edges.select(col("id_b").as("doc_id"))),
+        excludeBatch = batchId,
+        broadcastLookup = useBroadcast).persist()
+      val touched = standingAll
+        .join(endpoints, Seq("doc_id"), "left_semi")
+        .select(col("cluster_id"))
+      // labelsFor output is current by construction, so the
+      // touched ids are LIVE — the one-scan membership read
+      // applies (see DeltaLedger.membersOfLive's invariant note)
+      val members = DeltaLedger
+        .membersOfLive(spark, ld, touched, excludeBatch = batchId,
+          broadcastLookup = useBroadcast)
+      // a doc_id re-seen in a later batch keeps its STANDING label
+      // (left_anti drops its fresh singleton) — one label row per
+      // vertex, or the relabel join would fan out
+      val standingBatch = standingAll
+        .join(verdicts.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      val freshSingles =
+        singles.join(standingBatch, Seq("doc_id"), "left_anti")
+      // materialize ONCE: the fold reads its labels frame ~5 times
+      // (touched split, star input, universe, relabel, untouched
+      // passthrough) — un-checkpointed, every read would re-run
+      // the ledger scans above. The frame is affected-sized by
+      // construction, so the checkpoint is tiny; the general
+      // incremental() API can't do this itself because its labels
+      // input may be corpus-sized (the batch-mode gate), where
+      // re-reading parquet is cheaper than materializing.
+      // LAZY checkpoint: the first fold action materializes it —
+      // an eager one would spend a whole extra per-batch job (and
+      // its driver roundtrip) on the same work
+      val labelsIn = members.unionByName(standingBatch)
+        .unionByName(freshSingles)
+        .dropDuplicates("doc_id")
+        .localCheckpoint(false)
+      DeltaLedger.write(
+        graft.ops.ConnectedComponents.incremental(labelsIn, edges),
+        ld, batchId)
+      standingAll.unpersist()
+    }
+  }
+
+  /** Start the admission stream over a streaming `docs` frame with
+    * (doc_id, text) columns — AvailableNow by default (drain what
+    * exists, then stop: the scheduled-ingest shape); `continuous = true`
+    * for a long-running micro-batch loop ([[BatchStore.drain]]).
+    *
+    * `compactWhenBatchesExceed`: the store-lifecycle policy — when set,
+    * [[BatchStore.compactIfOver]] folds old signature-store (and ledger)
+    * batch dirs into a base generation whenever the live dir count
+    * passes the threshold, at the between-batches instants the drain
+    * picks. A scheduled admission loop thus keeps store-read cost
+    * bounded for life without any operator running compactions by
+    * hand.
+    *
+    * `kindCol` ([[PostingsStream.maintainPostings]] has the full
     * streamed-tombstone contract): `"add"` rows run the admission
     * pipeline unchanged; `"del"` rows (doc_id only, text never read)
     * tombstone the signature store — and the ledger, when maintained —
@@ -226,227 +320,48 @@ object DedupStream {
                      broadcastDeltaUpTo: Long = 500000L,
                      kindCol: Option[String] = None)
       : StreamingQuery = {
-    // A CONTINUOUS stream never reaches another "drain start", so the
-    // policy also re-runs at the top of every micro-batch there —
-    // before the batch writes anything, which is the same
-    // between-batches window the drain-start placement uses (the
-    // previous batch has committed; a replay's first-attempt dir is
-    // the newest and `keepBatches ≥ 1` keeps it out of the fold).
-    // Without this, a long-running loop with a configured bound would
-    // still accumulate one dir per batch forever. Below threshold the
-    // re-check costs one directory listing per store.
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val spark = docs.sparkSession
-      def fs(d: String) =
-        new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs(sigStoreDir).exists(new Path(sigStoreDir)))
-        BatchStore.compactIfOver(spark, sigStoreDir, threshold,
-          dropDeletedOn = Some("id"))
-      // the ledger folds latest-wins (one row per doc in the base), so
-      // its live row count tracks corpus size, not corpus × churn
-      labelsDir.foreach { ld =>
-        if (fs(ld).exists(new Path(ld)))
-          DeltaLedger.compactIfOver(spark, ld, threshold)
-      }
+    BatchStore.drain(docs, checkpointDir, continuous, kindCol,
+        compactOver = compactWhenBatchesExceed,
+        compact = { threshold =>
+          compactStore(docs.sparkSession, sigStoreDir, threshold)
+          // the ledger folds latest-wins (one row per doc in the base),
+          // so its live row count tracks corpus size, not corpus × churn
+          labelsDir.foreach(
+            DeltaLedger.compactIfOver(docs.sparkSession, _, threshold))
+        },
+        tombstone =
+          _.tombstoneIn("doc_id", sigStoreDir +: labelsDir.toSeq: _*)) { b =>
+      // spread the one-file batch before the signing pass (md5 per
+      // shingle) — see [[graft.Tables.spread]]
+      val delta = Dedup.minhashSignatures(graft.Tables.spread(b.adds),
+        col("doc_id"), col("text"),
+        numHashes = bands * rowsPerBand, portable = portable).persist()
+      val corpus = screenCorpus(b, sigStoreDir, sigSchema, kindCol.nonEmpty)
+      // Size-aware screen policy: when the batch is a genuine
+      // micro-batch (≤ broadcastDeltaUpTo rows — the count is one
+      // cached pass over the already-persisted delta), broadcast its
+      // band/sig rows so the stored corpus is only SCANNED — zero
+      // corpus-sized shuffles per batch, the term that otherwise
+      // grows with corpus lifetime. A big backlog batch (no
+      // maxFilesPerTrigger bound) exceeds the cap and takes the
+      // shuffle path — a forced broadcast must never be a memory
+      // hazard. broadcastDeltaUpTo = 0 disables broadcasting.
+      // splitMixed's add count is an upper bound on delta rows (an
+      // empty-text doc signs nothing), so reusing it can only make
+      // the decision more conservative at the cap boundary — and the
+      // broadcast is a join-strategy hint, never a value change; a
+      // kindCol-free batch pays the one cached-frame count it always
+      // did
+      val useBroadcast = broadcastDeltaUpTo > 0 &&
+        (if (b.nAdds >= 0) b.nAdds else delta.count()) <= broadcastDeltaUpTo
+      val verdicts = Dedup.minhashIncremental(corpus, delta,
+        bands, rowsPerBand, minAgreement, portable,
+        broadcastDelta = useBroadcast).persist()
+      writeVerdicts(b, verdicts, delta, verdictDir, sigStoreDir)
+      labelsDir.foreach(
+        foldLedger(b.spark, _, verdicts, b.id, useBroadcast))
+      verdicts.unpersist()
+      delta.unpersist()
     }
-    runPolicy()
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        val spark = batch.sparkSession
-        val (adds, dels, nAdds, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        // spread the one-file batch before the signing pass (md5 per
-        // shingle) — see [[BatchStore.spreadBatch]]
-        val delta = Dedup.minhashSignatures(BatchStore.spreadBatch(adds),
-          col("doc_id"), col("text"),
-          numHashes = bands * rowsPerBand, portable = portable).persist()
-        // Screen against everything PRIOR batches admitted. Existence is
-        // checked explicitly — a missing store means "first batch, empty
-        // corpus", but a genuine read failure (FS error, corrupt files)
-        // must fail the batch, NOT silently admit everything against an
-        // empty corpus. The store is partitioned graft_batch=<id> and
-        // read through [[BatchStore]] (compacted base generation + live
-        // batch dirs, pointer-filtered); a replayed batch excludes its
-        // own previous attempt so its rows can't self-collide against
-        // their identical signatures.
-        val storePath = new Path(sigStoreDir)
-        val storeFs =
-          storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val corpus =
-          if (storeFs.exists(storePath)) {
-            val live = BatchStore.read(spark, sigStoreDir, Some(sigSchema))
-              .filter(col("graft_batch") =!= lit(batchId))
-              .select(col("id"), col("sig"))
-            // tombstoned docs ([[deleteDocs]]) stop screening: a new doc
-            // that duplicates ONLY deleted content must be admitted —
-            // the content is no longer in the corpus. Under kindCol the
-            // batch's OWN dels join the mask (post-takedown verdicts +
-            // replay convergence — see the kindCol contract above); the
-            // kindCol-free plan stays byte-identical.
-            val storeDels =
-              if (BatchStore.hasDeletes(spark, sigStoreDir))
-                Some(BatchStore.readDeletes(spark, sigStoreDir))
-              else None
-            val ownDels = kindCol.map(_ =>
-              dels.select(col("doc_id").as("del_id")))
-            (storeDels.toSeq ++ ownDels.toSeq)
-              .reduceOption(_ unionByName _)
-              .map(d => live.join(d, col("id") === col("del_id"),
-                "left_anti"))
-              .getOrElse(live)
-          } else
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(sigSchema.dropRight(1)))
-        // Size-aware screen policy: when the batch is a genuine
-        // micro-batch (≤ broadcastDeltaUpTo rows — the count is one
-        // cached pass over the already-persisted delta), broadcast its
-        // band/sig rows so the stored corpus is only SCANNED — zero
-        // corpus-sized shuffles per batch, the term that otherwise
-        // grows with corpus lifetime. A big backlog batch (no
-        // maxFilesPerTrigger bound) exceeds the cap and takes the
-        // shuffle path — a forced broadcast must never be a memory
-        // hazard. broadcastDeltaUpTo = 0 disables broadcasting.
-        // splitMixed's add count is an upper bound on delta rows (an
-        // empty-text doc signs nothing), so reusing it can only make
-        // the decision more conservative at the cap boundary — and the
-        // broadcast is a join-strategy hint, never a value change; a
-        // kindCol-free batch pays the one cached-frame count it always
-        // did
-        val useBroadcast = broadcastDeltaUpTo > 0 &&
-          (if (nAdds >= 0) nAdds else delta.count()) <= broadcastDeltaUpTo
-        val verdicts = Dedup.minhashIncremental(corpus, delta,
-          bands, rowsPerBand, minAgreement, portable,
-          broadcastDelta = useBroadcast).persist()
-        // Per-batch subdirs with overwrite: a batch replayed after a
-        // crash-before-checkpoint-commit REPLACES its previous attempt
-        // instead of appending duplicate verdict and signature rows.
-        verdicts.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"$verdictDir/graft_batch=$batchId")
-        // Admitted signatures extend the store; rejected ones are dropped
-        // (their surviving twin already stands in for them).
-        delta.join(
-            verdicts.filter(col("verdict") === "admit")
-              .select(col("doc_id").as("id")),
-            Seq("id"), "left_semi")
-          .write.mode("overwrite")
-          .parquet(s"$sigStoreDir/graft_batch=$batchId")
-        // Optional duplicate-group LEDGER: fold this batch's verdict
-        // edges (rejected doc → its dup_of) into the maintained
-        // (doc_id, cluster_id) labeling, DELTA-PUBLISHED through
-        // [[DeltaLedger]] — per-batch READS are two ledger scans with
-        // lookup-sized semi-joins (one combined standing-label lookup
-        // for batch docs + dup targets, one live-cluster membership
-        // read; scans prune through the compacted base and shuffle
-        // nothing corpus-sized), the fold runs over that affected
-        // neighborhood plus the batch, and the WRITE is just the
-        // fold's output dir. Nothing corpus-sized moves per batch, yet
-        // the latest-wins read equals reclustering the full
-        // verdict-edge graph from scratch (the incremental-fold
-        // identity — the fold-blind `m8_stream_clusters` oracle hashes
-        // it). Every doc ever seen gets a row; a rejected doc's
-        // cluster names the standing twin its content collapsed into —
-        // the queryable provenance a corpus audit needs ("where did my
-        // document go?").
-        labelsDir.foreach { ld =>
-          val singles = verdicts
-            .select(col("doc_id"), col("doc_id").as("cluster_id"))
-          val edges = verdicts.filter(col("verdict") === "reject")
-            .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
-          // CLEAN-BATCH fast path — the common production case: a batch
-          // with zero reject edges touches no standing cluster, so the
-          // delta is exactly the fresh singletons. One standing-label
-          // scan (still required: a re-seen doc must NOT have its
-          // standing label clobbered by a fresh (d, d) row — latest
-          // batch wins on read) instead of two scans + the whole CC
-          // fold. The cheap emptiness probe runs on the persisted
-          // verdicts frame.
-          if (edges.isEmpty) {
-            val standingBatch = DeltaLedger.labelsFor(spark, ld,
-              verdicts.select(col("doc_id")), excludeBatch = batchId,
-              broadcastLookup = useBroadcast)
-            DeltaLedger.write(
-              singles.join(standingBatch, Seq("doc_id"), "left_anti"),
-              ld, batchId)
-          } else {
-          val endpoints = edges.select(col("id_a").as("doc_id"))
-            .unionByName(edges.select(col("id_b").as("doc_id"))).distinct()
-          // every reader excludes this batch's own dir, so a replayed
-          // batch folds against the pre-attempt state and its
-          // overwrite REPLACES the first attempt
-          // the same size decision as the screen: bounded micro-batch
-          // lookups broadcast (ledger only scanned); backlog-sized
-          // lookups take the shuffled semi-join
-          //
-          // ONE combined standing-label lookup serves both consumers —
-          // batch doc_ids (re-seen docs keep their standing label) and
-          // edge endpoints (dup_of targets' clusters are the touched
-          // set): endpoints ⊆ batch docs ∪ dup_of targets, so the
-          // union covers both, and the result is lookup-sized
-          // (persisted for its two derivations below). Two ledger
-          // scans per batch total (this + membersOfLive), not four.
-          val standingAll = DeltaLedger.labelsFor(spark, ld,
-            verdicts.select(col("doc_id"))
-              .unionByName(edges.select(col("id_b").as("doc_id"))),
-            excludeBatch = batchId,
-            broadcastLookup = useBroadcast).persist()
-          val touched = standingAll
-            .join(endpoints, Seq("doc_id"), "left_semi")
-            .select(col("cluster_id"))
-          // labelsFor output is current by construction, so the
-          // touched ids are LIVE — the one-scan membership read
-          // applies (see DeltaLedger.membersOfLive's invariant note)
-          val members = DeltaLedger
-            .membersOfLive(spark, ld, touched, excludeBatch = batchId,
-              broadcastLookup = useBroadcast)
-          // a doc_id re-seen in a later batch keeps its STANDING label
-          // (left_anti drops its fresh singleton) — one label row per
-          // vertex, or the relabel join would fan out
-          val standingBatch = standingAll
-            .join(verdicts.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          val freshSingles =
-            singles.join(standingBatch, Seq("doc_id"), "left_anti")
-          // materialize ONCE: the fold reads its labels frame ~5 times
-          // (touched split, star input, universe, relabel, untouched
-          // passthrough) — un-checkpointed, every read would re-run
-          // the ledger scans above. The frame is affected-sized by
-          // construction, so the checkpoint is tiny; the general
-          // incremental() API can't do this itself because its labels
-          // input may be corpus-sized (the batch-mode gate), where
-          // re-reading parquet is cheaper than materializing.
-          // LAZY checkpoint: the first fold action materializes it —
-          // an eager one would spend a whole extra per-batch job (and
-          // its driver roundtrip) on the same work
-          val labelsIn = members.unionByName(standingBatch)
-            .unionByName(freshSingles)
-            .dropDuplicates("doc_id")
-            .localCheckpoint(false)
-          DeltaLedger.write(
-            graft.ops.ConnectedComponents.incremental(labelsIn, edges),
-            ld, batchId)
-          standingAll.unpersist()
-          }
-        }
-        // the batch's streamed tombstones land LAST (after the adds'
-        // signatures and the ledger fold): the takedown covers even a
-        // doc this same batch admitted, the next batch's screen and
-        // ledger reads exclude it (both read through the tombstone
-        // mask), and the next compaction drops its rows physically
-        if (kindCol.nonEmpty && nDels > 0) {
-          BatchStore.deleteNonEmpty(spark, sigStoreDir, dels.select("doc_id"))
-          labelsDir.foreach(ld =>
-            DeltaLedger.deleteNonEmpty(spark, ld, dels.select("doc_id")))
-        }
-        verdicts.unpersist()
-        delta.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
   }
 }

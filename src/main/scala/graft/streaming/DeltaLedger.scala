@@ -41,31 +41,23 @@ object DeltaLedger {
     StructField("cluster_id", LongType),
     StructField(BatchStore.BatchCol, LongType)))
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** All live rows (possibly several generations of a doc's label),
-    * batch column included. Empty frame when the store doesn't exist. */
+    * batch column included. Empty frame when the store doesn't exist.
+    * Tombstoned docs ([[delete]]) drop out of every ledger read: a
+    * taken-down doc has no label row. cluster_id VALUES are opaque
+    * labels (the min-id representative at fold time), so other members
+    * keeping a deleted doc's id as their label is fine — the label
+    * names a cluster, not a living row. */
   private def liveRows(spark: SparkSession, dir: String,
-                       excludeBatch: Long): DataFrame =
-    if (!exists(spark, dir))
+                       excludeBatch: Long): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val rows = BatchStore.read(spark, dir, Some(schema))
-        .filter(col(BatchStore.BatchCol) =!= lit(excludeBatch))
-      // tombstoned docs ([[delete]]) drop out of every ledger read: a
-      // taken-down doc has no label row. cluster_id VALUES are opaque
-      // labels (the min-id representative at fold time), so other
-      // members keeping a deleted doc's id as their label is fine —
-      // the label names a cluster, not a living row.
-      if (!BatchStore.hasDeletes(spark, dir)) rows
-      else rows.join(BatchStore.readDeletes(spark, dir),
-        col("doc_id") === col("del_id"), "left_anti")
-        .select(rows.columns.toSeq.map(col): _*)
-    }
+    else
+      BatchStore.readLive(spark, dir, "doc_id", Some(schema))(
+        _.filter(col(BatchStore.BatchCol) =!= lit(excludeBatch)))
+  }
 
   /** Latest-wins reduce: one (doc_id, cluster_id) row per doc. Base
     * generations are negative batch ids, so live batches always beat
@@ -156,13 +148,6 @@ object DeltaLedger {
     * the next [[compact]] physically removes them. */
   def delete(spark: SparkSession, dir: String, docIds: DataFrame): Unit =
     BatchStore.delete(spark, dir, docIds)
-
-  /** [[delete]] minus the emptiness probe ([[BatchStore.deleteNonEmpty]])
-    * — for the per-batch streamed-tombstone path, whose split already
-    * counted the dels. */
-  private[streaming] def deleteNonEmpty(spark: SparkSession, dir: String,
-                                        docIds: DataFrame): Unit =
-    BatchStore.deleteNonEmpty(spark, dir, docIds)
 
   /** Latest-wins fold of old batch dirs into a base generation of one
     * row per doc (the [[BatchStore.compact]] merge hook); tombstoned

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.VectorFns
 import graft.similarity.Similarity
 
@@ -49,13 +49,9 @@ object IndexStream {
     * every instant of a compaction and never scores a deleted
     * vector. */
   def readLists(spark: org.apache.spark.sql.SparkSession,
-                listsDir: String): DataFrame = {
-    val rows = BatchStore.read(spark, listsDir)
-      .select("cand_id", "cent_id", "code")
-    if (!BatchStore.hasDeletes(spark, listsDir)) rows
-    else rows.join(BatchStore.readDeletes(spark, listsDir),
-      col("cand_id") === col("del_id"), "left_anti")
-  }
+                listsDir: String): DataFrame =
+    BatchStore.readLive(spark, listsDir, "cand_id")(
+      _.select("cand_id", "cent_id", "code"))
 
   /** Fold old list batch dirs into a base generation, physically
     * dropping tombstoned vectors' rows (run between drains — see
@@ -66,30 +62,40 @@ object IndexStream {
     BatchStore.compact(spark, listsDir, keepBatches, None,
       dropDeletedOn = Some("cand_id"))
 
-  /** One batch of (vec_id, embedding) rows encoded against the FIXED
-    * stored quantizer: nearest-centroid assignment + int8 quantization
-    * — `(cand_id, cent_id, code)` list rows. Fail-closed on a missing
-    * centroid store (encoding against nothing must never fabricate an
-    * empty assignment). Shared by [[maintainIndex]] and
-    * [[AnnIndex.maintain]]. */
-  private[streaming] def encodeAgainst(batch: DataFrame,
-                                       centroidDir: String): DataFrame = {
+  /** One batch of (vec_id, embedding) rows assigned by `assign` against
+    * the FIXED stored quantizer — `(cand_id, cv, cent_id, …)` rows.
+    * Fail-closed on a missing centroid store (encoding against nothing
+    * must never fabricate an empty assignment). */
+  private[streaming] def assignAgainst(batch: DataFrame, centroidDir: String,
+                                       assign: (DataFrame, DataFrame) =>
+                                         DataFrame = Similarity.ivfAssign)
+      : DataFrame = {
     val spark = batch.sparkSession
     val centPath = new Path(centroidDir)
     val fs = centPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(centPath),
       s"centroid store missing at $centroidDir — refusing to encode " +
         "against an empty quantizer")
-    val cent = spark.read.parquet(centroidDir)
     // spread the one-file batch before the per-row assignment cosines —
-    // see [[BatchStore.spreadBatch]]
-    val c = BatchStore.spreadBatch(batch).select(col("vec_id").as("cand_id"),
-      col("embedding").as("cv"))
-    Similarity.ivfAssign(c, cent)
+    // see [[graft.Tables.spread]]
+    assign(graft.Tables.spread(batch).select(col("vec_id").as("cand_id"),
+      col("embedding").as("cv")), spark.read.parquet(centroidDir))
+  }
+
+  /** Assigned rows int8-quantized into `(cand_id, cent_id, code)` list
+    * rows. */
+  private[streaming] def quantized(assigned: DataFrame): DataFrame =
+    assigned
       .withColumn("scale", VectorFns.quantize_scale(col("cv")))
       .withColumn("code", VectorFns.quantize_i8(col("cv"), col("scale")))
       .select("cand_id", "cent_id", "code")
-  }
+
+  /** [[assignAgainst]] + [[quantized]]: nearest-centroid assignment and
+    * int8 quantization against the fixed quantizer. Shared by
+    * [[maintainIndex]] and [[AnnIndex.maintain]]. */
+  private[streaming] def encodeAgainst(batch: DataFrame,
+                                       centroidDir: String): DataFrame =
+    quantized(assignAgainst(batch, centroidDir))
 
   /** Start the maintenance stream over a streaming `vecs` frame with
     * (vec_id, embedding) columns. AvailableNow by default (drain-then-
@@ -113,42 +119,13 @@ object IndexStream {
                     compactWhenBatchesExceed: Option[Int] = None,
                     kindCol: Option[String] = None)
       : StreamingQuery = {
-    // Store-lifecycle policy, same shape as [[DedupStream]]: at drain
-    // START (between drains by construction), fold old list batch dirs
-    // into a base generation once the live dir count passes the
-    // threshold — a refresh loop that has run thousands of times opens
-    // as cheaply as a fresh build. A CONTINUOUS stream has no "next
-    // drain start", so there the policy re-runs at the top of every
-    // micro-batch, BEFORE the batch writes anything: the previous batch
-    // has committed (or this is a replay, whose first-attempt dir is
-    // the newest and `keepBatches ≥ 1` keeps it out of the fold), so
-    // the between-batches safety argument is the same one the
-    // between-drains placement relies on. Below threshold the re-check
-    // costs one directory listing.
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val spark = vecs.sparkSession
-      val p = new Path(listsDir)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        BatchStore.compactIfOver(spark, listsDir, threshold,
-          dropDeletedOn = Some("cand_id"))
+    BatchStore.drain(vecs, checkpointDir, continuous, kindCol,
+        compactOver = compactWhenBatchesExceed,
+        compact = BatchStore.compactIfOver(vecs.sparkSession, listsDir, _,
+          dropDeletedOn = Some("cand_id")),
+        tombstone = _.tombstoneIn("vec_id", listsDir)) { b =>
+      encodeAgainst(b.adds, centroidDir).write.mode("overwrite")
+        .parquet(s"$listsDir/graft_batch=${b.id}")
     }
-    runPolicy()
-    val writer = vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        val (adds, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        encodeAgainst(adds, centroidDir).write.mode("overwrite")
-          .parquet(s"$listsDir/graft_batch=$batchId")
-        if (kindCol.nonEmpty && nDels > 0)
-          BatchStore.deleteNonEmpty(batch.sparkSession, listsDir,
-            dels.select("vec_id"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
   }
 }

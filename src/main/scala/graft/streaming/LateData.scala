@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Late-data accounting — the dead-letter channel Spark's watermarking
   * does NOT give you: a windowed aggregation silently discards rows
@@ -84,50 +84,45 @@ object LateData {
     require(!rows.columns.contains("graft_batch"),
       "input must not carry a graft_batch column (reserved for the " +
         "per-batch sink partitioning)")
-    val writer = rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val (mark, fromPointer) =
-          readMark(spark, stateDir, Seq(mainDir, lateDir), tsCol, batchId)
-        val b = batch.persist()
-        val tsSec = unix_timestamp(col(tsCol).cast("timestamp"))
-        val isLate =
-          if (mark == Long.MinValue) tsSec.isNull
-          else tsSec.isNull || tsSec < lit(mark - delaySeconds)
-        val lateBy =
-          if (mark == Long.MinValue) lit(null).cast("long")
-          else when(tsSec.isNull, lit(null).cast("long"))
-            .otherwise(lit(mark - delaySeconds) - tsSec)
-        b.filter(!isLate)
-          .write.mode("overwrite").parquet(s"$mainDir/graft_batch=$batchId")
-        val late = b.filter(isLate).withColumn("late_by_sec", lateBy)
-        val lateSub = s"$lateDir/graft_batch=$batchId"
-        // ONE aggregate serves both the late-emptiness decision and the
-        // high-water mark — previously two separate per-batch actions
-        val probe = b.agg(max(tsSec), count(when(isLate, lit(1)))).head()
-        if (probe.getLong(1) > 0)
-          late.write.mode("overwrite").parquet(lateSub)
-        else {
-          // A replay can reclassify rows late→main (mark re-derived lower
-          // after a lost pointer). The main subdir above was overwritten
-          // unconditionally; the late subdir must not keep the earlier
-          // attempt's rows or they'd exist in BOTH sinks — delete it.
-          val p = new Path(lateSub)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        val advanced =
-          if (probe.isNullAt(0)) mark else math.max(mark, probe.getLong(0))
-        // publish when the batch advanced the mark OR when the mark was
-        // recovered the expensive way — otherwise an all-null run after
-        // a lost pointer re-scans both sinks on every batch forever
-        if (advanced != Long.MinValue && (!probe.isNullAt(0) || !fromPointer))
-          StatePointer.publish(spark, stateDir, "MAX_TS", advanced.toString)
-        b.unpersist()
-        ()
+    BatchStore.drain(rows, checkpointDir, continuous) { batch =>
+      val (spark, batchId) = (batch.spark, batch.id)
+      val (mark, fromPointer) =
+        readMark(spark, stateDir, Seq(mainDir, lateDir), tsCol, batchId)
+      val b = batch.adds.persist()
+      val tsSec = unix_timestamp(col(tsCol).cast("timestamp"))
+      val isLate =
+        if (mark == Long.MinValue) tsSec.isNull
+        else tsSec.isNull || tsSec < lit(mark - delaySeconds)
+      val lateBy =
+        if (mark == Long.MinValue) lit(null).cast("long")
+        else when(tsSec.isNull, lit(null).cast("long"))
+          .otherwise(lit(mark - delaySeconds) - tsSec)
+      b.filter(!isLate)
+        .write.mode("overwrite").parquet(s"$mainDir/graft_batch=$batchId")
+      val late = b.filter(isLate).withColumn("late_by_sec", lateBy)
+      val lateSub = s"$lateDir/graft_batch=$batchId"
+      // ONE aggregate serves both the late-emptiness decision and the
+      // high-water mark — previously two separate per-batch actions
+      val probe = b.agg(max(tsSec), count(when(isLate, lit(1)))).head()
+      if (probe.getLong(1) > 0)
+        late.write.mode("overwrite").parquet(lateSub)
+      else {
+        // A replay can reclassify rows late→main (mark re-derived lower
+        // after a lost pointer). The main subdir above was overwritten
+        // unconditionally; the late subdir must not keep the earlier
+        // attempt's rows or they'd exist in BOTH sinks — delete it.
+        val p = new Path(lateSub)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(p)) fs.delete(p, true)
       }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
+      val advanced =
+        if (probe.isNullAt(0)) mark else math.max(mark, probe.getLong(0))
+      // publish when the batch advanced the mark OR when the mark was
+      // recovered the expensive way — otherwise an all-null run after
+      // a lost pointer re-scans both sinks on every batch forever
+      if (advanced != Long.MinValue && (!probe.isNullAt(0) || !fromPointer))
+        StatePointer.publish(spark, stateDir, "MAX_TS", advanced.toString)
+      b.unpersist()
+    }
   }
 }

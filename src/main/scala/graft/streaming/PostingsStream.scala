@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.TextCorpus
 
 /** Incremental maintenance of a BM25 postings index — the SPARSE
@@ -224,45 +224,26 @@ object PostingsStream {
         }
       }
     }
-    def runPolicy(): Unit = compactWhenBatchesExceed.foreach { threshold =>
-      val p = new Path(storeDir)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        BatchStore.compactIfOver(spark, storeDir, threshold,
-          merge = Some(mergeDfPartials), dropDeletedOn = Some("doc_id"))
+    BatchStore.drain(docs, checkpointDir, continuous, kindCol,
+        compactOver = compactWhenBatchesExceed,
+        compact = BatchStore.compactIfOver(spark, storeDir, _,
+          merge = Some(mergeDfPartials), dropDeletedOn = Some("doc_id")),
+        tombstone = _.tombstoneIn("doc_id", storeDir)) { b =>
+      // marker BEFORE the rows it describes: a crash between the two
+      // leaves a marker-only empty store (healable — see above), never
+      // positional data the marker check would refuse to resume
+      ensureMarker()
+      // NOT spread ([[graft.Tables.spread]]): measured — tokenize is
+      // regex-split cheap, and the positional `tp` rows reach this write
+      // without any intervening exchange, so a spread batch writes one
+      // file per core and every downstream serve pays the file-count +
+      // lost per-file (kind, word) clustering (t15/t17/t20/t22 regressed
+      // 10-40% under spread)
+      batchPartial(b.adds.select("doc_id", "text"), positions, analyzer)
+        .sortWithinPartitions("kind", "word")
+        .write.mode("overwrite")
+        .parquet(s"$storeDir/${BatchStore.BatchCol}=${b.id}")
     }
-    runPolicy()
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (continuous) runPolicy()
-        // marker BEFORE the rows it describes: a crash between the two
-        // leaves a marker-only empty store (healable — see above), never
-        // positional data the marker check would refuse to resume
-        ensureMarker()
-        val (adds, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        // NOT spread ([[BatchStore.spreadBatch]]): measured round 18 —
-        // tokenize is regex-split cheap, and the positional `tp` rows
-        // reach this write without any intervening exchange, so a
-        // spread batch writes one file per core and every downstream
-        // serve pays the file-count + lost per-file (kind, word)
-        // clustering (t15/t17/t20/t22 regressed 10-40% under spread)
-        batchPartial(adds.select("doc_id", "text"), positions, analyzer)
-          .sortWithinPartitions("kind", "word")
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/${BatchStore.BatchCol}=$batchId")
-        // the batch's tombstones publish AFTER its adds: a same-batch
-        // add+del leaves the doc deleted, and a replayed batch re-lands
-        // its delete as one more duplicate-tolerant dir (set semantics)
-        if (kindCol.nonEmpty && nDels > 0)
-          BatchStore.deleteNonEmpty(batch.sparkSession, storeDir,
-            dels.select("doc_id"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
   }
 
   /** Tombstone `docIds` (first column) out of the index — the takedown
@@ -363,38 +344,24 @@ object PostingsStream {
     * nothing. */
   def phraseServe(spark: SparkSession, storeDir: String, queries: DataFrame,
                   k: Int,
-                  broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame = {
-    require(hasPositions(spark, storeDir),
-      s"$storeDir carries no positional postings (maintainPostings " +
-        "positions = true) — refusing to phrase-match against nothing")
-    val pos0 = BatchStore.read(spark, storeDir)
-      .filter(col("kind") === "tp")
-      .select(col("doc_id"), col("n").as("pos"), col("word"))
-    val pos =
-      if (!BatchStore.hasDeletes(spark, storeDir)) pos0
-      else pos0.join(BatchStore.readDeletes(spark, storeDir),
-        col("doc_id") === col("del_id"), "left_anti")
-    TextCorpus.phraseMatchTopK(pos, queries, k, broadcastQueriesUpTo,
-      storeAnalyzer(spark, storeDir))
-  }
+                  broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame =
+    TextCorpus.phraseMatchTopK(readPositional(spark, storeDir), queries, k,
+      broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
 
   /** The store's live positional rows `(doc_id, pos, word)` — pointer-
     * filtered and tombstone-masked, fail-closed on a position-less
     * store. A caller running SEVERAL positional serves against one
-    * store state should read this ONCE, persist it, and hand the frame
-    * to the frame-based serve overloads below: each serve otherwise
-    * re-scans the whole store (guide §6 — read once, share the frame;
-    * measured round 18 as 4 store scans under one query). */
+    * store state should read this ONCE, materialize it, and hand the
+    * frame with [[storeAnalyzer]] to the [[TextCorpus]] matchers
+    * directly: each serve otherwise re-scans the whole store (measured
+    * as 4 store scans under one query). */
   def readPositional(spark: SparkSession, storeDir: String): DataFrame = {
     require(hasPositions(spark, storeDir),
       s"$storeDir carries no positional postings (maintainPostings " +
         "positions = true) — refusing to position-match against nothing")
-    val pos0 = BatchStore.read(spark, storeDir)
-      .filter(col("kind") === "tp")
-      .select(col("doc_id"), col("n").as("pos"), col("word"))
-    if (!BatchStore.hasDeletes(spark, storeDir)) pos0
-    else pos0.join(BatchStore.readDeletes(spark, storeDir),
-      col("doc_id") === col("del_id"), "left_anti")
+    BatchStore.readLive(spark, storeDir, "doc_id")(
+      _.filter(col("kind") === "tp")
+        .select(col("doc_id"), col("n").as("pos"), col("word")))
   }
 
   /** Proximity (NEAR/k) top-k off a POSITIONAL store —
@@ -406,20 +373,8 @@ object PostingsStream {
                      queries: DataFrame, k: Int, slop: Int,
                      broadcastQueriesUpTo: Long = Long.MaxValue)
       : DataFrame =
-    proximityServeFrom(readPositional(spark, storeDir),
-      storeAnalyzer(spark, storeDir), queries, k, slop,
-      broadcastQueriesUpTo)
-
-  /** [[proximityServe]] over an already-read (possibly persisted)
-    * positional frame + its store's analyzer — the multi-serve shape:
-    * one store scan shared by every leg. */
-  def proximityServeFrom(pos: DataFrame,
-                         analyzer: Option[TextCorpus.Analyzer],
-                         queries: DataFrame, k: Int, slop: Int,
-                         broadcastQueriesUpTo: Long = Long.MaxValue)
-      : DataFrame =
-    TextCorpus.proximityMatchTopK(pos, queries, k, slop,
-      broadcastQueriesUpTo, analyzer)
+    TextCorpus.proximityMatchTopK(readPositional(spark, storeDir), queries,
+      k, slop, broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
 
   /** Unordered NEAR/w top-k off a POSITIONAL store —
     * [[TextCorpus.nearMatchTopK]] with the same pointer-filter /
@@ -428,15 +383,6 @@ object PostingsStream {
   def nearServe(spark: SparkSession, storeDir: String,
                 queries: DataFrame, k: Int, slop: Int,
                 broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame =
-    nearServeFrom(readPositional(spark, storeDir),
-      storeAnalyzer(spark, storeDir), queries, k, slop,
-      broadcastQueriesUpTo)
-
-  /** [[nearServe]] over an already-read positional frame + analyzer —
-    * see [[proximityServeFrom]]. */
-  def nearServeFrom(pos: DataFrame, analyzer: Option[TextCorpus.Analyzer],
-                    queries: DataFrame, k: Int, slop: Int,
-                    broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame =
-    TextCorpus.nearMatchTopK(pos, queries, k, slop,
-      broadcastQueriesUpTo, analyzer)
+    TextCorpus.nearMatchTopK(readPositional(spark, storeDir), queries, k,
+      slop, broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
 }

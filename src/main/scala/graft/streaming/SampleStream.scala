@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Sampling
 
 /** Streaming maintenance of a weighted sample WITHOUT replacement — the
@@ -87,41 +87,30 @@ object SampleStream {
                      continuous: Boolean = false,
                      kindCol: Option[String] = None): StreamingQuery = {
     require(k > 0, s"k: $k")
-    val writer = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val (adds, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        // The shared snapshot-fold protocol carries the replay guard and
-        // the staged publish ([[SnapshotStore]]).
-        SnapshotStore.fold(spark, stateDir, batchId) { prior =>
-          // weight stays double — the exact cast Sampling.weightedSample
-          // applies, so the maintained-sample identity holds for
-          // fractional weights too (a long cast would floor a valid
-          // weight in (0,1) to 0 and trip the non-positive guard);
-          // priorities are re-derived each fold, so a double in the
-          // state schema is just as mergeable
-          val delta = adds.select(
-            col(idCol).cast("long").as("sample_id"),
-            col(weightCol).cast("double").as("weight"))
-          val pool = prior
-            .map(_.unionByName(delta))
-            .getOrElse(delta)
-            .dropDuplicates("sample_id")
-          Sampling.weightedSample(pool, col("sample_id"), col("weight"),
-            k, salt)
-        }
-        // the batch's tombstones land AFTER its fold (delete wins over
-        // a same-batch add); the split's del count keeps delete-free
-        // batches from publishing a pointless admin snapshot each round
-        if (kindCol.nonEmpty && nDels > 0)
-          deleteFromSample(spark, stateDir, dels.select(idCol))
-        ()
+    // the batch's tombstones land AFTER its fold (delete wins over a
+    // same-batch add); delete-free batches publish no admin snapshot
+    BatchStore.drain(docs, checkpointDir, continuous, kindCol,
+        tombstone = b =>
+          deleteFromSample(b.spark, stateDir, b.dels.select(idCol))) { b =>
+      // The shared snapshot-fold protocol carries the replay guard and
+      // the staged publish ([[SnapshotStore]]).
+      SnapshotStore.fold(b.spark, stateDir, b.id) { prior =>
+        // weight stays double — the exact cast Sampling.weightedSample
+        // applies, so the maintained-sample identity holds for
+        // fractional weights too (a long cast would floor a valid
+        // weight in (0,1) to 0 and trip the non-positive guard);
+        // priorities are re-derived each fold, so a double in the
+        // state schema is just as mergeable
+        val delta = b.adds.select(
+          col(idCol).cast("long").as("sample_id"),
+          col(weightCol).cast("double").as("weight"))
+        val pool = prior
+          .map(_.unionByName(delta))
+          .getOrElse(delta)
+          .dropDuplicates("sample_id")
+        Sampling.weightedSample(pool, col("sample_id"), col("weight"),
+          k, salt)
       }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
+    }
   }
 }

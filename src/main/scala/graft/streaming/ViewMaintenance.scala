@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions.col
 import graft.ops.IncrementalAgg
 import graft.ops.IncrementalAgg.Measure
@@ -116,14 +116,12 @@ object ViewMaintenance {
     * pins it). Safe between drains, or per batch from [[maintain]]'s
     * `compactIdsOver` policy (the foreachBatch is the single admin). */
   def compactIdLedger(spark: SparkSession, stateDir: String,
-                      threshold: Int): Option[BatchStore.Compaction] = {
-    val space = s"$stateDir/_ids"
-    if (!fs(spark, stateDir).exists(new Path(space))) None
-    else BatchStore.compactIfOver(spark, space, threshold, keepBatches = 1,
+                      threshold: Int): Option[BatchStore.Compaction] =
+    BatchStore.compactIfOver(spark, s"$stateDir/_ids", threshold,
+      keepBatches = 1,
       // drop the batch column BEFORE dedup — the same id re-delivered
       // into two dirs differs on graft_batch and would survive twice
       merge = Some(_.drop(BatchStore.BatchCol).dropDuplicates()))
-  }
 
   /** The affected-group splice shared by every retraction path: the
     * `affected` keys' partials recompute as
@@ -219,60 +217,47 @@ object ViewMaintenance {
     require(kindCol.isEmpty || corpus.nonEmpty,
       "streamed tombstones need the source corpus — retraction " +
         "re-aggregates affected groups from surviving source rows")
-    val writer = rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val (adds0, dels, _, nDels) = kindCol match {
-          case Some(kc) => BatchStore.splitMixed(batch, kc)
-          case None => (batch, batch.limit(0), -1L, 0L)
-        }
-        // standing-tombstone mask: an add of an already-taken-down id
-        // must not resurrect it (delete wins across any arrival order)
-        val adds =
-          if (kindCol.isEmpty || !BatchStore.hasDeletes(spark, stateDir))
-            adds0
-          else adds0.join(BatchStore.readDeletes(spark, stateDir),
-            col(idCol) === col("del_id"), "left_anti")
-        // ledger housekeeping first (single-admin: this foreachBatch is
-        // the only `_ids` writer, so "between drains" holds per batch);
-        // a no-op below the threshold, one listing
-        if (kindCol.nonEmpty)
-          compactIdsOver.foreach(t => compactIdLedger(spark, stateDir, t))
-        // folded-id ledger BEFORE the fold: overwrite-idempotent, and a
-        // crash between the two leaves an id entry whose fold the
-        // replay simply re-runs (the guard hasn't published)
-        if (kindCol.nonEmpty)
-          adds.select(col(idCol))
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/_ids/${BatchStore.BatchCol}=$batchId")
-        SnapshotStore.fold(spark, stateDir, batchId) { prior =>
-          val delta = IncrementalAgg.state(adds, keys.map(col), measures)
-          prior match {
-            case Some(p) => IncrementalAgg.merge(Seq(p, delta), keys, measures)
-            case None    => delta
-          }
-        }
-        // the batch's tombstones land AFTER its fold (same-batch
-        // add+del: delete wins), then the affected groups recompute
-        // from the folded survivors
-        if (kindCol.nonEmpty && nDels > 0) {
-          BatchStore.deleteNonEmpty(spark, stateDir, dels.select(idCol))
+    // the batch's tombstones land AFTER its fold (same-batch add+del:
+    // delete wins), then the affected groups recompute from the folded
+    // survivors
+    BatchStore.drain(rows, checkpointDir, continuous, kindCol,
+        tombstone = b => {
+          b.tombstoneIn(idCol, stateDir)
           val c = corpus.get
-          val folded = readIdLedger(spark, stateDir, idCol)
-          val allDels = BatchStore.readDeletes(spark, stateDir)
-          val survivors = c
-            .join(folded, Seq(idCol), "left_semi")
-            .join(allDels, col(idCol) === col("del_id"), "left_anti")
+          val survivors = BatchStore.mask(b.spark, stateDir,
+            c.join(readIdLedger(b.spark, stateDir, idCol), Seq(idCol),
+              "left_semi"), idCol)
           val affected = c
-            .join(dels.select(col(idCol).cast("long").as("del_id")),
+            .join(b.dels.select(col(idCol).cast("long").as("del_id")),
               col(idCol) === col("del_id"), "left_semi")
             .select(keys.map(col): _*).distinct()
-          retractKeys(spark, stateDir, keys, measures, affected, survivors)
+          retractKeys(b.spark, stateDir, keys, measures, affected, survivors)
+        }) { b =>
+      val spark = b.spark
+      // standing-tombstone mask: an add of an already-taken-down id
+      // must not resurrect it (delete wins across any arrival order)
+      val adds =
+        if (kindCol.isEmpty) b.adds
+        else BatchStore.mask(spark, stateDir, b.adds, idCol)
+      // ledger housekeeping first (single-admin: this batch body is
+      // the only `_ids` writer, so "between drains" holds per batch);
+      // a no-op below the threshold, one listing
+      if (kindCol.nonEmpty)
+        compactIdsOver.foreach(t => compactIdLedger(spark, stateDir, t))
+      // folded-id ledger BEFORE the fold: overwrite-idempotent, and a
+      // crash between the two leaves an id entry whose fold the
+      // replay simply re-runs (the guard hasn't published)
+      if (kindCol.nonEmpty)
+        adds.select(col(idCol))
+          .write.mode("overwrite")
+          .parquet(s"$stateDir/_ids/${BatchStore.BatchCol}=${b.id}")
+      SnapshotStore.fold(spark, stateDir, b.id) { prior =>
+        val delta = IncrementalAgg.state(adds, keys.map(col), measures)
+        prior match {
+          case Some(p) => IncrementalAgg.merge(Seq(p, delta), keys, measures)
+          case None    => delta
         }
-        ()
       }
-      .option("checkpointLocation", checkpointDir)
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow()))
-      .start()
+    }
   }
 }

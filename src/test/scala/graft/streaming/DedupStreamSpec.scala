@@ -251,6 +251,15 @@ class DedupStreamSpec extends SparkSpec {
     assert(rep3.gen == -1L && liveIds() == Set(1L, 2L, 3L, 4L, 5L))
   }
 
+  test("compactIfOver on a store that does not exist yet: None, nothing created") {
+    // the drains' compaction step runs before the first batch has
+    // written anything, so the policy must be a no-op on a missing dir
+    val store = Files.createTempDirectory("dedup_nostore").toString + "/store"
+    assert(BatchStore.compactIfOver(spark, store, threshold = 2).isEmpty)
+    assert(!Files.exists(Paths.get(store)),
+      "compactIfOver created the missing store dir")
+  }
+
   test("compaction policy: a long drain sequence keeps live store dirs bounded") {
     // 6 scheduled drains, 2 micro-batches each, compactWhenBatchesExceed=2:
     // without the policy the store accumulates 12 batch dirs forever;

@@ -176,4 +176,14 @@ class PostingsStreamSpec extends SparkSpec {
       .head.getLong(2) === 2L)
     assert(df.filter(col("word") === "beta").head.getLong(1) === 2L)
   }
+
+  test("m8_proximity_analyzed leaves no cache entry behind") {
+    // the gate shares one positional-store read across its four serve
+    // legs; the shared frame must not outlive the query as a persisted
+    // cache entry that piles up across repeat runs
+    spark.catalog.clearCache()
+    graft.SparkEntry.queries("m8_proximity_analyzed")(spark, sf).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "m8_proximity_analyzed left a cached frame behind")
+  }
 }
