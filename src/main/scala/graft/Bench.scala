@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -11,26 +9,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle-partition override for scale studies: pair-heavy bucket
-    // self-joins (hyperplane LSH at 10⁶+ vectors) need partition
-    // granularity finer than 1×cores or a couple of hot buckets
-    // serialize a partition into a multi-minute straggler tail — the
-    // same bytes-blind cost skew AQE can't see that BASELINE.md's
-    // null-key study documents. AQE coalesces small partitions, so a
-    // higher count costs little on the rest of the suite.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries INT64 TIMESTAMP(NANOS); set once here so
-      // no query body has to mutate shared session conf
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession()
 
     // Every timed action drains the FULL result through the noop sink:
     // all output columns are consumed, so Catalyst cannot prune columns

@@ -7,14 +7,7 @@ import org.apache.spark.sql.SparkSession
   * (PushedFilters/ReadSchema), join strategies, and codegen spans. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     if (args.headOption.contains("audit")) audit(spark)
     else {
       val names = if (args.nonEmpty) args.toSeq

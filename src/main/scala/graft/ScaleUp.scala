@@ -42,18 +42,7 @@ object ScaleUp {
     val Array(src, out, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
     val plant = args.length > 3 && args(3) == "plant"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // micros on disk (not INT96): keeps the image's timestamp physical
-      // type in the same family the driver generator ships
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def copyThrough(name: String): Unit =
       spark.read.parquet(s"$src/$name.parquet")

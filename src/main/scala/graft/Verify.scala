@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import java.nio.file.{Files, Paths}
@@ -10,21 +10,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional trailing args: run only these queries (local iteration).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Dump µs-typed timestamps: the driver reads these files next to
-      // DuckDB output (timestamp[us]); Spark's default INT96 surfaces as
-      // timestamp[ns] in pyarrow and can defeat the hash compare.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.parquet carries INT64 TIMESTAMP(NANOS); set once here so
-      // no query body has to mutate shared session conf
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Contract-boundary timestamp canonicalization: session TZ is UTC, so
     // LTZ→NTZ is an identity on the stored micros, and NTZ parquet reads

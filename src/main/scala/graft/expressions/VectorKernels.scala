@@ -244,6 +244,13 @@ object VectorKernels {
   // inherited). Scores are the exact kernels above, so the winning
   // (cent_id, score) pair is bit-identical to the fanout's.
 
+  /** Two non-null scores in SortOrder's double order: NaN ties NaN and
+    * is greater than every other double, and −0.0 ties 0.0 — the order
+    * the fanout's TopKPerKey applied, which plain `<`/`>` break on NaN. */
+  private def sortCompare(a: java.lang.Double, b: java.lang.Double): Int =
+    org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(
+      a.doubleValue(), b.doubleValue())
+
   /** argmax over cosine (`csim desc, cent_id asc`, nulls last). `v` may
     * be null (every score nulls, first cent_id wins — the fanout kept
     * such rows too). Returns null only for a null/EMPTY centroid set,
@@ -306,7 +313,7 @@ object VectorKernels {
       // the smaller cent_id on ties
       if (c == 0 ||
           (score != null && (bestScore == null ||
-            score.doubleValue() > bestScore.doubleValue()))) {
+            sortCompare(score, bestScore) > 0))) {
         bestId = s.getLong(0)
         bestScore = score
       }
@@ -349,7 +356,7 @@ object VectorKernels {
       if (c == 0 ||
           (score == null && bestScore != null) ||
           (score != null && bestScore != null &&
-            score.doubleValue() < bestScore.doubleValue())) {
+            sortCompare(score, bestScore) < 0)) {
         bestId = s.getLong(0)
         bestScore = score
       }

@@ -189,49 +189,22 @@ object Selection {
     * means its add-one-smoothed frequency moved by ≥ 2×. Returns one
     * row per bucket seen in either snapshot: `(b, c_before, c_after,
     * drift_bits)` — ≤ `buckets` rows, so the monitoring output is
-    * fixed-size no matter the corpus. Same scale shape as
-    * [[importanceWeights]]: one bucket-keyed exchange per snapshot,
-    * totals derived from the count frames. */
-  def distributionDrift(before: DataFrame, after: DataFrame,
-                        id: Column, text: Column,
+    * fixed-size no matter the corpus.
+    *
+    * Both snapshots are FILTERS of ONE corpus (`beforeCond`,
+    * `afterCond`) — the monitoring loop's usual shape (today's corpus
+    * vs yesterday's is a predicate over one store, and the populations
+    * overlap heavily): ONE tokenize+gram+hash pass over `beforeCond OR
+    * afterCond` with per-row membership flags, counted conditionally
+    * per bucket, instead of two full gram pipelines (guide §1.2 — the
+    * gram construction dominates this operator, measured round 19:
+    * m8_corpus_drift spent ~2× the gram cost for ~53% shared rows).
+    * Totals derive from the one bucket-keyed count frame. */
+  def distributionDrift(corpus: DataFrame,
+                        beforeCond: Column, afterCond: Column,
+                        text: Column,
                         buckets: Int = 512,
                         portable: Boolean = false): DataFrame = {
-    require(buckets > 0, s"buckets: $buckets")
-    val bg = hashedGrams(before, id, text, buckets, portable)
-    val ag = hashedGrams(after, id, text, buckets, portable)
-    def bits(total: String, c: String): String =
-      s"length(bin(($total + ${buckets.toLong}) div (coalesce($c, 0L) + 1L))) - 1"
-    val bc = bg.groupBy("b").agg(count(lit(1)).as("c_before"))
-    val ac = ag.groupBy("b").agg(count(lit(1)).as("c_after"))
-    val nb = bc.agg(coalesce(sum("c_before"), lit(0L)).as("nb"))
-    val na = ac.agg(coalesce(sum("c_after"), lit(0L)).as("na"))
-    bc.join(ac, Seq("b"), "full")
-      .crossJoin(broadcast(nb)).crossJoin(broadcast(na))
-      .select(col("b"),
-        coalesce(col("c_before"), lit(0L)).as("c_before"),
-        coalesce(col("c_after"), lit(0L)).as("c_after"),
-        (expr(bits("nb", "c_before")) - expr(bits("na", "c_after")))
-          .cast("long").as("drift_bits"))
-  }
-
-  /** [[distributionDrift]] when both snapshots are FILTERS of ONE
-    * corpus — the monitoring loop's usual shape (today's corpus vs
-    * yesterday's is a predicate over one store, and the populations
-    * overlap heavily): ONE tokenize+gram+hash pass over
-    * `beforeCond OR afterCond` with per-row membership flags, counted
-    * conditionally per bucket, instead of two full gram pipelines
-    * (guide §1.2 — the gram construction dominates this operator,
-    * measured round 19: m8_corpus_drift spent ~2× the gram cost for
-    * ~53% shared rows). Output is row-for-row identical to
-    * `distributionDrift(corpus.filter(beforeCond),
-    * corpus.filter(afterCond), …)`: same bucket set (buckets seen in
-    * either snapshot), same conditional counts, same totals, same
-    * bit-score arithmetic. */
-  def distributionDriftSliced(corpus: DataFrame,
-                              beforeCond: Column, afterCond: Column,
-                              text: Column,
-                              buckets: Int = 512,
-                              portable: Boolean = false): DataFrame = {
     require(buckets > 0, s"buckets: $buckets")
     val g = corpus.filter(beforeCond || afterCond)
       .select(beforeCond.as("in_b"), afterCond.as("in_a"),

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.sql.catalyst.expressions.{Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** DataFrame facade for the custom operators. */
@@ -93,21 +94,10 @@ object GraftOps {
   def topKPerKey(df: DataFrame, keys: Seq[Column], order: Seq[Column],
                  k: Int): DataFrame = {
     require(k > 0, s"topKPerKey: k must be positive, got $k")
-    val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    val keyExprs = keys.map(Bridge.expressionNow(spark, _))
-    val orderExprs = order.map { c =>
-      Bridge.expressionNow(spark, c) match {
-        case so: SortOrder => so
-        case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
-      }
-    }
-    Bridge.ofRows(spark,
+    perKey(df, keys, order) { (keyExprs, orderExprs, plan) =>
       TopKPerKey(keyExprs, orderExprs, k,
-        TopKPerKey(keyExprs, orderExprs, k, Bridge.logicalPlan(df),
-          partial = true)))
+        TopKPerKey(keyExprs, orderExprs, k, plan, partial = true))
+    }
   }
 
   /** Map-side-only cap: at most k rows per key PER TASK, chosen by
@@ -131,6 +121,18 @@ object GraftOps {
   def capPerKeyLocal(df: DataFrame, keys: Seq[Column], order: Seq[Column],
                      k: Int): DataFrame = {
     require(k > 0, s"capPerKeyLocal: k must be positive, got $k")
+    perKey(df, keys, order) { (keyExprs, orderExprs, plan) =>
+      TopKPerKey(keyExprs, orderExprs, k, plan, partial = true)
+    }
+  }
+
+  /** The TopKPerKey front door: registers [[TopKPerKeyStrategy]] on the
+    * session if absent, resolves `keys` and `order` (bare columns sort
+    * ascending) against `df`, and wraps `df`'s plan in what `build`
+    * makes of them. */
+  private def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column])(
+      build: (Seq[Expression], Seq[SortOrder], LogicalPlan) => LogicalPlan)
+      : DataFrame = {
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
       spark.experimental.extraStrategies =
@@ -142,8 +144,6 @@ object GraftOps {
         case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
       }
     }
-    Bridge.ofRows(spark,
-      TopKPerKey(keyExprs, orderExprs, k, Bridge.logicalPlan(df),
-        partial = true))
+    Bridge.ofRows(spark, build(keyExprs, orderExprs, Bridge.logicalPlan(df)))
   }
 }

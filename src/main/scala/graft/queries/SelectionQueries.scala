@@ -236,10 +236,8 @@ object SelectionQueries extends QueryModule {
   private def corpusDrift(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.spread(Tables.documents(s, dir))
     // both snapshots are predicates over ONE corpus and overlap on
-    // ~8/15 of it: the sliced variant grams each shared doc once
-    // instead of twice — identical output (Selection doc) at ~half the
-    // gram cost, the term that dominates this operator
-    Selection.distributionDriftSliced(d,
+    // ~8/15 of it: the one gram pass grams each shared doc once
+    Selection.distributionDrift(d,
       col("doc_id") % 3 =!= 0, col("doc_id") % 5 =!= 0,
       col("text"), Buckets, portable = true)
   }

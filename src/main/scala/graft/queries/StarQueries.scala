@@ -498,10 +498,7 @@ object StarQueries extends QueryModule {
   /** W1 via the custom TopKPerKey physical operator (bounded heap, no
     * sort) — must agree with the row_number window oracle. */
   private def windowTopKCustomOp(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.{GraftOps, TopKPerKeyStrategy}
-    if (!s.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ TopKPerKeyStrategy
+    import graft.plans.GraftOps
     GraftOps.topKPerKey(Tables.orders(s, dir),
       Seq(col("o_custkey")),
       Seq(col("o_totalprice").desc, col("o_orderkey")), 2)

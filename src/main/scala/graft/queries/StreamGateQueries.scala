@@ -2,9 +2,13 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
-import graft.streaming.{DedupStream, LateData, ViewMaintenance}
+import graft.ops.TextCorpus
 import graft.ops.IncrementalAgg.Measure
+import graft.similarity.Similarity
+import graft.streaming.{AnnIndex, BatchStore, DedupStream, DeltaLedger,
+  IndexStream, LateData, PostingsStream, SampleStream, ViewMaintenance}
 
 /** Oracle gates for the streaming state machines that previously only had
   * specs: [[LateData.splitLate]], [[ViewMaintenance.maintain]] and
@@ -19,7 +23,13 @@ import graft.ops.IncrementalAgg.Measure
   * SQL — the late/main split against the advancing high-water mark, the
   * monoid state fold, and the three-stage incremental MinHash admission
   * (unrolled: each stage screens against prior stages' ADMITTED docs plus
-  * earlier same-batch docs, exactly the `minhashIncremental` contract). */
+  * earlier same-batch docs, exactly the `minhashIncremental` contract).
+  *
+  * Every gate body is a top-to-bottom sequence of calls into the shared
+  * fixtures below (wave staging, the stores the gates build, the query
+  * frame, the serve legs, the leak check) and every oracle is assembled
+  * from the shared SQL replays further down; `gates` pairs each gate with
+  * its oracle. */
 object StreamGateQueries extends QueryModule {
 
   /** Stage each wave frame as one parquet file CONCURRENTLY (guide
@@ -52,24 +62,6 @@ object StreamGateQueries extends QueryModule {
     watch
   }
 
-  /** Write `df` as `k` single-file batches (slice i = rows with
-    * `splitCol % k == i`) into a fresh watch dir, modification times
-    * 2 s apart so the file stream processes them oldest-first in slice
-    * order. Returns the watch dir. */
-  private def writeOrderedBatches(df: DataFrame, splitCol: String,
-                                  k: Int): String =
-    stageWaves((0 until k).map(i => df.filter(col(splitCol) % k === i)))
-
-  /** Seed the standing ANN index the maintenance gates extend: the
-    * quantizer trained on `standing` at `root/centroids`, and its lists
-    * as the manual base `root/lists/graft_batch=-1`. */
-  private def seedStandingIndex(standing: DataFrame, root: String): Unit = {
-    val (cent, lists) = graft.similarity.Similarity.ivfBuildQuantized(
-      Tables.spread(standing), nlist = 16, lloydIters = 2)
-    cent.write.mode("overwrite").parquet(root + "/centroids")
-    lists.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
-  }
-
   /** The gates' ordered file source: the parquet files in `watch` as a
     * stream of `schema` rows, one file per micro-batch, oldest first
     * (the order [[stageWaves]] stamps). */
@@ -78,6 +70,229 @@ object StreamGateQueries extends QueryModule {
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(watch)
 
+  /** `df` staged as `k` single-file batches (slice i = rows with
+    * `splitCol % k == i`, modification times 2 s apart) and streamed
+    * back as `schema` rows, slice order oldest-first. */
+  private def orderedStream(s: SparkSession, df: DataFrame, splitCol: String,
+                            schema: String, k: Int = 3): DataFrame =
+    fileStream(s, schema,
+      stageWaves((0 until k).map(i => df.filter(col(splitCol) % k === i))))
+
+  /** Three MIXED add/del waves of `df`, staged like [[orderedStream]]:
+    * wave i adds the `adding` rows with `id % 3 = i`, and waves 1 and 2
+    * also carry a `del` row for each row matching `del1` / `del2`. A
+    * leading `kind` column says which; a del row keeps the id and types
+    * every other column as null. Returns the watch dir. */
+  private def mixedWaves(df: DataFrame, id: String, del1: Column,
+                         del2: Column, adding: Column = lit(true)): String = {
+    def wave(i: Int) = df.filter(adding && col(id) % 3 === i)
+      .select(lit("add").as("kind") +: df.columns.toSeq.map(col): _*)
+    def tombstones(cond: Column) = df.filter(cond)
+      .select(lit("del").as("kind") +: df.schema.map { f =>
+        if (f.name == id) col(id) else lit(null).cast(f.dataType).as(f.name)
+      }: _*)
+    stageWaves(Seq(wave(0), wave(1).unionByName(tombstones(del1)),
+      wave(2).unionByName(tombstones(del2))))
+  }
+
+  /** The text gates' query docs: every 251st document. */
+  private val queryDocs = col("doc_id") % 251 === 7
+
+  /** The gates' query frame: each `where` doc's id as `query_id` and
+    * tokens `from` .. `from + len - 1` of its trimmed, whitespace-split
+    * `text` as `query_text`. */
+  private def queryText(s: SparkSession, dir: String, where: Column,
+                        from: Int, len: Int,
+                        text: Column = coalesce(col("text"), lit("")))
+      : DataFrame =
+    Tables.documents(s, dir).filter(where)
+      .select(col("doc_id").as("query_id"),
+        array_join(slice(split(trim(text), "\\s+"), from, len), " ")
+          .as("query_text"))
+
+  /** One scored serve leg tagged `name`: (leg, query_id, rank, `id`,
+    * score as double). */
+  private def scoredLeg(name: String, df: DataFrame, score: Column,
+                        id: Column = col("doc_id")): DataFrame =
+    df.select(lit(name).as("leg"), col("query_id"), col("rank"), id,
+      score.cast("double").as("score"))
+
+  /** One slop-window serve leg tagged `name`. */
+  private def windowsLeg(name: String, df: DataFrame): DataFrame =
+    df.select(lit(name).as("leg"), col("query_id"), col("rank"),
+      col("doc_id"), col("n_windows"))
+
+  /** Require the compaction of `store` to have PHYSICALLY dropped the
+    * rows matching `cond` from its new base generation (gen 2, the -2
+    * batch dir): a store that only ever masks never shrinks. */
+  private def requireDropped(s: SparkSession, store: String, cond: Column,
+                             what: String): Unit = {
+    val leaked = s.read.parquet(s"$store/graft_batch=-2").filter(cond).count()
+    require(leaked == 0, s"compacted base of $store still holds $leaked $what")
+  }
+
+  /** The admission gates' drain: portable 8×4-band MinHash admission of
+    * `stream` into `root`'s signature store and verdict sink, folding
+    * the duplicate-group ledger at `root/labels` when `labels`. */
+  private def admit(stream: DataFrame, root: String, labels: Boolean = false,
+                    kindCol: Option[String] = None): StreamingQuery =
+    DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
+      s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
+      portable = true, labelsDir = if (labels) Some(s"$root/labels") else None,
+      kindCol = kindCol)
+
+  private val verdictCols =
+    Seq("doc_id", "verdict", "dup_of", "best_agreement", "n_dups", "batch_id")
+
+  /** An admission gate's output: every verdict row (its agreement column
+    * `score`, computed by `scoreCol`) plus the store's live
+    * (tombstone-masked) id set as `store` rows with null verdict
+    * columns. */
+  private def verdictsAndStore(s: SparkSession, root: String, score: String,
+                               scoreCol: Column): DataFrame = {
+    val verdicts = s.read.parquet(s"$root/verdicts")
+      .select(lit("verdict").as("leg"), col("doc_id"), col("verdict"),
+        col("dup_of"), scoreCol.as(score), col("n_dups"), col("batch_id"))
+    val live = BatchStore.readLive(s, s"$root/store", "id")(_.select("id"))
+      .select(lit("store").as("leg"), col("id").as("doc_id"),
+        lit(null).cast("string").as("verdict"),
+        lit(null).cast("long").as("dup_of"),
+        lit(null).cast("double").as(score),
+        lit(null).cast("long").as("n_dups"),
+        lit(null).cast("long").as("batch_id"))
+    verdicts.unionByName(live)
+  }
+
+  /** The sample gates' drain: the k = 50 'ssam' priority sample of
+    * `stream` weighted by n_chars, kept at `root/state`. */
+  private def sampleDrain(stream: DataFrame, root: String,
+                          kindCol: Option[String] = None): StreamingQuery =
+    SampleStream.maintainSample(stream, s"$root/state", s"$root/ckpt",
+      k = 50, salt = "ssam", idCol = "doc_id", weightCol = "n_chars",
+      kindCol = kindCol)
+
+  /** [[sampleDrain]]'s sample as (doc_id, weight). The state carries
+    * weight as double (the exact cast Sampling.weightedSample applies,
+    * so fractional weights survive the fold); n_chars is integral, so
+    * the cast back is lossless. */
+  private def readSample(s: SparkSession, root: String): DataFrame =
+    ViewMaintenance.readLatest(s, s"$root/state").get
+      .select(col("sample_id").as("doc_id"),
+        col("weight").cast("long").as("weight"))
+
+  /** The view gates' events and measures, keyed by event_type. */
+  private def viewEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).select("event_id", "user_id", "event_type")
+
+  private val viewMeasures = Seq(
+    Measure("n", "count", lit(1)),
+    Measure("sum_uid", "sum", col("user_id")),
+    Measure("min_id", "min", col("event_id")),
+    Measure("max_id", "max", col("event_id")))
+
+  /** The view gates' published view: the latest snapshot's measures. */
+  private def readView(s: SparkSession, root: String): DataFrame =
+    ViewMaintenance.readLatest(s, s"$root/state").get
+      .select("event_type", "n", "sum_uid", "min_id", "max_id")
+
+  /** Drain `docs` (doc_id, text), staged as three doc_id waves, into the
+    * postings store at `index`. Returns the running drain. */
+  private def postingsDrain(s: SparkSession, docs: DataFrame, index: String,
+                            positions: Boolean = false,
+                            analyzer: Option[TextCorpus.Analyzer] = None)
+      : StreamingQuery =
+    PostingsStream.maintainPostings(
+      orderedStream(s, docs, "doc_id", "doc_id BIGINT, text STRING"),
+      index, Dsl.tempDir("graft_postings_ckpt_"), positions = positions,
+      analyzer = analyzer)
+
+  /** A postings store [[postingsDrain]]ed from `docs`, then folded down
+    * to one kept batch (the fold re-sums the df partials). Returns the
+    * index dir. */
+  private def foldedPostings(s: SparkSession, docs: DataFrame,
+                             positions: Boolean = false,
+                             analyzer: Option[TextCorpus.Analyzer] = None)
+      : String = {
+    val index = Dsl.tempDir("graft_postings_") + "/index"
+    postingsDrain(s, docs, index, positions, analyzer).awaitTermination()
+    PostingsStream.compactIndex(s, index, keepBatches = 1)
+    index
+  }
+
+  /** The analyzer of the analyzed positional stores. */
+  private val stopAnalyzer = Some(TextCorpus.Analyzer(lowercase = true,
+    stripPunct = true, stopwords = Seq("the", "a")))
+
+  /** The postings deletion gates' legs over `index` once its deletes
+    * (every doc_id % 7 = 3) have landed: BM25 before compaction —
+    * materialized NOW, because the fold rewrites the store state this
+    * plan reads and lazy evaluation would otherwise time-travel it to
+    * the post-fold layout — then the fold, which must physically drop
+    * the deleted docs' rows, then BM25 and phrase after it. */
+  private def deletedPostingsLegs(s: SparkSession, dir: String, index: String,
+                                  id: Column): DataFrame = {
+    def bm25(leg: String) = scoredLeg(leg, PostingsStream.bm25Serve(s, index,
+      queryText(s, dir, queryDocs, 1, 4), 10), col("score"), id)
+    val pre = bm25("bm25_pre").localCheckpoint(true)
+    PostingsStream.compactIndex(s, index, keepBatches = 1)
+    requireDropped(s, index, col("doc_id") % 7 === 3, "rows of deleted docs")
+    pre.unionByName(bm25("bm25_post")).unionByName(scoredLeg("phrase_post",
+      PostingsStream.phraseServe(s, index, queryText(s, dir, queryDocs, 2, 3),
+        10), col("n_occ"), id))
+  }
+
+  /** The fixed-quantizer ANN store (T13's shape) under `root`: the
+    * standing corpus (vec_id % 5 ≠ 4) trains the quantizer at
+    * `root/centroids` and writes its lists as the manual base
+    * `root/lists/graft_batch=-1`; the delta (vec_id % 5 = 4) then
+    * drains through [[IndexStream.maintainIndex]] in three vec_id waves,
+    * each encoded against the FIXED stored centroids — as mixed add/del
+    * waves carrying `dels` as wave 1's and wave 2's tombstones when
+    * given. Returns the running drain. */
+  private def annStore(s: SparkSession, emb: DataFrame, root: String,
+                       dels: Option[(Column, Column)] = None): StreamingQuery = {
+    val (cent, lists) = Similarity.ivfBuildQuantized(
+      Tables.spread(emb.filter(col("vec_id") % 5 =!= 4)), nlist = 16,
+      lloydIters = 2)
+    cent.write.mode("overwrite").parquet(root + "/centroids")
+    lists.write.mode("overwrite").parquet(root + "/lists/graft_batch=-1")
+    val vecs = emb.select("vec_id", "embedding")
+    val delta = col("vec_id") % 5 === 4
+    val stream = dels match {
+      case None => orderedStream(s, vecs.filter(delta), "vec_id",
+        "vec_id BIGINT, embedding ARRAY<FLOAT>")
+      case Some((del1, del2)) =>
+        fileStream(s, "kind STRING, vec_id BIGINT, embedding ARRAY<FLOAT>",
+          mixedWaves(vecs, "vec_id", del1, del2, adding = delta))
+    }
+    IndexStream.maintainIndex(stream, root + "/centroids", root + "/lists",
+      Dsl.tempDir("graft_ann_ckpt_"), kindCol = dels.map(_ => "kind"))
+  }
+
+  /** The gates' serve off an [[annStore]]: the first 8 vectors' top 5
+    * (nprobe 4, rescore 15). The lists store is read through BatchStore:
+    * the manual -1 base and every live batch dir — and after a compaction
+    * the folded generation — resolve through the same pointer-filtered,
+    * tombstone-masked read. */
+  private def annServe(s: SparkSession, emb: DataFrame, root: String)
+      : DataFrame =
+    Similarity.ivfServeQuantized(emb.filter(col("vec_id") < 8),
+      s.read.parquet(root + "/centroids"),
+      IndexStream.readLists(s, root + "/lists"),
+      emb, 5, nprobe = 4, rescoreK = 15)
+
+  /** The hybrid gates' fusion: BM25 from `postings` for the first 8
+    * docs' tokens 1-4 and the `dense` leg, each top 5, fused with
+    * reciprocal-rank fusion ([[rrfSql]] replays it). */
+  private def rrfServe(s: SparkSession, dir: String, postings: String,
+                       dense: DataFrame): DataFrame = {
+    val sparse = PostingsStream.bm25Serve(s, postings,
+        queryText(s, dir, col("doc_id") < 8, 1, 4), 5)
+      .withColumnRenamed("doc_id", "cand_id")
+    Similarity.rrfFuse(
+      Seq(sparse, dense.select("query_id", "cand_id", "rank")), 5)
+  }
+
   /** T11: late-data accounting. Three event batches stream through
     * [[LateData.splitLate]] (delay 3600 s); each batch's rows land in the
     * main or late sink versus the high-water mark advanced by PRIOR
@@ -85,11 +300,10 @@ object StreamGateQueries extends QueryModule {
     * observed lateness, read back from the durable sinks. */
   private def t11LateSplit(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select("event_id", "ts", "user_id")
-    val watch = writeOrderedBatches(ev, "event_id", 3)
     val root = Dsl.tempDir("graft_t11_")
     val (mainDir, lateDir) = (s"$root/main", s"$root/late")
-    val stream = fileStream(s, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT",
-      watch)
+    val stream = orderedStream(s, ev, "event_id",
+      "event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
     LateData.splitLate(stream, "ts", delaySeconds = 3600L,
       mainDir, lateDir, s"$root/state", s"$root/ckpt")
       .awaitTermination()
@@ -130,29 +344,15 @@ object StreamGateQueries extends QueryModule {
     * merged into the versioned snapshot store); the published view must
     * equal the flat aggregate over everything — the monoid-fold gate. */
   private def t12ViewMaintain(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .select("event_id", "user_id", "event_type")
-    val watch = writeOrderedBatches(ev, "event_id", 3)
     val root = Dsl.tempDir("graft_t12_")
-    val stream = fileStream(s,
-      "event_id BIGINT, user_id BIGINT, event_type STRING", watch)
+    val stream = orderedStream(s, viewEvents(s, dir), "event_id",
+      "event_id BIGINT, user_id BIGINT, event_type STRING")
     ViewMaintenance.maintain(stream, s"$root/state", s"$root/ckpt",
-      keys = Seq("event_type"),
-      measures = Seq(
-        Measure("n", "count", lit(1)),
-        Measure("sum_uid", "sum", col("user_id")),
-        Measure("min_id", "min", col("event_id")),
-        Measure("max_id", "max", col("event_id"))))
-      .awaitTermination()
-    ViewMaintenance.readLatest(s, s"$root/state").get
-      .select("event_type", "n", "sum_uid", "min_id", "max_id")
+      keys = Seq("event_type"), measures = viewMeasures).awaitTermination()
+    readView(s, root)
   }
 
-  private val t12Sql =
-    """SELECT event_type, COUNT(*) AS n,
-      |  CAST(SUM(user_id) AS BIGINT) AS sum_uid,
-      |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
-      |FROM events GROUP BY 1""".stripMargin
+  private val t12Sql = viewSql("events")
 
   /** M8: streaming corpus admission. Three document batches stream
     * through [[DedupStream.admitDocuments]] (portable MinHash, 8×4
@@ -161,65 +361,19 @@ object StreamGateQueries extends QueryModule {
     * Output: every verdict row from the durable sink. */
   private def streamAdmission(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
     val root = Dsl.tempDir("graft_m8adm_")
-    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
-    DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
-      s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
-      portable = true)
+    admit(orderedStream(s, docs, "doc_id", "doc_id LONG, text STRING"), root)
       .awaitTermination()
-    s.read.parquet(s"$root/verdicts")
-      .select("doc_id", "verdict", "dup_of", "best_agreement", "n_dups",
-        "batch_id")
+    s.read.parquet(s"$root/verdicts").select(verdictCols.map(col): _*)
   }
-
-  /** One admission stage of the oracle: candidates for batch `i` docs are
-    * earlier same-batch docs (any verdict — they're all in the delta) or
-    * `admitted` prior-batch docs; agreement over the 32 portable MinHash
-    * slots; hits at ≥ 0.5 reduce to (dup_of = min, best, count). `mod`
-    * is the batch-slicing modulus (3 for the admission gate, 4 for the
-    * compaction gate's extra post-compaction wave). */
-  private def stageSql(i: Int, admitted: String, mod: Int = 3): String =
-    s"""c$i AS (
-       |  SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS cand_id
-       |  FROM band n JOIN band c ON n.bk = c.bk
-       |  WHERE n.doc_id % $mod = $i AND (
-       |        (c.doc_id % $mod = $i AND c.doc_id < n.doc_id)
-       |        $admitted)),
-       |a$i AS (
-       |  SELECT i.new_id, i.cand_id,
-       |    SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 32.0 AS agreement
-       |  FROM c$i i
-       |  JOIN sig sa ON sa.doc_id = i.new_id
-       |  JOIN sig sb ON sb.doc_id = i.cand_id AND sb.seed = sa.seed
-       |  GROUP BY 1, 2),
-       |h$i AS (
-       |  SELECT new_id, MIN(cand_id) AS dup_of, MAX(agreement) AS best_agreement,
-       |    COUNT(*) AS n_dups
-       |  FROM a$i WHERE agreement >= 0.5 GROUP BY 1),
-       |adm$i AS (
-       |  SELECT doc_id FROM documents
-       |  WHERE doc_id % $mod = $i AND doc_id NOT IN (SELECT new_id FROM h$i)),
-       |v$i AS (
-       |  SELECT d.doc_id,
-       |    CASE WHEN h.new_id IS NULL THEN 'admit' ELSE 'reject' END AS verdict,
-       |    h.dup_of, h.best_agreement,
-       |    CAST(COALESCE(h.n_dups, 0) AS BIGINT) AS n_dups,
-       |    CAST($i AS BIGINT) AS batch_id
-       |  FROM (SELECT doc_id FROM documents WHERE doc_id % $mod = $i) d
-       |  LEFT JOIN h$i h ON h.new_id = d.doc_id)""".stripMargin
 
   /** The minhash CTE chain is DedupQueries' portable replica (md5 hex
     * digits → h1/h2 → 32 affine min-hashes → 8 band keys); shared via
     * [[DedupQueries.minhashOracleCtes]]. */
   private val streamAdmissionSql =
     s"""WITH ${DedupQueries.minhashOracleCtes},
-       |${stageSql(0, "")},
-       |${stageSql(1, "OR c.doc_id IN (SELECT doc_id FROM adm0)")},
-       |${stageSql(2,
-            "OR c.doc_id IN (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1)")}
-       |SELECT * FROM v0 UNION ALL SELECT * FROM v1 UNION ALL
-       |SELECT * FROM v2""".stripMargin
+       |${stagesSql(3)}
+       |${verdictsSql(3)}""".stripMargin
 
   /** M8: signature-store COMPACTION in the admission lifecycle — the
     * piece that keeps a long-lived streaming store readable at
@@ -238,17 +392,12 @@ object StreamGateQueries extends QueryModule {
     * never-compacted corpus. */
   private def storeCompaction(s: SparkSession, dir: String): DataFrame = {
     import graft.dedup.Dedup
-    import graft.streaming.BatchStore
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val streamed = docs.filter(col("doc_id") % 4 =!= 3)
       .withColumn("slice", col("doc_id") % 4)
-    val watch = writeOrderedBatches(streamed, "slice", 3)
     val root = Dsl.tempDir("graft_m8cmp_")
-    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
-    DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
-      s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
-      portable = true)
-      .awaitTermination()
+    admit(orderedStream(s, streamed, "slice", "doc_id LONG, text STRING"),
+      root).awaitTermination()
     val report = BatchStore.compact(s, s"$root/store", keepBatches = 1)
     require(report.gen == 2L && report.foldedThrough == 1L &&
       report.foldedBatches == Seq(0L, 1L),
@@ -262,25 +411,14 @@ object StreamGateQueries extends QueryModule {
         BatchStore.read(s, s"$root/store").select("id", "sig"), delta,
         bands = 8, rowsPerBand = 4, minAgreement = 0.5, portable = true)
       .withColumn("batch_id", lit(3L))
-    s.read.parquet(s"$root/verdicts")
-      .select("doc_id", "verdict", "dup_of", "best_agreement", "n_dups",
-        "batch_id")
-      .unionByName(wave4.select("doc_id", "verdict", "dup_of",
-        "best_agreement", "n_dups", "batch_id"))
+    s.read.parquet(s"$root/verdicts").select(verdictCols.map(col): _*)
+      .unionByName(wave4.select(verdictCols.map(col): _*))
   }
 
   private val storeCompactionSql =
     s"""WITH ${DedupQueries.minhashOracleCtes},
-       |${stageSql(0, "", 4)},
-       |${stageSql(1, "OR c.doc_id IN (SELECT doc_id FROM adm0)", 4)},
-       |${stageSql(2,
-            "OR c.doc_id IN (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1)",
-            4)},
-       |${stageSql(3,
-            "OR c.doc_id IN (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1 UNION ALL SELECT doc_id FROM adm2)",
-            4)}
-       |SELECT * FROM v0 UNION ALL SELECT * FROM v1 UNION ALL
-       |SELECT * FROM v2 UNION ALL SELECT * FROM v3""".stripMargin
+       |${stagesSql(4, mod = 4)}
+       |${verdictsSql(4)}""".stripMargin
 
   /** M8: the streaming duplicate-group LEDGER — admission's queryable
     * provenance ("where did my rejected document go?"). The same three
@@ -293,38 +431,18 @@ object StreamGateQueries extends QueryModule {
     * stages' verdict edges at once — blind to the per-batch fold, so
     * agreement proves fold-equals-recluster across the whole run. */
   private def streamClusters(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
     val root = Dsl.tempDir("graft_m8slbl_")
-    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
-    DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
-      s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
-      portable = true, labelsDir = Some(s"$root/labels"))
-      .awaitTermination()
+    admit(orderedStream(s, docs, "doc_id", "doc_id LONG, text STRING"), root,
+      labels = true).awaitTermination()
     // delta-published ledger: the latest-wins read IS the snapshot
-    graft.streaming.DeltaLedger.read(s, s"$root/labels")
-      .select("doc_id", "cluster_id")
+    DeltaLedger.read(s, s"$root/labels").select("doc_id", "cluster_id")
   }
 
   private val streamClustersSql =
     s"""WITH RECURSIVE ${DedupQueries.minhashOracleCtes},
-       |${stageSql(0, "")},
-       |${stageSql(1, "OR c.doc_id IN (SELECT doc_id FROM adm0)")},
-       |${stageSql(2,
-            "OR c.doc_id IN (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1)")},
-       |ed0 AS (
-       |  SELECT new_id AS u, dup_of AS v FROM h0
-       |  UNION ALL SELECT new_id, dup_of FROM h1
-       |  UNION ALL SELECT new_id, dup_of FROM h2),
-       |e AS (SELECT u, v FROM ed0 UNION ALL SELECT v, u FROM ed0),
-       |reach AS (
-       |  SELECT u, v FROM e
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
-       |ccl AS (
-       |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-       |  FROM reach GROUP BY u)
+       |${stagesSql(3)},
+       |${closureSql(3)}
        |SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
        |FROM documents d LEFT JOIN ccl c USING (doc_id)""".stripMargin
 
@@ -339,30 +457,16 @@ object StreamGateQueries extends QueryModule {
     * nothing about batching: it ranks the full corpus by
     * coord/weight. */
   private def streamSample(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.{SampleStream, ViewMaintenance}
     val docs = Tables.documents(s, dir).select("doc_id", "n_chars")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
     val root = Dsl.tempDir("graft_m8ssam_")
-    val stream = fileStream(s, "doc_id LONG, n_chars LONG", watch)
-    SampleStream.maintainSample(stream, s"$root/state", s"$root/ckpt",
-        k = 50, salt = "ssam", idCol = "doc_id", weightCol = "n_chars")
-      .awaitTermination()
-    // the state schema carries weight as double (the exact cast
-    // Sampling.weightedSample applies, so fractional weights survive the
-    // fold); n_chars is integral, so the output cast back is lossless
-    ViewMaintenance.readLatest(s, s"$root/state").get
-      .select(col("sample_id").as("doc_id"),
-        col("weight").cast("long").as("weight"))
+    sampleDrain(orderedStream(s, docs, "doc_id", "doc_id LONG, n_chars LONG"),
+      root).awaitTermination()
+    readSample(s, root)
   }
 
   private val streamSampleSql =
-    s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS weight FROM (
-       |  SELECT doc_id, n_chars,
-       |    ROW_NUMBER() OVER (ORDER BY
-       |      CAST(${Dsl.hex60Sql("'ssam|' || doc_id::VARCHAR")} AS DOUBLE)
-       |        / CAST(n_chars AS DOUBLE) ASC,
-       |      doc_id) AS rn
-       |  FROM documents) WHERE rn <= 50""".stripMargin
+    s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS weight FROM documents
+       |WHERE doc_id IN (${sampleSql("TRUE")})""".stripMargin
 
   /** T13: incremental ANN-index maintenance. The standing corpus
     * (vec_id % 5 ≠ 4) trains the quantizer and writes the stored index;
@@ -373,28 +477,11 @@ object StreamGateQueries extends QueryModule {
     * on the standing corpus — assignment is per-vector against fixed
     * centroids, so the oracle replays exactly that. */
   private def t13IndexMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.Similarity
-    import graft.streaming.IndexStream
     val emb = Tables.embeddings(s, dir)
-    val standing = emb.filter(col("vec_id") % 5 =!= 4)
-    val delta = emb.filter(col("vec_id") % 5 === 4)
-      .select("vec_id", "embedding")
     val root = Dsl.tempDir("graft_t13_")
-    seedStandingIndex(standing, root)
-    val watch = writeOrderedBatches(delta, "vec_id", 3)
-    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>", watch)
-    IndexStream.maintainIndex(stream, root + "/centroids", root + "/lists",
-        Dsl.tempDir("graft_t13_ckpt_"))
-      .awaitTermination()
-    // The lists store is read through BatchStore: the manual -1 base and
-    // every live batch dir — and after a BatchStore.compact, the folded
-    // generation — resolve through the same pointer-filtered read.
-    Similarity.ivfServeQuantized(emb.filter(col("vec_id") < 8),
-      s.read.parquet(root + "/centroids"),
-      graft.streaming.IndexStream.readLists(s, root + "/lists"),
-      emb, 5, nprobe = 4, rescoreK = 15)
-      .select(col("query_id"), col("rank"), col("cand_id"),
-        round(col("cosine"), 6).as("cosine"))
+    annStore(s, emb, root).awaitTermination()
+    annServe(s, emb, root).select(col("query_id"), col("rank"),
+      col("cand_id"), round(col("cosine"), 6).as("cosine"))
   }
 
   private val t13Sql = SimilarityQueries.ivfQServeSql(Some("vec_id % 5 <> 4"))
@@ -408,20 +495,9 @@ object StreamGateQueries extends QueryModule {
     * store that grew batch-by-batch and lived through a fold serves the
     * exact ranking of a from-scratch index — is the whole contract. */
   private def t14PostingsMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
-    val root = Dsl.tempDir("graft_t14_")
-    PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt")
-      .awaitTermination()
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    val queries = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), 1, 4), " ").as("query_text"))
-    PostingsStream.bm25Serve(s, root + "/index", queries, k = 10)
+    PostingsStream.bm25Serve(s, foldedPostings(s, docs),
+      queryText(s, dir, queryDocs, 1, 4), k = 10)
   }
 
   private val t14Sql =
@@ -433,20 +509,9 @@ object StreamGateQueries extends QueryModule {
     * SQL replay untouched, certifying that per-occurrence positions
     * survive batching, replay semantics, and the df-merging fold. */
   private def t15PhraseMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
-    val root = Dsl.tempDir("graft_t15_")
-    PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
-      positions = true).awaitTermination()
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    val queries = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), 2, 3), " ").as("query_text"))
-    PostingsStream.phraseServe(s, root + "/index", queries, k = 10)
+    PostingsStream.phraseServe(s, foldedPostings(s, docs, positions = true),
+      queryText(s, dir, queryDocs, 2, 3), k = 10)
   }
 
   private val t15Sql = TextQueries.phraseSqlFrom("doc_id % 251 = 7")
@@ -461,74 +526,21 @@ object StreamGateQueries extends QueryModule {
     * the same integer floor-division arithmetic — so store maintenance,
     * both serve paths, and the fusion certify in one hash compare. */
   private def t16HybridServe(s: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.Similarity
-    import graft.streaming.{BatchStore, IndexStream, PostingsStream}
-    val k = 5
     val root = Dsl.tempDir("graft_t16_")
     // The two legs build DISJOINT stores from disjoint sources, so
     // their drains run CONCURRENTLY (guide §2.6 — each drain is ~40%
     // driver-gap at micro-batch pacing, which the other leg's tasks
     // back-fill): start the sparse drain first, build + drain the
     // dense leg while it runs, await both before the serves.
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val dstream = fileStream(s, "doc_id BIGINT, text STRING",
-      writeOrderedBatches(docs, "doc_id", 3))
-    val sparseDrain = PostingsStream.maintainPostings(dstream,
-      root + "/postings", Dsl.tempDir("graft_t16_pckpt_"))
-    // dense leg: the T13 store shape — batch-built quantized lists plus
-    // three streamed refresh waves against the FIXED stored quantizer
+    val sparseDrain = postingsDrain(s,
+      Tables.documents(s, dir).select("doc_id", "text"), root + "/postings")
     val emb = Tables.embeddings(s, dir)
-    val standing = emb.filter(col("vec_id") % 5 =!= 4)
-    val delta = emb.filter(col("vec_id") % 5 === 4)
-      .select("vec_id", "embedding")
-    seedStandingIndex(standing, root)
-    val vstream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
-      writeOrderedBatches(delta, "vec_id", 3))
-    IndexStream.maintainIndex(vstream, root + "/centroids", root + "/lists",
-      Dsl.tempDir("graft_t16_ickpt_")).awaitTermination()
+    annStore(s, emb, root).awaitTermination()
     sparseDrain.awaitTermination()
-    val dense = Similarity.ivfServeQuantized(emb.filter(col("vec_id") < 8),
-      s.read.parquet(root + "/centroids"),
-      IndexStream.readLists(s, root + "/lists"),
-      emb, k, nprobe = 4, rescoreK = 15)
-      .select("query_id", "cand_id", "rank")
-    val queries = Tables.documents(s, dir)
-      .filter(col("doc_id") < 8)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), 1, 4), " ").as("query_text"))
-    val sparse = PostingsStream.bm25Serve(s, root + "/postings", queries, k)
-      .withColumnRenamed("doc_id", "cand_id")
-    Similarity.rrfFuse(Seq(sparse, dense), k)
+    rrfServe(s, dir, root + "/postings", annServe(s, emb, root))
   }
 
-  private val t16Sql = {
-    val sparseQueryCte =
-      """SELECT doc_id AS query_id,
-        |    array_to_string(list_slice(
-        |      string_split_regex(trim(text), '\s+'), 1, 4), ' ') AS query_text
-        |  FROM documents WHERE doc_id < 8""".stripMargin
-    s"""WITH ${TextQueries.bm25OracleCtes(sparseQueryCte)},
-       |hivf AS ($t13Sql),
-       |hterms AS (
-       |  SELECT query_id, cand_id,
-       |    1000000000 // (60 + CAST(rank AS BIGINT)) AS term_fp
-       |  FROM (SELECT query_id, doc_id AS cand_id, rank FROM bmranked
-       |          WHERE rank <= 5
-       |        UNION ALL
-       |        SELECT query_id, cand_id, rank FROM hivf)),
-       |hfused AS (
-       |  SELECT query_id, cand_id, CAST(SUM(term_fp) AS BIGINT) AS rrf_fp
-       |  FROM hterms GROUP BY 1, 2),
-       |hranked AS (
-       |  SELECT query_id, cand_id, rrf_fp,
-       |    row_number() OVER (PARTITION BY query_id
-       |                       ORDER BY rrf_fp DESC, cand_id) AS rank
-       |  FROM hfused)
-       |SELECT query_id, CAST(rank AS INT) AS rank, cand_id,
-       |  CAST(rrf_fp AS DOUBLE) / 1000000000.0 AS rrf
-       |FROM hranked WHERE rank <= 5""".stripMargin
-  }
+  private val t16Sql = rrfSql(t13Sql)
 
   /** T17 — DELETION through the postings store, the takedown/opt-out
     * path every training-data pipeline must honor: the full documents
@@ -549,61 +561,18 @@ object StreamGateQueries extends QueryModule {
     * must BOTH equal the survivors-only build: the full
     * deletion-exactness contract in one hash compare. */
   private def t17StoreDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.{BatchStore, PostingsStream}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
-    val root = Dsl.tempDir("graft_t17_")
-    PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
-      positions = true).awaitTermination()
-    PostingsStream.deleteDocs(s, root + "/index",
+    val index = Dsl.tempDir("graft_t17_") + "/index"
+    postingsDrain(s, docs, index, positions = true).awaitTermination()
+    PostingsStream.deleteDocs(s, index,
       docs.filter(col("doc_id") % 7 === 3).select("doc_id"))
-    def firstTokens(from: Int, len: Int) = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), from, len), " ").as("query_text"))
-    def leg(name: String, df: DataFrame, score: Column) =
-      df.select(lit(name).as("leg"), col("query_id"), col("rank"),
-        col("doc_id"), score.cast("double").as("score"))
-    // materialize the pre-compaction serve NOW — it reads store state
-    // the compaction below rewrites, and lazy evaluation would
-    // otherwise time-travel it to the post-fold layout
-    val pre = leg("bm25_pre",
-      PostingsStream.bm25Serve(s, root + "/index", firstTokens(1, 4), 10),
-      col("score")).localCheckpoint(true)
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    // the fold must have PHYSICALLY removed the deleted docs' rows from
-    // the new base generation (gen 2 = graft_batch=-2): a store that
-    // only ever masks never shrinks, which is the gap this gate closes
-    val leaked = s.read.parquet(s"$root/index/graft_batch=-2")
-      .filter(col("doc_id") % 7 === 3).count()
-    require(leaked == 0,
-      s"compacted base still holds $leaked rows of deleted docs")
-    require(BatchStore.hasDeletes(s, root + "/index"),
+    val legs = deletedPostingsLegs(s, dir, index, col("doc_id"))
+    require(BatchStore.hasDeletes(s, index),
       "tombstone set must survive compaction (the standing takedown ledger)")
-    val post = leg("bm25_post",
-      PostingsStream.bm25Serve(s, root + "/index", firstTokens(1, 4), 10),
-      col("score"))
-    val phrase = leg("phrase_post",
-      PostingsStream.phraseServe(s, root + "/index", firstTokens(2, 3), 10),
-      col("n_occ"))
-    pre.unionByName(post).unionByName(phrase)
+    legs
   }
 
-  private val t17Sql = {
-    val survivors = "(SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3)"
-    val bm = TextQueries.bm25SqlFrom(TextQueries.bm25SearchQueryCte,
-      docsFrom = survivors)
-    val ph = TextQueries.phraseSqlFrom("doc_id % 251 = 7",
-      docsFrom = survivors)
-    s"""SELECT 'bm25_pre' AS leg, query_id, rank, doc_id, score FROM ($bm)
-       |UNION ALL
-       |SELECT 'bm25_post' AS leg, query_id, rank, doc_id, score FROM ($bm)
-       |UNION ALL
-       |SELECT 'phrase_post' AS leg, query_id, rank, doc_id,
-       |  CAST(n_occ AS DOUBLE) AS score FROM ($ph)""".stripMargin
-  }
+  private val t17Sql = deletedPostingsSql("doc_id")
 
   /** T18 — deletion through the ANN lists store: the T13 store shape
     * (batch-built quantized lists + three streamed refresh waves
@@ -616,33 +585,18 @@ object StreamGateQueries extends QueryModule {
     * standing corpus and excludes the deleted vectors only from the
     * served lists; both legs must equal that replay. */
   private def t18IndexDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.Similarity
-    import graft.streaming.IndexStream
     val emb = Tables.embeddings(s, dir)
-    val standing = emb.filter(col("vec_id") % 5 =!= 4)
-    val delta = emb.filter(col("vec_id") % 5 === 4)
-      .select("vec_id", "embedding")
     val root = Dsl.tempDir("graft_t18_")
-    seedStandingIndex(standing, root)
-    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
-      writeOrderedBatches(delta, "vec_id", 3))
-    IndexStream.maintainIndex(stream, root + "/centroids", root + "/lists",
-      Dsl.tempDir("graft_t18_ckpt_")).awaitTermination()
+    annStore(s, emb, root).awaitTermination()
     IndexStream.deleteVectors(s, root + "/lists",
       emb.filter(col("vec_id") % 9 === 2).select("vec_id"))
-    def serve(leg: String) = Similarity.ivfServeQuantized(
-        emb.filter(col("vec_id") < 8),
-        s.read.parquet(root + "/centroids"),
-        IndexStream.readLists(s, root + "/lists"),
-        emb, 5, nprobe = 4, rescoreK = 15)
+    def serve(leg: String) = annServe(s, emb, root)
       .select(lit(leg).as("leg"), col("query_id"), col("rank"),
         col("cand_id"), round(col("cosine"), 6).as("cosine"))
     val pre = serve("pre").localCheckpoint(true)
     IndexStream.compactLists(s, root + "/lists", keepBatches = 1)
-    val leaked = s.read.parquet(s"$root/lists/graft_batch=-2")
-      .filter(col("cand_id") % 9 === 2).count()
-    require(leaked == 0,
-      s"compacted lists base still holds $leaked deleted vectors")
+    requireDropped(s, root + "/lists", col("cand_id") % 9 === 2,
+      "deleted vectors")
     pre.unionByName(serve("post"))
   }
 
@@ -709,17 +663,14 @@ object StreamGateQueries extends QueryModule {
     * and the recalls from scratch — so retrain + re-encode + swap
     * equals a from-scratch rebuild, certified in one hash compare. */
   private def t19QuantizerRefresh(s: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.Similarity
-    import graft.streaming.AnnIndex
     val k = 5
     val corpus = Tables.spread(plantedDrift(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val root = Dsl.tempDir("graft_t19_")
     AnnIndex.init(s, root, corpus.filter(col("vec_id") % 5 =!= 4),
       nlist = 16, lloydIters = 2)
-    val delta = corpus.filter(col("vec_id") % 5 === 4)
-    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
-      writeOrderedBatches(delta, "vec_id", 3))
+    val stream = orderedStream(s, corpus.filter(col("vec_id") % 5 === 4),
+      "vec_id", "vec_id BIGINT, embedding ARRAY<FLOAT>")
     AnnIndex.maintain(stream, root, Dsl.tempDir("graft_t19_ckpt_"))
       .awaitTermination()
     val queries = corpus.filter(col("vec_id") % 5 === 4 && col("vec_id") < 80)
@@ -785,28 +736,13 @@ object StreamGateQueries extends QueryModule {
     * positions must survive batching, replay semantics, and the
     * df-merging fold identically for both quorum shapes. */
   private def t20ProximityMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val watch = writeOrderedBatches(docs, "doc_id", 3)
-    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
-    val root = Dsl.tempDir("graft_t20_")
-    PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
-      positions = true).awaitTermination()
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    val queries = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), 2, 3), " ").as("query_text"))
-    def leg(name: String, df: DataFrame) =
-      df.select(lit(name).as("leg"), col("query_id"), col("rank"),
-        col("doc_id"), col("n_windows"))
-    leg("proximity",
-        PostingsStream.proximityServe(s, root + "/index", queries, k = 10,
-          slop = 2))
-      .unionByName(leg("near",
-        PostingsStream.nearServe(s, root + "/index", queries, k = 10,
-          slop = 2)))
+    val index = foldedPostings(s, docs, positions = true)
+    val queries = queryText(s, dir, queryDocs, 2, 3)
+    windowsLeg("proximity",
+        PostingsStream.proximityServe(s, index, queries, k = 10, slop = 2))
+      .unionByName(windowsLeg("near",
+        PostingsStream.nearServe(s, index, queries, k = 10, slop = 2)))
   }
 
   private val t20Sql = {
@@ -831,33 +767,14 @@ object StreamGateQueries extends QueryModule {
     * must not contract across removed stopwords), so the whole
     * analyzer-as-store-mode contract certifies in one hash compare. */
   private def t21AnalyzedMaintain(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.TextCorpus
-    import graft.streaming.PostingsStream
-    val mutated = Tables.documents(s, dir)
-      .select(col("doc_id"), expr(TextQueries.mutateSqlExpr).as("text"))
-    val watch = writeOrderedBatches(mutated, "doc_id", 3)
-    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
-    val root = Dsl.tempDir("graft_t21_")
-    PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
-      positions = true,
-      analyzer = Some(TextCorpus.Analyzer(lowercase = true,
-        stripPunct = true, stopwords = Seq("the", "a"))))
-      .awaitTermination()
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    def rawTokens(from: Int, len: Int) = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(expr(TextQueries.mutateSqlExpr)),
-          "\\s+"), from, len), " ").as("query_text"))
-    def leg(name: String, df: DataFrame, score: Column) =
-      df.select(lit(name).as("leg"), col("query_id"), col("rank"),
-        col("doc_id"), score.cast("double").as("score"))
-    leg("bm25",
-        PostingsStream.bm25Serve(s, root + "/index", rawTokens(1, 4), 10),
-        col("score"))
-      .unionByName(leg("phrase",
-        PostingsStream.phraseServe(s, root + "/index", rawTokens(2, 3), 10),
-        col("n_occ")))
+    val mutated = expr(TextQueries.mutateSqlExpr)
+    val index = foldedPostings(s,
+      Tables.documents(s, dir).select(col("doc_id"), mutated.as("text")),
+      positions = true, analyzer = stopAnalyzer)
+    scoredLeg("bm25", PostingsStream.bm25Serve(s, index,
+        queryText(s, dir, queryDocs, 1, 4, mutated), 10), col("score"))
+      .unionByName(scoredLeg("phrase", PostingsStream.phraseServe(s, index,
+        queryText(s, dir, queryDocs, 2, 3, mutated), 10), col("n_occ")))
   }
 
   private val t21Sql = {
@@ -894,103 +811,38 @@ object StreamGateQueries extends QueryModule {
     * to waves, batch boundaries, tombstones, and folds — so
     * in-stream deletion equals never-ingested in one hash compare. */
   private def t22StreamDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.Similarity
-    import graft.streaming.{BatchStore, IndexStream, PostingsStream}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    def addD(i: Int) = docs.filter(col("doc_id") % 3 === i)
-      .select(lit("add").as("kind"), col("doc_id"), col("text"))
-    def delD(cond: Column) = docs.filter(cond)
-      .select(lit("del").as("kind"), col("doc_id"),
-        lit(null).cast("string").as("text"))
     val dDel = col("doc_id") % 7 === 3
-    val dWatch = stageWaves(Seq(
-      addD(0),
-      addD(1).unionByName(delD(dDel && col("doc_id") % 3 =!= 2)),
-      addD(2).unionByName(delD(dDel && col("doc_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t22_")
-    val dstream = fileStream(s, "kind STRING, doc_id BIGINT, text STRING",
-      dWatch)
     // the postings and ANN-lists stores are disjoint: drain both
     // CONCURRENTLY (guide §2.6) and do each leg's admin/serve steps
     // after ITS drain lands
-    val postingsDrain = PostingsStream.maintainPostings(dstream,
-      root + "/index", root + "/ckpt",
-      positions = true, kindCol = Some("kind"))
-    // ANN leg: batch-built standing lists + three mixed delta waves;
-    // del rows (vec_id only, NULL embedding) tombstone every 9th vector
+    val postingsDrain = PostingsStream.maintainPostings(
+      fileStream(s, "kind STRING, doc_id BIGINT, text STRING",
+        mixedWaves(docs, "doc_id", dDel && col("doc_id") % 3 =!= 2,
+          dDel && col("doc_id") % 3 === 2)),
+      root + "/index", root + "/ckpt", positions = true,
+      kindCol = Some("kind"))
+    // ANN leg: del rows (vec_id only, NULL embedding) tombstone every
+    // 9th vector. vec_id % 9 = 2 forces vec_id ≡ 2 (mod 3), so the
+    // delete set is split across waves by PARITY instead — both
+    // cross-batch and same-batch add+del pairs occur
     val emb = Tables.embeddings(s, dir)
-    val standing = emb.filter(col("vec_id") % 5 =!= 4)
-    seedStandingIndex(standing, root)
-    def addV(i: Int) = emb.filter(col("vec_id") % 5 === 4 &&
-        col("vec_id") % 3 === i)
-      .select(lit("add").as("kind"), col("vec_id"), col("embedding"))
-    def delV(cond: Column) = emb.filter(cond)
-      .select(lit("del").as("kind"), col("vec_id"),
-        lit(null).cast("array<float>").as("embedding"))
-    // vec_id % 9 = 2 forces vec_id ≡ 2 (mod 3), so the delete set is
-    // split across waves by PARITY instead — both cross-batch and
-    // same-batch add+del pairs occur
     val vDel = col("vec_id") % 9 === 2
-    val vWatch = stageWaves(Seq(
-      addV(0),
-      addV(1).unionByName(delV(vDel && col("vec_id") % 2 === 0)),
-      addV(2).unionByName(delV(vDel && col("vec_id") % 2 === 1))))
-    val vstream = fileStream(s,
-      "kind STRING, vec_id BIGINT, embedding ARRAY<FLOAT>", vWatch)
-    val annDrain = IndexStream.maintainIndex(vstream,
-      root + "/centroids", root + "/lists",
-      Dsl.tempDir("graft_t22_ickpt_"), kindCol = Some("kind"))
+    val annDrain = annStore(s, emb, root,
+      Some((vDel && col("vec_id") % 2 === 0, vDel && col("vec_id") % 2 === 1)))
     postingsDrain.awaitTermination()
-    def firstTokens(from: Int, len: Int) = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), from, len), " ").as("query_text"))
-    def leg(name: String, df: DataFrame, score: Column) =
-      df.select(lit(name).as("leg"), col("query_id"), col("rank"),
-        col("doc_id").as("cand_id"), score.cast("double").as("score"))
-    // pre-compaction serve materialized NOW (the fold below rewrites
-    // the store state this plan reads — the t17 time-travel guard)
-    val pre = leg("bm25_pre",
-      PostingsStream.bm25Serve(s, root + "/index", firstTokens(1, 4), 10),
-      col("score")).localCheckpoint(true)
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    val leaked = s.read.parquet(s"$root/index/graft_batch=-2")
-      .filter(col("doc_id") % 7 === 3).count()
-    require(leaked == 0,
-      s"compacted base still holds $leaked rows of stream-deleted docs")
-    val post = leg("bm25_post",
-      PostingsStream.bm25Serve(s, root + "/index", firstTokens(1, 4), 10),
-      col("score"))
-    val phrase = leg("phrase_post",
-      PostingsStream.phraseServe(s, root + "/index", firstTokens(2, 3), 10),
-      col("n_occ"))
+    val postings = deletedPostingsLegs(s, dir, root + "/index",
+      col("doc_id").as("cand_id"))
     annDrain.awaitTermination()
-    val ann = Similarity.ivfServeQuantized(emb.filter(col("vec_id") < 8),
-        s.read.parquet(root + "/centroids"),
-        IndexStream.readLists(s, root + "/lists"),
-        emb, 5, nprobe = 4, rescoreK = 15)
-      .select(lit("ann").as("leg"), col("query_id"), col("rank"),
-        col("cand_id"), round(col("cosine"), 6).cast("double").as("score"))
-    pre.unionByName(post).unionByName(phrase).unionByName(ann)
+    postings.unionByName(scoredLeg("ann", annServe(s, emb, root),
+      round(col("cosine"), 6), col("cand_id")))
   }
 
   private val t22Sql = {
-    val survivors = "(SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3)"
-    val bm = TextQueries.bm25SqlFrom(TextQueries.bm25SearchQueryCte,
-      docsFrom = survivors)
-    val ph = TextQueries.phraseSqlFrom("doc_id % 251 = 7",
-      docsFrom = survivors)
     val ann = SimilarityQueries.ivfQServeSql(Some("vec_id % 5 <> 4"),
       Some("vec_id % 9 <> 2"))
-    s"""SELECT 'bm25_pre' AS leg, query_id, rank, doc_id AS cand_id, score
-       |FROM ($bm)
-       |UNION ALL
-       |SELECT 'bm25_post' AS leg, query_id, rank, doc_id AS cand_id, score
-       |FROM ($bm)
-       |UNION ALL
-       |SELECT 'phrase_post' AS leg, query_id, rank, doc_id AS cand_id,
-       |  CAST(n_occ AS DOUBLE) AS score FROM ($ph)
+    s"""${deletedPostingsSql("cand_id")}
        |UNION ALL
        |SELECT 'ann' AS leg, query_id, rank, cand_id, cosine AS score
        |FROM ($ann)""".stripMargin
@@ -1013,60 +865,28 @@ object StreamGateQueries extends QueryModule {
     * the replay-convergent semantics) — and derives the live set as
     * replay-admitted minus everything deleted. */
   private def t23AdmissionDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.BatchStore
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    def adds(i: Int) = docs.filter(col("doc_id") % 3 === i)
-      .select(lit("add").as("kind"), col("doc_id"), col("text"))
-    def dels(cond: Column) = docs.filter(cond)
-      .select(lit("del").as("kind"), col("doc_id"),
-        lit(null).cast("string").as("text"))
     val d = col("doc_id") % 11 === 6
-    val watch = stageWaves(Seq(
-      adds(0),
-      adds(1).unionByName(dels(d && col("doc_id") % 3 =!= 2)),
-      adds(2).unionByName(dels(d && col("doc_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t23_")
-    val stream = fileStream(s, "kind STRING, doc_id LONG, text STRING", watch)
-    DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
-      s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
-      portable = true, kindCol = Some("kind"))
-      .awaitTermination()
-    val verdicts = s.read.parquet(s"$root/verdicts")
-      .select(lit("verdict").as("leg"), col("doc_id"), col("verdict"),
-        col("dup_of"), col("best_agreement"), col("n_dups"), col("batch_id"))
-    val live = BatchStore.readLive(s, s"$root/store", "id")(_.select("id"))
-      .select(lit("store").as("leg"), col("id").as("doc_id"),
-        lit(null).cast("string").as("verdict"),
-        lit(null).cast("long").as("dup_of"),
-        lit(null).cast("double").as("best_agreement"),
-        lit(null).cast("long").as("n_dups"),
-        lit(null).cast("long").as("batch_id"))
-    verdicts.unionByName(live)
+    val stream = fileStream(s, "kind STRING, doc_id LONG, text STRING",
+      mixedWaves(docs, "doc_id", d && col("doc_id") % 3 =!= 2,
+        d && col("doc_id") % 3 === 2))
+    admit(stream, root, kindCol = Some("kind")).awaitTermination()
+    verdictsAndStore(s, root, "best_agreement", col("best_agreement"))
   }
 
   private val t23Sql = {
     // wave 1's dels: the D docs of slices 0-1 — they mask wave 1's OWN
     // prior-corpus screen (the pre-mask semantics) and every later one;
     // by wave 2 the cumulative delete set is all of doc_id % 11 = 6
-    val del1 = "(c.doc_id % 11 = 6 AND c.doc_id % 3 <> 2)"
+    val deleted = (i: Int) =>
+      if (i == 1) "c.doc_id % 11 = 6 AND c.doc_id % 3 <> 2"
+      else "c.doc_id % 11 = 6"
     s"""WITH ${DedupQueries.minhashOracleCtes},
-       |${stageSql(0, "")},
-       |${stageSql(1,
-            s"OR (c.doc_id IN (SELECT doc_id FROM adm0) AND NOT $del1)")},
-       |${stageSql(2,
-            s"OR (c.doc_id IN (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1) AND c.doc_id % 11 <> 6)")}
-       |SELECT 'verdict' AS leg, doc_id, verdict, dup_of, best_agreement,
-       |  n_dups, batch_id FROM
-       |  (SELECT * FROM v0 UNION ALL SELECT * FROM v1
-       |   UNION ALL SELECT * FROM v2)
-       |UNION ALL
-       |SELECT 'store' AS leg, doc_id, CAST(NULL AS VARCHAR) AS verdict,
-       |  CAST(NULL AS BIGINT) AS dup_of, CAST(NULL AS DOUBLE)
-       |    AS best_agreement,
-       |  CAST(NULL AS BIGINT) AS n_dups, CAST(NULL AS BIGINT) AS batch_id
-       |FROM (SELECT doc_id FROM adm0 UNION ALL SELECT doc_id FROM adm1
-       |      UNION ALL SELECT doc_id FROM adm2)
-       |WHERE doc_id % 11 <> 6""".stripMargin
+       |${stagesSql(3, deleted = deleted)}
+       |${verdictsAndStoreSql("best_agreement", verdictsSql(3),
+            s"SELECT doc_id FROM (${admittedSql(3)}) WHERE doc_id % 11 <> 6")}
+       |""".stripMargin
   }
 
   /** T24 — the hybrid-retrieval capstone REBASED onto the versioned
@@ -1084,77 +904,35 @@ object StreamGateQueries extends QueryModule {
     * identity) with the T16 fusion replay, so maintenance + refresh +
     * both serves + fusion certify in one hash compare. */
   private def t24HybridRefresh(s: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.Similarity
-    import graft.streaming.{AnnIndex, PostingsStream}
-    val k = 5
     val root = Dsl.tempDir("graft_t24_")
     // the sparse postings store is disjoint from the ANN lifecycle:
     // start its drain FIRST so the whole init→drain→refresh dense leg
     // overlaps it (guide §2.6)
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val dstream = fileStream(s, "doc_id BIGINT, text STRING",
-      writeOrderedBatches(docs, "doc_id", 3))
-    val sparseDrain = PostingsStream.maintainPostings(dstream,
-      root + "/postings", Dsl.tempDir("graft_t24_pckpt_"))
+    val sparseDrain = postingsDrain(s,
+      Tables.documents(s, dir).select("doc_id", "text"), root + "/postings")
     val corpus = Tables.spread(plantedDrift(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     AnnIndex.init(s, root + "/ann", corpus.filter(col("vec_id") % 5 =!= 4),
       nlist = 16, lloydIters = 2)
-    val delta = corpus.filter(col("vec_id") % 5 === 4)
-    val vstream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
-      writeOrderedBatches(delta, "vec_id", 3))
+    val vstream = orderedStream(s, corpus.filter(col("vec_id") % 5 === 4),
+      "vec_id", "vec_id BIGINT, embedding ARRAY<FLOAT>")
     AnnIndex.maintain(vstream, root + "/ann", Dsl.tempDir("graft_t24_ckpt_"))
       .awaitTermination()
     val v2 = AnnIndex.refresh(s, root + "/ann", corpus,
       nlist = 16, lloydIters = 2)
     require(v2 == 2L, s"refresh must publish version 2, got $v2")
     val dense = AnnIndex.serve(s, root + "/ann",
-        corpus.filter(col("vec_id") < 8), corpus, k, nprobe = 4)
-      .select("query_id", "cand_id", "rank")
+      corpus.filter(col("vec_id") < 8), corpus, 5, nprobe = 4)
     sparseDrain.awaitTermination()
-    val queries = Tables.documents(s, dir)
-      .filter(col("doc_id") < 8)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), 1, 4), " ").as("query_text"))
-    val sparse = PostingsStream.bm25Serve(s, root + "/postings", queries, k)
-      .withColumnRenamed("doc_id", "cand_id")
-    val fused = Similarity.rrfFuse(Seq(sparse, dense), k)
+    val fused = rrfServe(s, dir, root + "/postings", dense)
     corpus.unpersist()
     fused
   }
 
-  private val t24Sql = {
-    val sparseQueryCte =
-      """SELECT doc_id AS query_id,
-        |    array_to_string(list_slice(
-        |      string_split_regex(trim(text), '\s+'), 1, 4), ' ') AS query_text
-        |  FROM documents WHERE doc_id < 8""".stripMargin
-    // the refresh identity: the post-swap index IS a from-scratch
-    // quantized build over the full planted (drifted) corpus
-    val freshIvf = SimilarityQueries.ivfQServeSql(None, None,
-      plantedDriftSql, "q.vec_id < 8", nprobe = 4)
-    s"""WITH ${TextQueries.bm25OracleCtes(sparseQueryCte)},
-       |hivf AS ($freshIvf),
-       |hterms AS (
-       |  SELECT query_id, cand_id,
-       |    1000000000 // (60 + CAST(rank AS BIGINT)) AS term_fp
-       |  FROM (SELECT query_id, doc_id AS cand_id, rank FROM bmranked
-       |          WHERE rank <= 5
-       |        UNION ALL
-       |        SELECT query_id, cand_id, rank FROM hivf)),
-       |hfused AS (
-       |  SELECT query_id, cand_id, CAST(SUM(term_fp) AS BIGINT) AS rrf_fp
-       |  FROM hterms GROUP BY 1, 2),
-       |hranked AS (
-       |  SELECT query_id, cand_id, rrf_fp,
-       |    row_number() OVER (PARTITION BY query_id
-       |                       ORDER BY rrf_fp DESC, cand_id) AS rank
-       |  FROM hfused)
-       |SELECT query_id, CAST(rank AS INT) AS rank, cand_id,
-       |  CAST(rrf_fp AS DOUBLE) / 1000000000.0 AS rrf
-       |FROM hranked WHERE rank <= 5""".stripMargin
-  }
+  // the refresh identity: the post-swap index IS a from-scratch
+  // quantized build over the full planted (drifted) corpus
+  private val t24Sql = rrfSql(SimilarityQueries.ivfQServeSql(None, None,
+    plantedDriftSql, "q.vec_id < 8", nprobe = 4))
 
   /** M8 — proximity AND unordered NEAR over an ANALYZED positional
     * store, with a PLANTED stopword-inside-window case: every doc gets
@@ -1173,47 +951,30 @@ object StreamGateQueries extends QueryModule {
     * (`TextCorpus.positional` keeps stopworded slots) under slop, where
     * it actually bites. */
   private def m8ProximityAnalyzed(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.TextCorpus
-    import graft.streaming.PostingsStream
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val arr = split(trim(coalesce(col("text"), lit(""))), "\\s+")
     val mutated = docs.select(col("doc_id"),
       array_join(concat(slice(arr, 1, 2), array(lit("the"), lit("a")),
         slice(arr, lit(3), greatest(size(arr) - 2, lit(0)))), " ")
         .as("text"))
-    val watch = writeOrderedBatches(mutated, "doc_id", 3)
-    val stream = fileStream(s, "doc_id BIGINT, text STRING", watch)
-    val root = Dsl.tempDir("graft_m8pxan_")
-    PostingsStream.maintainPostings(stream, root + "/index", root + "/ckpt",
-      positions = true,
-      analyzer = Some(TextCorpus.Analyzer(lowercase = true,
-        stripPunct = true, stopwords = Seq("the", "a"))))
-      .awaitTermination()
-    PostingsStream.compactIndex(s, root + "/index", keepBatches = 1)
-    val queries = Tables.documents(s, dir)
-      .filter(col("doc_id") % 251 === 7)
-      .select(col("doc_id").as("query_id"),
-        array_join(slice(split(trim(coalesce(col("text"), lit(""))),
-          "\\s+"), 2, 2), " ").as("query_text"))
-    def leg(name: String, df: DataFrame) =
-      df.select(lit(name).as("leg"), col("query_id"), col("rank"),
-        col("doc_id"), col("n_windows"))
+    val index = foldedPostings(s, mutated, positions = true,
+      analyzer = stopAnalyzer)
+    val queries = queryText(s, dir, queryDocs, 2, 2)
     // ONE positional-store scan shared by all four serve legs: read +
     // tombstone-mask once and materialize it EAGERLY — four
     // concurrently-scheduled union branches would otherwise each
     // re-scan — as a local checkpoint, which (unlike a persist) leaves
     // no cache entry behind the query
-    val pos = PostingsStream.readPositional(s, root + "/index")
-      .localCheckpoint()
-    val analyzer = PostingsStream.storeAnalyzer(s, root + "/index")
-    leg("prox_s1", TextCorpus.proximityMatchTopK(pos, queries, 10, 1,
+    val pos = PostingsStream.readPositional(s, index).localCheckpoint()
+    val analyzer = PostingsStream.storeAnalyzer(s, index)
+    windowsLeg("prox_s1", TextCorpus.proximityMatchTopK(pos, queries, 10, 1,
         analyzer = analyzer))
-      .unionByName(leg("prox_s2", TextCorpus.proximityMatchTopK(pos,
+      .unionByName(windowsLeg("prox_s2", TextCorpus.proximityMatchTopK(pos,
         queries, 10, 2, analyzer = analyzer)))
-      .unionByName(leg("near_s1", TextCorpus.nearMatchTopK(pos, queries,
-        10, 1, analyzer = analyzer)))
-      .unionByName(leg("near_s2", TextCorpus.nearMatchTopK(pos, queries,
-        10, 2, analyzer = analyzer)))
+      .unionByName(windowsLeg("near_s1", TextCorpus.nearMatchTopK(pos,
+        queries, 10, 1, analyzer = analyzer)))
+      .unionByName(windowsLeg("near_s2", TextCorpus.nearMatchTopK(pos,
+        queries, 10, 2, analyzer = analyzer)))
   }
 
   private val m8ProximityAnalyzedSql = {
@@ -1264,73 +1025,44 @@ object StreamGateQueries extends QueryModule {
     * surviving doc may keep a deleted doc's id as its CLUSTER LABEL —
     * labels are opaque names, not living rows.) */
   private def t25LedgerDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.{BatchStore, DeltaLedger, SampleStream,
-      ViewMaintenance}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val root = Dsl.tempDir("graft_t25_")
-    val watch = writeOrderedBatches(docs, "doc_id", 2)
-    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
     // the ledger and sample stores are disjoint: drain both
     // CONCURRENTLY (guide §2.6), then run each store's takedown after
     // ITS drain lands
-    val admitDrain = DedupStream.admitDocuments(stream, s"$root/store",
-      s"$root/verdicts", s"$root/ckpt",
-      bands = 8, rowsPerBand = 4, minAgreement = 0.5,
-      portable = true, labelsDir = Some(s"$root/labels"))
+    val admitDrain = admit(orderedStream(s, docs, "doc_id",
+      "doc_id LONG, text STRING", k = 2), root, labels = true)
     val sdocs = Tables.documents(s, dir).select("doc_id", "n_chars")
-    val sstream = fileStream(s, "doc_id LONG, n_chars LONG",
-      writeOrderedBatches(sdocs, "doc_id", 2))
-    val sampleDrain = SampleStream.maintainSample(sstream, s"$root/sample",
-      s"$root/sckpt", k = 50, salt = "ssam",
-      idCol = "doc_id", weightCol = "n_chars")
+    val sampled = sampleDrain(orderedStream(s, sdocs, "doc_id",
+      "doc_id LONG, n_chars LONG", k = 2), s"$root/sample")
     admitDrain.awaitTermination()
     val dels = docs.filter(col("doc_id") % 11 === 5).select("doc_id")
     DeltaLedger.delete(s, s"$root/labels", dels)
     DeltaLedger.compact(s, s"$root/labels", keepBatches = 1)
-    val leaked = s.read.parquet(s"$root/labels/graft_batch=-2")
-      .filter(col("doc_id") % 11 === 5).count()
-    require(leaked == 0,
-      s"compacted ledger base still holds $leaked deleted label rows")
+    requireDropped(s, s"$root/labels", col("doc_id") % 11 === 5,
+      "deleted label rows")
     val ledger = DeltaLedger.read(s, s"$root/labels")
       .select(lit("ledger").as("leg"), col("doc_id"),
         col("cluster_id").as("val"))
-    sampleDrain.awaitTermination()
-    SampleStream.deleteFromSample(s, s"$root/sample", dels)
-    val sample = ViewMaintenance.readLatest(s, s"$root/sample").get
-      .select(lit("sample").as("leg"), col("sample_id").as("doc_id"),
-        col("weight").cast("long").as("val"))
+    sampled.awaitTermination()
+    SampleStream.deleteFromSample(s, s"$root/sample/state", dels)
+    val sample = readSample(s, s"$root/sample")
+      .select(lit("sample").as("leg"), col("doc_id"), col("weight").as("val"))
     ledger.unionByName(sample)
   }
 
   private val t25Sql =
     s"""WITH RECURSIVE ${DedupQueries.minhashOracleCtes},
-       |${stageSql(0, "", 2)},
-       |${stageSql(1, "OR c.doc_id IN (SELECT doc_id FROM adm0)", 2)},
-       |ed0 AS (
-       |  SELECT new_id AS u, dup_of AS v FROM h0
-       |  UNION ALL SELECT new_id, dup_of FROM h1),
-       |e AS (SELECT u, v FROM ed0 UNION ALL SELECT v, u FROM ed0),
-       |reach AS (
-       |  SELECT u, v FROM e
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
-       |ccl AS (
-       |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-       |  FROM reach GROUP BY u)
+       |${stagesSql(2, mod = 2)},
+       |${closureSql(2)}
        |SELECT 'ledger' AS leg, d.doc_id,
        |  COALESCE(c.cluster_id, d.doc_id) AS val
        |FROM documents d LEFT JOIN ccl c USING (doc_id)
        |WHERE d.doc_id % 11 <> 5
        |UNION ALL
        |SELECT 'sample' AS leg, doc_id, CAST(n_chars AS BIGINT) AS val
-       |FROM (
-       |  SELECT doc_id, n_chars,
-       |    ROW_NUMBER() OVER (ORDER BY
-       |      CAST(${Dsl.hex60Sql("'ssam|' || doc_id::VARCHAR")} AS DOUBLE)
-       |        / CAST(n_chars AS DOUBLE) ASC,
-       |      doc_id) AS rn
-       |  FROM documents)
-       |WHERE rn <= 50 AND doc_id % 11 <> 5""".stripMargin
+       |FROM documents
+       |WHERE doc_id IN (${sampleSql("TRUE")}) AND doc_id % 11 <> 5""".stripMargin
 
   /** T26 — streamed tombstones through the maintained SAMPLE: three
     * mixed add/delete waves (doc_id % 3 slices; waves 1-2 carry `del`
@@ -1348,57 +1080,35 @@ object StreamGateQueries extends QueryModule {
     * composition. */
   private def t26StreamSampleDelete(s: SparkSession, dir: String)
       : DataFrame = {
-    import graft.streaming.{SampleStream, ViewMaintenance}
     val docs = Tables.documents(s, dir).select("doc_id", "n_chars")
-    def adds(i: Int) = docs.filter(col("doc_id") % 3 === i)
-      .select(lit("add").as("kind"), col("doc_id"), col("n_chars"))
-    def dels(cond: Column) = docs.filter(cond)
-      .select(lit("del").as("kind"), col("doc_id"),
-        lit(null).cast("long").as("n_chars"))
     val d = col("doc_id") % 13 === 4
-    val watch = stageWaves(Seq(
-      adds(0),
-      adds(1).unionByName(dels(d && col("doc_id") % 3 =!= 2)),
-      adds(2).unionByName(dels(d && col("doc_id") % 3 === 2))))
     val root = Dsl.tempDir("graft_t26_")
-    val stream = fileStream(s, "kind STRING, doc_id LONG, n_chars LONG", watch)
-    SampleStream.maintainSample(stream, s"$root/state", s"$root/ckpt",
-        k = 50, salt = "ssam", idCol = "doc_id", weightCol = "n_chars",
-        kindCol = Some("kind"))
-      .awaitTermination()
-    ViewMaintenance.readLatest(s, s"$root/state").get
-      .select(col("sample_id").as("doc_id"),
-        col("weight").cast("long").as("weight"))
+    val stream = fileStream(s, "kind STRING, doc_id LONG, n_chars LONG",
+      mixedWaves(docs, "doc_id", d && col("doc_id") % 3 =!= 2,
+        d && col("doc_id") % 3 === 2))
+    sampleDrain(stream, root, kindCol = Some("kind")).awaitTermination()
+    readSample(s, root)
   }
 
-  private val t26Sql = {
-    val pr = s"CAST(${Dsl.hex60Sql("'ssam|' || doc_id::VARCHAR")} AS DOUBLE)" +
-      " / CAST(n_chars AS DOUBLE)"
-    def top50(from: String) =
-      s"""SELECT doc_id FROM (
-         |    SELECT doc_id, ROW_NUMBER() OVER (ORDER BY $pr ASC, doc_id)
-         |      AS rn
-         |    FROM documents WHERE $from) WHERE rn <= 50""".stripMargin
-    s"""WITH t0 AS (${top50("doc_id % 3 = 0")}),
+  private val t26Sql =
+    s"""WITH t0 AS (${sampleSql("doc_id % 3 = 0")}),
        |u1 AS (SELECT doc_id FROM t0
        |       UNION ALL SELECT doc_id FROM documents WHERE doc_id % 3 = 1),
-       |t1 AS (${top50("doc_id IN (SELECT doc_id FROM u1)")}),
+       |t1 AS (${sampleSql("doc_id IN (SELECT doc_id FROM u1)")}),
        |t1s AS (SELECT doc_id FROM t1
        |        WHERE NOT (doc_id % 13 = 4 AND doc_id % 3 <> 2)),
        |u2 AS (SELECT doc_id FROM t1s
        |       UNION ALL SELECT doc_id FROM documents WHERE doc_id % 3 = 2),
-       |t2 AS (${top50("doc_id IN (SELECT doc_id FROM u2)")})
+       |t2 AS (${sampleSql("doc_id IN (SELECT doc_id FROM u2)")})
        |SELECT doc_id, CAST(n_chars AS BIGINT) AS weight
        |FROM documents
        |WHERE doc_id IN (SELECT doc_id FROM t2)
        |  AND NOT (doc_id % 13 = 4 AND doc_id % 3 = 2)""".stripMargin
-  }
 
   /** Append one more single-file wave to an existing watch dir, mtime
-    * stamped NOW — strictly after anything [[stageWaves]] /
-    * [[writeOrderedBatches]] stamped (their base rides an hour in the
-    * past), so a second drain over the same checkpoint picks it up as
-    * the next batch. */
+    * stamped NOW — strictly after anything [[stageWaves]] stamped (its
+    * base rides an hour in the past), so a second drain over the same
+    * checkpoint picks it up as the next batch. */
   private def appendWave(watch: String, df: DataFrame, name: String): Unit = {
     val stage = Dsl.tempDir("graft_stream_stage_")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
@@ -1426,13 +1136,7 @@ object StreamGateQueries extends QueryModule {
     * aggregate over survivors + wave 2 — batch-blind, fold-blind,
     * delete-blind. */
   private def t27ViewDelete(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .select("event_id", "user_id", "event_type")
-    val measures = Seq(
-      Measure("n", "count", lit(1)),
-      Measure("sum_uid", "sum", col("user_id")),
-      Measure("min_id", "min", col("event_id")),
-      Measure("max_id", "max", col("event_id")))
+    val ev = viewEvents(s, dir)
     val w01 = ev.filter(col("event_id") % 3 =!= 2)
     val watch = stageWaves(Seq(
       ev.filter(col("event_id") % 3 === 0),
@@ -1443,7 +1147,7 @@ object StreamGateQueries extends QueryModule {
         fileStream(s, "event_id BIGINT, user_id BIGINT, event_type STRING",
           watch),
         s"$root/state", s"$root/ckpt",
-        keys = Seq("event_type"), measures = measures).awaitTermination()
+        keys = Seq("event_type"), measures = viewMeasures).awaitTermination()
     drain()
     // the takedown set: every 7th-mod-1 folded row plus each group's
     // min/max holder among the folded rows — the extrema recompute trap
@@ -1456,33 +1160,29 @@ object StreamGateQueries extends QueryModule {
     val survivors = w01.join(dels.select("event_id"),
       Seq("event_id"), "left_anti")
     ViewMaintenance.deleteFromView(s, s"$root/state",
-      Seq("event_type"), measures, dels, survivors)
+      Seq("event_type"), viewMeasures, dels, survivors)
     // mid-lifecycle: wave 2 folds onto the post-delete state through
     // the SAME checkpoint
     appendWave(watch, ev.filter(col("event_id") % 3 === 2), "b2.parquet")
     drain()
-    ViewMaintenance.readLatest(s, s"$root/state").get
-      .select("event_type", "n", "sum_uid", "min_id", "max_id")
+    readView(s, root)
   }
 
   private val t27Sql =
-    """WITH w01 AS (
-      |  SELECT event_id, user_id, event_type FROM events
-      |  WHERE event_id % 3 <> 2),
-      |mm AS (
-      |  SELECT event_type, MIN(event_id) AS mn, MAX(event_id) AS mx
-      |  FROM w01 GROUP BY 1),
-      |del AS (
-      |  SELECT w.event_id FROM w01 w JOIN mm USING (event_type)
-      |  WHERE w.event_id % 7 = 1 OR w.event_id = mm.mn
-      |     OR w.event_id = mm.mx),
-      |surv AS (
-      |  SELECT event_id, user_id, event_type FROM events
-      |  WHERE event_id NOT IN (SELECT event_id FROM del))
-      |SELECT event_type, COUNT(*) AS n,
-      |  CAST(SUM(user_id) AS BIGINT) AS sum_uid,
-      |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
-      |FROM surv GROUP BY 1""".stripMargin
+    s"""WITH w01 AS (
+       |  SELECT event_id, user_id, event_type FROM events
+       |  WHERE event_id % 3 <> 2),
+       |mm AS (
+       |  SELECT event_type, MIN(event_id) AS mn, MAX(event_id) AS mx
+       |  FROM w01 GROUP BY 1),
+       |del AS (
+       |  SELECT w.event_id FROM w01 w JOIN mm USING (event_type)
+       |  WHERE w.event_id % 7 = 1 OR w.event_id = mm.mn
+       |     OR w.event_id = mm.mx),
+       |surv AS (
+       |  SELECT event_id, user_id, event_type FROM events
+       |  WHERE event_id NOT IN (SELECT event_id FROM del))
+       |${viewSql("surv")}""".stripMargin
 
   /** T29 — STREAMED tombstones through the maintained VIEW
     * ([[ViewMaintenance.maintain]] with `kindCol`): three mixed waves
@@ -1500,26 +1200,11 @@ object StreamGateQueries extends QueryModule {
     * earlier waves' `_ids` dirs into a base generation mid-lifecycle —
     * the lifecycle bound on the rare-delete path's listing cost). */
   private def t29StreamViewDelete(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .select("event_id", "user_id", "event_type")
-    val measures = Seq(
-      Measure("n", "count", lit(1)),
-      Measure("sum_uid", "sum", col("user_id")),
-      Measure("min_id", "min", col("event_id")),
-      Measure("max_id", "max", col("event_id")))
-    def adds(i: Int) = ev.filter(col("event_id") % 3 === i)
-      .select(lit("add").as("kind"), col("event_id"), col("user_id"),
-        col("event_type"))
-    def dels(cond: Column) = ev.filter(cond)
-      .select(lit("del").as("kind"), col("event_id"),
-        lit(null).cast("long").as("user_id"),
-        lit(null).cast("string").as("event_type"))
+    val ev = viewEvents(s, dir)
     val dMain = col("event_id") % 13 === 2 || col("event_id") < 3
-    val watch = stageWaves(Seq(
-      adds(0),
-      adds(1).unionByName(dels(dMain && col("event_id") % 3 =!= 1)),
-      adds(2).unionByName(dels((dMain && col("event_id") % 3 === 1) ||
-        (col("event_id") % 13 === 7 && col("event_id") % 3 === 2)))))
+    val watch = mixedWaves(ev, "event_id", dMain && col("event_id") % 3 =!= 1,
+      (dMain && col("event_id") % 3 === 1) ||
+        (col("event_id") % 13 === 7 && col("event_id") % 3 === 2))
     val root = Dsl.tempDir("graft_t29_")
     val stream = fileStream(s,
       "kind STRING, event_id BIGINT, user_id BIGINT, event_type STRING", watch)
@@ -1529,22 +1214,17 @@ object StreamGateQueries extends QueryModule {
     // retraction's answer (union is order-free, the survivor join is
     // set-semantics)
     ViewMaintenance.maintain(stream, s"$root/state", s"$root/ckpt",
-        keys = Seq("event_type"), measures = measures,
+        keys = Seq("event_type"), measures = viewMeasures,
         kindCol = Some("kind"), idCol = "event_id", corpus = Some(ev),
         compactIdsOver = Some(1))
       .awaitTermination()
-    ViewMaintenance.readLatest(s, s"$root/state").get
-      .select("event_type", "n", "sum_uid", "min_id", "max_id")
+    readView(s, root)
   }
 
-  private val t29Sql =
-    """SELECT event_type, COUNT(*) AS n,
-      |  CAST(SUM(user_id) AS BIGINT) AS sum_uid,
-      |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
-      |FROM events
+  private val t29Sql = viewSql(
+    """events
       |WHERE NOT (event_id % 13 = 2 OR event_id < 3
-      |           OR (event_id % 13 = 7 AND event_id % 3 = 2))
-      |GROUP BY 1""".stripMargin
+      |           OR (event_id % 13 = 7 AND event_id % 3 = 2))""".stripMargin)
 
   /** The SYNTHETIC clustered corpus for the drift-policy gate — exact
     * integer components, so both engines see identical vectors with
@@ -1599,15 +1279,13 @@ object StreamGateQueries extends QueryModule {
     * nprobe 4 — so WHEN the policy fires is pinned by the same hash
     * that pins WHAT the rebuild computes. */
   private def t28PolicyRefresh(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.{AnnIndex, BatchStore}
     val corpus = Tables.spread(clusteredCorpus(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val root = Dsl.tempDir("graft_t28_")
     AnnIndex.init(s, root, corpus.filter(col("vec_id") % 5 =!= 4),
       nlist = 16, lloydIters = 2)
-    val delta = corpus.filter(col("vec_id") % 5 === 4)
-    val stream = fileStream(s, "vec_id BIGINT, embedding ARRAY<FLOAT>",
-      writeOrderedBatches(delta, "vec_id", 3))
+    val stream = orderedStream(s, corpus.filter(col("vec_id") % 5 === 4),
+      "vec_id", "vec_id BIGINT, embedding ARRAY<FLOAT>")
     // production corpus source: the float vectors sit in an
     // admitVectors-shaped BatchStore the trigger reads AT REFRESH TIME
     // (pointer filter + tombstone mask + pinned schema) — the pinned-
@@ -1654,47 +1332,36 @@ object StreamGateQueries extends QueryModule {
     * same-batch vectors — exactly the [[graft.dedup.Dedup
     * .embeddingIncremental]] contract. */
   private def streamSemantic(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.BatchStore
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val planes = graft.dedup.Dedup.choosePlanes(math.max(1L, emb.count()))
-    val watch = writeOrderedBatches(
-      emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id", 3)
     val root = Dsl.tempDir("graft_m8ssem_")
-    val stream = fileStream(s, "doc_id BIGINT, embedding ARRAY<FLOAT>", watch)
+    val stream = orderedStream(s,
+      emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id",
+      "doc_id BIGINT, embedding ARRAY<FLOAT>")
     DedupStream.admitVectors(stream, s"$root/store", s"$root/verdicts",
         s"$root/ckpt", planes = planes, minCosine = 0.4, portable = true)
       .awaitTermination()
-    val verdicts = s.read.parquet(s"$root/verdicts")
-      .select(lit("verdict").as("leg"), col("doc_id"), col("verdict"),
-        col("dup_of"), round(col("best_cosine"), 6).as("best_cosine"),
-        col("n_dups"), col("batch_id"))
-    val live = BatchStore.read(s, s"$root/store")
-      .select(lit("store").as("leg"), col("id").as("doc_id"),
-        lit(null).cast("string").as("verdict"),
-        lit(null).cast("long").as("dup_of"),
-        lit(null).cast("double").as("best_cosine"),
-        lit(null).cast("long").as("n_dups"),
-        lit(null).cast("long").as("batch_id"))
-    verdicts.unionByName(live)
+    verdictsAndStore(s, root, "best_cosine", round(col("best_cosine"), 6))
   }
 
-  /** The three-stage semantic-admission replay, parameterized by the
-    * later stages' prior-admitted candidate extras (where the
-    * streamed-tombstone variant injects its cumulative delete
-    * exclusions — the pre-mask timing) and the live-set filter. */
-  private def streamSemanticSqlFrom(adm1Extra: String, adm2Extra: String,
-                                    liveWhere: String): String = {
+  /** The three-stage semantic-admission replay: stage i screens against
+    * earlier same-batch vectors and the vectors prior stages admitted,
+    * less `deleted(i)` (where the streamed-tombstone variant injects its
+    * cumulative delete exclusions — the pre-mask timing); the live set
+    * is everything admitted, filtered by `liveWhere`. */
+  private def streamSemanticSqlFrom(deleted: Int => String = _ => "",
+                                    liveWhere: String = ""): String = {
     def cos(a: String, b: String) =
       s"""list_inner_product($a, $b) /
          |      (sqrt(list_inner_product($a, $a)) *
          |       sqrt(list_inner_product($b, $b)))""".stripMargin
-    def stage(i: Int, admitted: String) =
+    def stage(i: Int) =
       s"""sc$i AS (
          |  SELECT DISTINCT n.vec_id AS new_id, c.vec_id AS cand_id
          |  FROM sb n JOIN sb c ON n.bucket = c.bucket
          |  WHERE n.vec_id % 3 = $i AND (
          |        (c.vec_id % 3 = $i AND c.vec_id < n.vec_id)
-         |        $admitted)),
+         |        ${priorSql(i, "vec_id", "sadm", deleted(i))})),
          |sa$i AS (
          |  SELECT i.new_id, i.cand_id, ${cos("en.v", "ec.v")} AS cosine
          |  FROM sc$i i
@@ -1723,28 +1390,14 @@ object StreamGateQueries extends QueryModule {
        |  FROM embeddings),
        |sb AS (SELECT vec_id, ${OracleVectors.sizedBucketSql(64)} AS bucket
        |       FROM se CROSS JOIN p),
-       |${stage(0, "")},
-       |${stage(1, adm1Extra)},
-       |${stage(2, adm2Extra)}
-       |SELECT 'verdict' AS leg, doc_id, verdict, dup_of, best_cosine,
-       |  n_dups, batch_id
-       |FROM (SELECT * FROM sv0 UNION ALL SELECT * FROM sv1
-       |      UNION ALL SELECT * FROM sv2)
-       |UNION ALL
-       |SELECT 'store' AS leg, vec_id AS doc_id,
-       |  CAST(NULL AS VARCHAR) AS verdict, CAST(NULL AS BIGINT) AS dup_of,
-       |  CAST(NULL AS DOUBLE) AS best_cosine, CAST(NULL AS BIGINT) AS n_dups,
-       |  CAST(NULL AS BIGINT) AS batch_id
-       |FROM (SELECT vec_id FROM sadm0 UNION ALL SELECT vec_id FROM sadm1
-       |      UNION ALL SELECT vec_id FROM sadm2)
-       |$liveWhere""".stripMargin
+       |${(0 until 3).map(stage).mkString(",\n")}
+       |${verdictsAndStoreSql("best_cosine",
+            (0 until 3).map(i => s"SELECT * FROM sv$i").mkString(" UNION ALL "),
+            s"SELECT vec_id AS doc_id FROM (${admittedSql(3, "vec_id", "sadm")}) $liveWhere")}
+       |""".stripMargin
   }
 
-  private val streamSemanticSql = streamSemanticSqlFrom(
-    "OR c.vec_id IN (SELECT vec_id FROM sadm0)",
-    "OR c.vec_id IN (SELECT vec_id FROM sadm0 " +
-      "UNION ALL SELECT vec_id FROM sadm1)",
-    liveWhere = "")
+  private val streamSemanticSql = streamSemanticSqlFrom()
 
   /** T30 — streamed tombstones through the SEMANTIC admission pipeline
     * (t23's construction on the embedding family): three mixed waves
@@ -1757,49 +1410,25 @@ object StreamGateQueries extends QueryModule {
     * deleted by waves ≤ i, and the live store is replay-admitted minus
     * everything deleted. */
   private def t30SemanticDelete(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.BatchStore
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val planes = graft.dedup.Dedup.choosePlanes(math.max(1L, emb.count()))
-    def adds(i: Int) = emb.filter(col("vec_id") % 3 === i)
-      .select(lit("add").as("kind"), col("vec_id").as("doc_id"),
-        col("embedding"))
-    def dels(cond: Column) = emb.filter(cond)
-      .select(lit("del").as("kind"), col("vec_id").as("doc_id"),
-        lit(null).cast("array<float>").as("embedding"))
-    val d = col("vec_id") % 11 === 6
-    val watch = stageWaves(Seq(
-      adds(0),
-      adds(1).unionByName(dels(d && col("vec_id") % 3 =!= 2)),
-      adds(2).unionByName(dels(d && col("vec_id") % 3 === 2))))
+    val d = col("doc_id") % 11 === 6
     val root = Dsl.tempDir("graft_t30_")
     val stream = fileStream(s,
-      "kind STRING, doc_id BIGINT, embedding ARRAY<FLOAT>", watch)
+      "kind STRING, doc_id BIGINT, embedding ARRAY<FLOAT>",
+      mixedWaves(emb.select(col("vec_id").as("doc_id"), col("embedding")),
+        "doc_id", d && col("doc_id") % 3 =!= 2, d && col("doc_id") % 3 === 2))
     DedupStream.admitVectors(stream, s"$root/store", s"$root/verdicts",
         s"$root/ckpt", planes = planes, minCosine = 0.4, portable = true,
         kindCol = Some("kind"))
       .awaitTermination()
-    val verdicts = s.read.parquet(s"$root/verdicts")
-      .select(lit("verdict").as("leg"), col("doc_id"), col("verdict"),
-        col("dup_of"), round(col("best_cosine"), 6).as("best_cosine"),
-        col("n_dups"), col("batch_id"))
-    val live = BatchStore.readLive(s, s"$root/store", "id")(_.select("id"))
-      .select(lit("store").as("leg"), col("id").as("doc_id"),
-        lit(null).cast("string").as("verdict"),
-        lit(null).cast("long").as("dup_of"),
-        lit(null).cast("double").as("best_cosine"),
-        lit(null).cast("long").as("n_dups"),
-        lit(null).cast("long").as("batch_id"))
-    verdicts.unionByName(live)
+    verdictsAndStore(s, root, "best_cosine", round(col("best_cosine"), 6))
   }
 
-  private val t30Sql = {
-    val del1 = "(c.vec_id % 11 = 6 AND c.vec_id % 3 <> 2)"
-    streamSemanticSqlFrom(
-      s"OR (c.vec_id IN (SELECT vec_id FROM sadm0) AND NOT $del1)",
-      "OR (c.vec_id IN (SELECT vec_id FROM sadm0 " +
-        "UNION ALL SELECT vec_id FROM sadm1) AND c.vec_id % 11 <> 6)",
-      liveWhere = "WHERE vec_id % 11 <> 6")
-  }
+  private val t30Sql = streamSemanticSqlFrom(
+    i => if (i == 1) "c.vec_id % 11 = 6 AND c.vec_id % 3 <> 2"
+         else "c.vec_id % 11 = 6",
+    liveWhere = "WHERE vec_id % 11 <> 6")
 
   /** M8: streaming DECONTAMINATION at admission time — the batch
     * `m8_decontaminate` screen moved into the ingest loop. Docs with
@@ -1817,10 +1446,9 @@ object StreamGateQueries extends QueryModule {
   private def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val bench = docs.filter(col("doc_id") % 97 === 0)
-    val watch = writeOrderedBatches(
-      docs.filter(col("doc_id") % 97 =!= 0), "doc_id", 3)
     val root = Dsl.tempDir("graft_m8decon_")
-    val stream = fileStream(s, "doc_id LONG, text STRING", watch)
+    val stream = orderedStream(s, docs.filter(col("doc_id") % 97 =!= 0),
+      "doc_id", "doc_id LONG, text STRING")
     graft.streaming.DecontaminateStream.screen(stream, bench,
       s"$root/admitted", s"$root/flagged", s"$root/ckpt", w = 5)
       .awaitTermination()
@@ -1848,61 +1476,206 @@ object StreamGateQueries extends QueryModule {
        |FROM documents d LEFT JOIN hits h USING (doc_id)
        |WHERE d.doc_id % 97 <> 0""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t11_late_split"      -> t11LateSplit _,
-    "t12_view_maintain"   -> t12ViewMaintain _,
-    "m8_stream_admission" -> streamAdmission _,
-    "m8_store_compaction" -> storeCompaction _,
-    "m8_stream_sample"    -> streamSample _,
-    "m8_stream_clusters"  -> streamClusters _,
-    "t13_index_maintain"  -> t13IndexMaintain _,
-    "t14_postings_maintain" -> t14PostingsMaintain _,
-    "t15_phrase_maintain" -> t15PhraseMaintain _,
-    "t16_hybrid_serve" -> t16HybridServe _,
-    "t17_store_delete" -> t17StoreDelete _,
-    "t18_index_delete" -> t18IndexDelete _,
-    "t19_quantizer_refresh" -> t19QuantizerRefresh _,
-    "t20_proximity_maintain" -> t20ProximityMaintain _,
-    "t21_analyzed_maintain" -> t21AnalyzedMaintain _,
-    "t22_stream_delete" -> t22StreamDelete _,
-    "t23_admission_delete" -> t23AdmissionDelete _,
-    "t24_hybrid_refresh" -> t24HybridRefresh _,
-    "t25_ledger_delete" -> t25LedgerDelete _,
-    "t26_stream_sample_delete" -> t26StreamSampleDelete _,
-    "t27_view_delete" -> t27ViewDelete _,
-    "t28_policy_refresh" -> t28PolicyRefresh _,
-    "t29_stream_view_delete" -> t29StreamViewDelete _,
-    "t30_semantic_delete" -> t30SemanticDelete _,
-    "m8_stream_semantic" -> streamSemantic _,
-    "m8_stream_decontaminate" -> streamDecontaminate _,
-    "m8_proximity_analyzed" -> m8ProximityAnalyzed _)
+  // ------------------------------------------------------------------
+  // The shared oracle replays (defs, so the gate oracles above can use
+  // them whatever their order in the file).
 
-  def oracles: Map[String, String] = Map(
-    "t11_late_split"      -> t11Sql,
-    "t12_view_maintain"   -> t12Sql,
-    "m8_stream_admission" -> streamAdmissionSql,
-    "m8_store_compaction" -> storeCompactionSql,
-    "m8_stream_sample"    -> streamSampleSql,
-    "m8_stream_clusters"  -> streamClustersSql,
-    "t13_index_maintain"  -> t13Sql,
-    "t14_postings_maintain" -> t14Sql,
-    "t15_phrase_maintain" -> t15Sql,
-    "t16_hybrid_serve" -> t16Sql,
-    "t17_store_delete" -> t17Sql,
-    "t18_index_delete" -> t18Sql,
-    "t19_quantizer_refresh" -> t19Sql,
-    "t20_proximity_maintain" -> t20Sql,
-    "t21_analyzed_maintain" -> t21Sql,
-    "t22_stream_delete" -> t22Sql,
-    "t23_admission_delete" -> t23Sql,
-    "t24_hybrid_refresh" -> t24Sql,
-    "t25_ledger_delete" -> t25Sql,
-    "t26_stream_sample_delete" -> t26Sql,
-    "t27_view_delete" -> t27Sql,
-    "t28_policy_refresh" -> t28Sql,
-    "t29_stream_view_delete" -> t29Sql,
-    "t30_semantic_delete" -> t30Sql,
-    "m8_stream_semantic" -> streamSemanticSql,
-    "m8_stream_decontaminate" -> streamDecontaminateSql,
-    "m8_proximity_analyzed" -> m8ProximityAnalyzedSql)
+  /** One admission stage of the oracle: candidates for batch `i` docs are
+    * earlier same-batch docs (any verdict — they're all in the delta) or
+    * the `admitted` prior-batch docs; agreement over the 32 portable
+    * MinHash slots; hits at ≥ 0.5 reduce to (dup_of = min, best, count).
+    * `mod` is the batch-slicing modulus. */
+  private def stageSql(i: Int, admitted: String, mod: Int): String =
+    s"""c$i AS (
+       |  SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS cand_id
+       |  FROM band n JOIN band c ON n.bk = c.bk
+       |  WHERE n.doc_id % $mod = $i AND (
+       |        (c.doc_id % $mod = $i AND c.doc_id < n.doc_id)
+       |        $admitted)),
+       |a$i AS (
+       |  SELECT i.new_id, i.cand_id,
+       |    SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) / 32.0 AS agreement
+       |  FROM c$i i
+       |  JOIN sig sa ON sa.doc_id = i.new_id
+       |  JOIN sig sb ON sb.doc_id = i.cand_id AND sb.seed = sa.seed
+       |  GROUP BY 1, 2),
+       |h$i AS (
+       |  SELECT new_id, MIN(cand_id) AS dup_of, MAX(agreement) AS best_agreement,
+       |    COUNT(*) AS n_dups
+       |  FROM a$i WHERE agreement >= 0.5 GROUP BY 1),
+       |adm$i AS (
+       |  SELECT doc_id FROM documents
+       |  WHERE doc_id % $mod = $i AND doc_id NOT IN (SELECT new_id FROM h$i)),
+       |v$i AS (
+       |  SELECT d.doc_id,
+       |    CASE WHEN h.new_id IS NULL THEN 'admit' ELSE 'reject' END AS verdict,
+       |    h.dup_of, h.best_agreement,
+       |    CAST(COALESCE(h.n_dups, 0) AS BIGINT) AS n_dups,
+       |    CAST($i AS BIGINT) AS batch_id
+       |  FROM (SELECT doc_id FROM documents WHERE doc_id % $mod = $i) d
+       |  LEFT JOIN h$i h ON h.new_id = d.doc_id)""".stripMargin
+
+  /** `SELECT id FROM adm0 UNION ALL …` over stages 0 .. n-1: the ids the
+    * first n stages admitted. */
+  private def admittedSql(n: Int, id: String = "doc_id",
+                          adm: String = "adm"): String =
+    (0 until n).map(i => s"SELECT $id FROM $adm$i").mkString(" UNION ALL ")
+
+  /** Stage i's prior-corpus candidate clause: `c.<id>` among the ids the
+    * stages before it admitted, less the `deleted` ones (a predicate on
+    * `c.<id>`; empty for none). Empty for stage 0. */
+  private def priorSql(i: Int, id: String, adm: String,
+                       deleted: String): String = {
+    val prior = s"c.$id IN (${admittedSql(i, id, adm)})"
+    if (i == 0) ""
+    else if (deleted.isEmpty) s"OR $prior"
+    else s"OR ($prior AND NOT ($deleted))"
+  }
+
+  /** The unrolled n-stage MinHash admission replay (batch modulus `mod`):
+    * the [[stageSql]] chain, stage i screening against what earlier
+    * stages admitted less `deleted(i)` — the deletes visible to it. */
+  private def stagesSql(n: Int, mod: Int = 3,
+                        deleted: Int => String = _ => ""): String =
+    (0 until n).map(i =>
+      stageSql(i, priorSql(i, "doc_id", "adm", deleted(i)), mod))
+      .mkString(",\n")
+
+  /** Every verdict row of the first n stages. */
+  private def verdictsSql(n: Int): String =
+    (0 until n).map(i => s"SELECT * FROM v$i").mkString(" UNION ALL ")
+
+  /** [[verdictsAndStore]]'s replay: the `verdicts` rows, then the `live`
+    * doc ids as `store` rows with null verdict columns. */
+  private def verdictsAndStoreSql(score: String, verdicts: String,
+                                  live: String): String =
+    s"""SELECT 'verdict' AS leg, doc_id, verdict, dup_of, $score, n_dups,
+       |  batch_id
+       |FROM ($verdicts)
+       |UNION ALL
+       |SELECT 'store' AS leg, doc_id, CAST(NULL AS VARCHAR) AS verdict,
+       |  CAST(NULL AS BIGINT) AS dup_of, CAST(NULL AS DOUBLE) AS $score,
+       |  CAST(NULL AS BIGINT) AS n_dups, CAST(NULL AS BIGINT) AS batch_id
+       |FROM ($live)""".stripMargin
+
+  /** The recursive closure over the first n stages' verdict edges
+    * (rejected doc → dup_of): `ccl(doc_id, cluster_id)` labels each
+    * linked doc with its component's smallest id. Needs `WITH
+    * RECURSIVE`. */
+  private def closureSql(n: Int): String =
+    s"""ed0 AS (
+       |  ${(0 until n).map(i => s"SELECT new_id AS u, dup_of AS v FROM h$i")
+            .mkString(" UNION ALL ")}),
+       |e AS (SELECT u, v FROM ed0 UNION ALL SELECT v, u FROM ed0),
+       |reach AS (
+       |  SELECT u, v FROM e
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
+       |ccl AS (
+       |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
+       |  FROM reach GROUP BY u)""".stripMargin
+
+  /** The k = 50 'ssam' priority sample of the documents matching `where`
+    * (priority = hash coordinate / n_chars, ties on doc_id): their
+    * doc_ids. */
+  private def sampleSql(where: String): String =
+    s"""SELECT doc_id FROM (
+       |  SELECT doc_id, ROW_NUMBER() OVER (ORDER BY
+       |    CAST(${Dsl.hex60Sql("'ssam|' || doc_id::VARCHAR")} AS DOUBLE)
+       |      / CAST(n_chars AS DOUBLE) ASC, doc_id) AS rn
+       |  FROM documents WHERE $where) WHERE rn <= 50""".stripMargin
+
+  /** The flat replay of [[viewMeasures]] over the events in `from`. */
+  private def viewSql(from: String): String =
+    s"""SELECT event_type, COUNT(*) AS n,
+       |  CAST(SUM(user_id) AS BIGINT) AS sum_uid,
+       |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
+       |FROM $from GROUP BY 1""".stripMargin
+
+  /** [[deletedPostingsLegs]]' replay: all three legs from a from-scratch
+    * index over the surviving corpus (`doc_id % 7 <> 3`), the doc id
+    * named `id`. */
+  private def deletedPostingsSql(id: String): String = {
+    val survivors = "(SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3)"
+    val bm = TextQueries.bm25SqlFrom(TextQueries.bm25SearchQueryCte,
+      docsFrom = survivors)
+    val ph = TextQueries.phraseSqlFrom("doc_id % 251 = 7",
+      docsFrom = survivors)
+    s"""SELECT 'bm25_pre' AS leg, query_id, rank, doc_id AS $id, score
+       |FROM ($bm)
+       |UNION ALL
+       |SELECT 'bm25_post' AS leg, query_id, rank, doc_id AS $id, score
+       |FROM ($bm)
+       |UNION ALL
+       |SELECT 'phrase_post' AS leg, query_id, rank, doc_id AS $id,
+       |  CAST(n_occ AS DOUBLE) AS score FROM ($ph)""".stripMargin
+  }
+
+  /** [[rrfServe]]'s replay: the bm25 CTE chain for the first 8 docs'
+    * tokens 1-4 and the `ivf` dense leg, each top 5, fused with the
+    * same integer floor-division arithmetic. */
+  private def rrfSql(ivf: String): String = {
+    val sparseQueryCte =
+      """SELECT doc_id AS query_id,
+        |    array_to_string(list_slice(
+        |      string_split_regex(trim(text), '\s+'), 1, 4), ' ') AS query_text
+        |  FROM documents WHERE doc_id < 8""".stripMargin
+    s"""WITH ${TextQueries.bm25OracleCtes(sparseQueryCte)},
+       |hivf AS ($ivf),
+       |hterms AS (
+       |  SELECT query_id, cand_id,
+       |    1000000000 // (60 + CAST(rank AS BIGINT)) AS term_fp
+       |  FROM (SELECT query_id, doc_id AS cand_id, rank FROM bmranked
+       |          WHERE rank <= 5
+       |        UNION ALL
+       |        SELECT query_id, cand_id, rank FROM hivf)),
+       |hfused AS (
+       |  SELECT query_id, cand_id, CAST(SUM(term_fp) AS BIGINT) AS rrf_fp
+       |  FROM hterms GROUP BY 1, 2),
+       |hranked AS (
+       |  SELECT query_id, cand_id, rrf_fp,
+       |    row_number() OVER (PARTITION BY query_id
+       |                       ORDER BY rrf_fp DESC, cand_id) AS rank
+       |  FROM hfused)
+       |SELECT query_id, CAST(rank AS INT) AS rank, cand_id,
+       |  CAST(rrf_fp AS DOUBLE) / 1000000000.0 AS rrf
+       |FROM hranked WHERE rank <= 5""".stripMargin
+  }
+
+  /** Every gate with its oracle: one row each, so a gate cannot be
+    * registered without one. */
+  private val gates: Seq[(String, (SparkSession, String) => DataFrame,
+      String)] = Seq(
+    ("t11_late_split", t11LateSplit, t11Sql),
+    ("t12_view_maintain", t12ViewMaintain, t12Sql),
+    ("m8_stream_admission", streamAdmission, streamAdmissionSql),
+    ("m8_store_compaction", storeCompaction, storeCompactionSql),
+    ("m8_stream_sample", streamSample, streamSampleSql),
+    ("m8_stream_clusters", streamClusters, streamClustersSql),
+    ("t13_index_maintain", t13IndexMaintain, t13Sql),
+    ("t14_postings_maintain", t14PostingsMaintain, t14Sql),
+    ("t15_phrase_maintain", t15PhraseMaintain, t15Sql),
+    ("t16_hybrid_serve", t16HybridServe, t16Sql),
+    ("t17_store_delete", t17StoreDelete, t17Sql),
+    ("t18_index_delete", t18IndexDelete, t18Sql),
+    ("t19_quantizer_refresh", t19QuantizerRefresh, t19Sql),
+    ("t20_proximity_maintain", t20ProximityMaintain, t20Sql),
+    ("t21_analyzed_maintain", t21AnalyzedMaintain, t21Sql),
+    ("t22_stream_delete", t22StreamDelete, t22Sql),
+    ("t23_admission_delete", t23AdmissionDelete, t23Sql),
+    ("t24_hybrid_refresh", t24HybridRefresh, t24Sql),
+    ("t25_ledger_delete", t25LedgerDelete, t25Sql),
+    ("t26_stream_sample_delete", t26StreamSampleDelete, t26Sql),
+    ("t27_view_delete", t27ViewDelete, t27Sql),
+    ("t28_policy_refresh", t28PolicyRefresh, t28Sql),
+    ("t29_stream_view_delete", t29StreamViewDelete, t29Sql),
+    ("t30_semantic_delete", t30SemanticDelete, t30Sql),
+    ("m8_stream_semantic", streamSemantic, streamSemanticSql),
+    ("m8_stream_decontaminate", streamDecontaminate, streamDecontaminateSql),
+    ("m8_proximity_analyzed", m8ProximityAnalyzed, m8ProximityAnalyzedSql))
+
+  def all: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g._1 -> g._2).toMap
+
+  def oracles: Map[String, String] = gates.map(g => g._1 -> g._3).toMap
 }

@@ -13,7 +13,8 @@ import graft.plans.GraftOps
   * corners the SortOrder null placement decided: null vectors, null
   * elements, length mismatches (null scores sort LAST under
   * `cosine desc` and FIRST under `d2 asc`), zero-norm vectors
-  * (cosine's when-guard 0.0), and exact score ties (smaller cent_id).
+  * (cosine's when-guard 0.0), exact score ties (smaller cent_id), and
+  * non-finite scores (NaN ranks above every double, −0.0 ties 0.0).
   * The IVF/PQ oracle hashes ride on this identity after the round-19
   * pure-map rewrite of ivfAssign/pqAssign/pqEncode. */
 class NearestCentroidSpec extends SparkSpec {
@@ -31,23 +32,52 @@ class NearestCentroidSpec extends SparkSpec {
       else java.lang.Float.valueOf(rnd.nextGaussian().toFloat)
     }
 
+  /** a finite vector with one element replaced by `x` */
+  private def withElem(rnd: scala.util.Random, dim: Int,
+                       x: Float): Seq[java.lang.Float] = {
+    val at = rnd.nextInt(dim)
+    mkVec(rnd, dim, nulls = false).updated(at, java.lang.Float.valueOf(x))
+  }
+
   /** corpus of n vectors (some null / zero / short / null-element) and
-    * k centroids (some degenerate too). */
-  private def fixtures(dim: Int, n: Int, k: Int)
+    * k centroids (some degenerate too). With `nonFinite`, some vectors
+    * and centroids also carry a NaN or ±Inf element or −0.0 elements:
+    * their scores go NaN (which SortOrder ranks above every double) or
+    * ±Inf, and −0.0 must tie 0.0. The null-element centroid gives way
+    * to a non-finite one there: its null score would win every row
+    * under nulls-first `d2 asc` and hide the NaN ordering. */
+  private def fixtures(dim: Int, n: Int, k: Int, nonFinite: Boolean = false)
       : (DataFrame, DataFrame) = {
     val rnd = new scala.util.Random(7)
+    def negZeros(v: Seq[java.lang.Float]) = v.zipWithIndex.map {
+      case (x, i) => if (i % 2 == 0) java.lang.Float.valueOf(-0.0f) else x
+    }
     val vecs = (0 until n).map { i =>
       val v =
         if (i % 19 == 3) null
         else if (i % 17 == 4) mkVec(rnd, dim, nulls = false, zero = true)
         else if (i % 13 == 5) mkVec(rnd, dim - 2, nulls = false) // short
+        else if (nonFinite && i % 23 == 6) withElem(rnd, dim, Float.NaN)
+        else if (nonFinite && i % 29 == 8)
+          withElem(rnd, dim, Float.PositiveInfinity)
+        else if (nonFinite && i % 31 == 9)
+          withElem(rnd, dim, Float.NegativeInfinity)
+        else if (nonFinite && i % 37 == 10)
+          negZeros(mkVec(rnd, dim, nulls = false))
         else mkVec(rnd, dim, nulls = i % 7 == 1)
       (i.toLong, v)
     }
     // duplicated centroid vectors force exact score ties
     val cents0 = (0 until k).map { i =>
       val cv =
-        if (i % 11 == 2) mkVec(rnd, dim, nulls = false, zero = true)
+        if (nonFinite && i == 3) withElem(rnd, dim, Float.NaN)
+        else if (nonFinite && i == 4)
+          withElem(rnd, dim, Float.PositiveInfinity)
+        else if (nonFinite && i == 6)
+          withElem(rnd, dim, Float.NegativeInfinity)
+        else if (nonFinite && i == 7)
+          negZeros(mkVec(rnd, dim, nulls = false, zero = true))
+        else if (i % 11 == 2) mkVec(rnd, dim, nulls = false, zero = true)
         else if (i % 9 == 4) mkVec(rnd, dim, nulls = true)
         else mkVec(rnd, dim, nulls = false)
       (100L + i, cv)
@@ -70,8 +100,8 @@ class NearestCentroidSpec extends SparkSpec {
       col("cent_id").cast("long").as("cent_id"), col("cvec")))).as("cset"))
 
   private def assertParity(fusedCol: Column, score: Column,
-                           asc: Boolean): Unit = {
-    val (c, cent) = fixtures(dim = 16, n = 400, k = 9)
+                           asc: Boolean, nonFinite: Boolean = false): Unit = {
+    val (c, cent) = fixtures(dim = 16, n = 400, k = 9, nonFinite)
     val fused = c.crossJoin(broadcast(packed(cent)))
       .withColumn("best", fusedCol)
       .select(col("cand_id"), col("best").getField("cent_id").as("f_id"),
@@ -98,6 +128,21 @@ class NearestCentroidSpec extends SparkSpec {
     assertParity(
       VectorFns.nearest_centroid_l2(col("cv"), col("cset")),
       l2sq(col("cv"), col("cvec")), asc = true)
+  }
+
+  test("cosine argmax == fanout TopKPerKey on NaN/±Inf/−0.0 vectors " +
+    "and centroids (NaN ranks greatest under desc)") {
+    assertParity(
+      VectorFns.nearest_centroid_cos(col("cv"), col("cset")),
+      VectorFns.cosine(col("cv"), col("cvec")), asc = false,
+      nonFinite = true)
+  }
+
+  test("portable-L2 argmin == fanout TopKPerKey on NaN/±Inf/−0.0 " +
+    "vectors and centroids (a NaN incumbent loses under asc)") {
+    assertParity(
+      VectorFns.nearest_centroid_l2(col("cv"), col("cset")),
+      l2sq(col("cv"), col("cvec")), asc = true, nonFinite = true)
   }
 
   test("empty centroid set produces no rows (the crossJoin identity)") {
