@@ -27,22 +27,25 @@ object RoleFns {
     *
     * The company-echo regexes are dynamic (built from the company value),
     * which means a per-row Pattern.compile; a literal case-insensitive
-    * `contains` pre-check skips the compile for the common case where the
-    * role carries no echo — exactly the rows where the regex couldn't
-    * match anyway (the pattern embeds the company as a quoted literal). */
+    * `contains` pre-check swaps in the constant never-matching pattern
+    * `(?!)` for the common case where the role carries no echo — exactly
+    * the rows where the regex couldn't match anyway (the pattern embeds
+    * the company as a quoted literal). `regexp_replace` recompiles only
+    * when the pattern string changes, so runs of echo-free rows compile
+    * nothing, and gating the pattern rather than the input keeps one
+    * copy of the input tree per step instead of two. */
   def clean_role(title: Column, company: Column): Column = {
     val noTags = regexp_replace(coalesce(title, lit("")), "<[^>]*>", "")
     val decoded = HtmlFns.strip_emojis(HtmlFns.decode_html(noTags))
     val c = regex_quote(coalesce(company, lit("")))
     val mayEcho = coalesce(company, lit("")) =!= "" &&
       lower(decoded).contains(lower(company))
+    def echo(pattern: Column): Column = when(mayEcho, pattern).otherwise(lit("(?!)"))
     // “Company — Role” prefix / “Role — Company” suffix (case-insensitive)
-    val noPrefix = when(!mayEcho, decoded)
-      .otherwise(regexp_replace(decoded,
-        concat(lit("(?i)^\\s*"), c, lit("\\s*[-\\u2013\\u2014:]*\\s*")), lit("")))
-    val noSuffix = when(!mayEcho, noPrefix)
-      .otherwise(regexp_replace(noPrefix,
-        concat(lit("(?i)\\s*[-\\u2013\\u2014:]*\\s*"), c, lit("\\s*$")), lit("")))
+    val noPrefix = regexp_replace(decoded,
+      echo(concat(lit("(?i)^\\s*"), c, lit("\\s*[-\\u2013\\u2014:]*\\s*"))), lit(""))
+    val noSuffix = regexp_replace(noPrefix,
+      echo(concat(lit("(?i)\\s*[-\\u2013\\u2014:]*\\s*"), c, lit("\\s*$"))), lit(""))
     // Trailing “- City, ST” location, then trailing req-ID / long digit runs.
     val noLoc = regexp_replace(noSuffix,
       "\\s*-\\s*[A-Z][a-z]+(?:,?\\s*[A-Z]{2})?$", "")

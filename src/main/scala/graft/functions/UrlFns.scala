@@ -88,8 +88,13 @@ object UrlFns {
   /** F14 `findFirstAtsLinkIn_`: first `href` in the page whose host is a
     * known ATS (`code-LLM-intergration.js:421-428`) — aggregator unwrap.
     * Pure higher-order-function pipeline: extract-all → filter → first. */
-  def find_first_ats_link(html: Column): Column = {
+  def find_first_ats_link(html: Column): Column =
+    coalesce(first_ats_link(html), lit(""))
+
+  /** [[find_first_ats_link]] with null, not '', when the page holds no
+    * ATS href — the form a caller gating on "found one" reads once. */
+  def first_ats_link(html: Column): Column = {
     val hrefs = regexp_extract_all(html, lit("(?i)href=[\"'](https?://[^\"']+)[\"']"), lit(1))
-    coalesce(get(filter(hrefs, u => is_ats_host(host_from_url(u))), lit(0)), lit(""))
+    get(filter(hrefs, u => is_ats_host(host_from_url(u))), lit(0))
   }
 }

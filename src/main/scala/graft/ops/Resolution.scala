@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 import graft.functions.{HtmlFns, JsonLdFns, RoleFns, UrlFns}
 
 /** R1 `decideCompanyRole_` — priority-ordered multi-signal fusion
@@ -35,93 +36,90 @@ object Resolution {
   def decideCompanyRole(df: DataFrame, html: Column, finalUrl: Column,
                         keepUrlSignals: Boolean = false,
                         reuseUrlSignals: Boolean = false): DataFrame = {
-    val base =
-      if (reuseUrlSignals) df
-      else df
-        .withColumn("_host", UrlFns.host_from_url(finalUrl))
-        .withColumn("_is_agg", UrlFns.is_aggregator_host(col("_host")))
-        .withColumn("_ats_slug", UrlFns.guess_company_from_url(finalUrl))
-        .withColumn("_canon", UrlFns.canonical_url(finalUrl))
-    val withSignals = base
-      .withColumn("_jsonld", JsonLdFns.parse_jsonld_jobposting(html))
-      .withColumn("_og_site", HtmlFns.get_meta(html, "og:site_name", "property"))
-      .withColumn("_h1", HtmlFns.get_h1(html))
-      .withColumn("_og_title", HtmlFns.get_meta(html, "og:title", "property"))
-      .withColumn("_title", HtmlFns.get_title(html))
+    // Each step is one wide projection that reads the previous step's
+    // values by name: a Column is an expression tree, so a value read
+    // twice as a Column is planned (and run) twice, while a named value
+    // is computed once and the optimizer keeps it apart.
+    val host = UrlFns.host_from_url(finalUrl)
+    val urlSignals =
+      if (reuseUrlSignals) ListMap.empty[String, Column]
+      else ListMap(
+        "_host" -> host,
+        "_is_agg" -> UrlFns.is_aggregator_host(host),
+        "_ats_slug" -> UrlFns.guess_company_from_url(finalUrl),
+        "_canon" -> UrlFns.canonical_url(finalUrl))
+    val signals = df.withColumns(urlSignals ++ ListMap(
+      "_jsonld" -> JsonLdFns.parse_jsonld_jobposting(html),
+      "_og_site" -> HtmlFns.get_meta(html, "og:site_name", "property"),
+      "_h1" -> HtmlFns.get_h1(html),
+      "_og_title" -> HtmlFns.get_meta(html, "og:title", "property"),
+      "_title" -> HtmlFns.get_title(html)))
 
     val jsonCompany = col("_jsonld.company")
     val jsonRole = col("_jsonld.role")
-
     // Company ladder: jsonld → ats-slug → og:site_name (non-aggregator).
-    val staged = withSignals
-      .withColumn("_c1", when(jsonCompany =!= "", jsonCompany).otherwise(lit("")))
-      .withColumn("_c2", when(col("_c1") =!= "", col("_c1"))
-        .otherwise(col("_ats_slug")))
+    val c2 = when(jsonCompany =!= "", jsonCompany).otherwise(col("_ats_slug"))
+    val siteOk = col("_og_site") =!= "" && !col("_is_agg")
+    // Signal-presence predicates, shared by the confidence sum and the
+    // decision trail.
+    val ladder = signals.withColumns(ListMap(
       // Role ladder: jsonld → h1 → og:title → title.
-      .withColumn("_r1", when(jsonRole =!= "", jsonRole)
+      "_r1" -> when(jsonRole =!= "", jsonRole)
         .when(col("_h1") =!= "", col("_h1"))
         .when(col("_og_title") =!= "", col("_og_title"))
-        .otherwise(col("_title")))
-      .withColumn("_c3", when(col("_c2") =!= "", col("_c2"))
-        .when(col("_og_site") =!= "" && !col("_is_agg"), col("_og_site"))
-        .otherwise(lit("")))
-      // Title-split rescue: only when still no company and role has a
-      // spaced dash.
-      .withColumn("_split",
-        col("_c3") === "" && col("_r1") =!= "" &&
-          RoleFns.looks_like_company_dash_role(col("_r1")))
-      .withColumn("_c4", when(col("_split"), RoleFns.title_split_company(col("_r1")))
-        .otherwise(col("_c3")))
-      .withColumn("_r2", when(col("_split"), RoleFns.title_split_role(col("_r1")))
-        .otherwise(col("_r1")))
+        .otherwise(col("_title")),
+      "_c3" -> when(c2 =!= "", c2).when(siteOk, col("_og_site")).otherwise(lit("")),
+      "_p_org" -> (jsonCompany =!= ""),
+      "_p_jtitle" -> (jsonRole =!= ""),
+      "_p_slug" -> (jsonCompany === "" && col("_ats_slug") =!= ""),
+      "_p_h1" -> (jsonRole === "" && col("_h1") =!= ""),
+      "_p_og" -> (jsonRole === "" && col("_h1") === "" && col("_og_title") =!= ""),
+      "_p_title" -> (jsonRole === "" && col("_h1") === "" && col("_og_title") === "" &&
+        col("_title") =!= ""),
+      "_p_site" -> (c2 === "" && siteOk)))
 
-    // Additive confidence in reference signal order, then split-floor.
-    val confRaw =
-      when(jsonCompany =!= "", lit(0.5)).otherwise(lit(0.0)) +
-      when(jsonRole =!= "", lit(0.5)).otherwise(lit(0.0)) +
-      when(jsonCompany === "" && col("_ats_slug") =!= "", lit(0.35)).otherwise(lit(0.0)) +
-      when(jsonRole === "" && col("_h1") =!= "", lit(0.35))
-        .when(jsonRole === "" && col("_h1") === "" && col("_og_title") =!= "", lit(0.25))
-        .when(jsonRole === "" && col("_h1") === "" && col("_og_title") === "" &&
-          col("_title") =!= "", lit(0.15))
-        .otherwise(lit(0.0)) +
-      when(col("_c2") === "" && col("_og_site") =!= "" && !col("_is_agg"), lit(0.25))
-        .otherwise(lit(0.0))
+    // Additive confidence in reference signal order, and the decision
+    // trail: signal names in reference push-order, '+'-joined. Title-split
+    // rescue only when still no company and the role has a spaced dash.
+    val weights = Seq("_p_org" -> 0.5, "_p_jtitle" -> 0.5, "_p_slug" -> 0.35,
+      "_p_h1" -> 0.35, "_p_og" -> 0.25, "_p_title" -> 0.15, "_p_site" -> 0.25)
+    val titleSplit = col("_c3") === "" && col("_r1") =!= "" &&
+      RoleFns.looks_like_company_dash_role(col("_r1"))
+    val split = ladder.withColumns(ListMap(
+      "_split" -> titleSplit,
+      "_conf_raw" -> weights.map { case (p, w) =>
+        when(col(p), lit(w)).otherwise(lit(0.0)) }.reduce(_ + _),
+      "_trail" -> concat_ws("+",
+        when(col("_p_org"), lit("jsonld-org")),
+        when(col("_p_jtitle"), lit("jsonld-title")),
+        when(col("_p_slug"), lit("ats-slug")),
+        when(col("_p_h1"), lit("h1")),
+        when(col("_p_og"), lit("og:title")),
+        when(col("_p_title"), lit("title")),
+        when(col("_p_site"), lit("og:site_name")),
+        when(titleSplit, lit("title-split"))),
+      "company" -> when(titleSplit, RoleFns.title_split_company(col("_r1")))
+        .otherwise(col("_c3")),
+      "_r2" -> when(titleSplit, RoleFns.title_split_role(col("_r1")))
+        .otherwise(col("_r1"))))
 
-    // Decision trail: signal names in reference push-order, '+'-joined.
-    val trail = concat_ws("+",
-      when(jsonCompany =!= "", lit("jsonld-org")),
-      when(jsonRole =!= "", lit("jsonld-title")),
-      when(jsonCompany === "" && col("_ats_slug") =!= "", lit("ats-slug")),
-      when(jsonRole === "" && col("_h1") =!= "", lit("h1")),
-      when(jsonRole === "" && col("_h1") === "" && col("_og_title") =!= "",
-        lit("og:title")),
-      when(jsonRole === "" && col("_h1") === "" && col("_og_title") === "" &&
-        col("_title") =!= "", lit("title")),
-      when(col("_c2") === "" && col("_og_site") =!= "" && !col("_is_agg"),
-        lit("og:site_name")),
-      when(col("_split"), lit("title-split")))
-
-    val decided = staged
-      .withColumn("_conf0", when(col("_split"), greatest(confRaw, lit(0.55)))
-        .otherwise(confRaw))
-      .withColumn("company", col("_c4"))
-      .withColumn("role", RoleFns.clean_role(col("_r2"), col("_c4")))
-      .withColumn("canonical", col("_canon"))
-      .withColumn("_conf1",
-        when(col("company") === "", least(col("_conf0"), lit(0.5)))
-          .otherwise(col("_conf0")))
-      .withColumn("_conf2",
-        when(col("role") === "", least(col("_conf1"), lit(0.5)))
-          .otherwise(col("_conf1")))
-      .withColumn("conf", greatest(least(col("_conf2"), lit(1.0)), lit(0.0)))
-      .withColumn("decision",
-        when(trail === "", lit("heuristic")).otherwise(trail))
+    // `conf` first holds its raw value, so every output column keeps its
+    // place; the clamp then rewrites it in place once `role` is cleaned.
+    val picked = split.withColumns(ListMap(
+      "role" -> RoleFns.clean_role(col("_r2"), col("company")),
+      "canonical" -> col("_canon"),
+      "conf" -> when(col("_split"), greatest(col("_conf_raw"), lit(0.55)))
+        .otherwise(col("_conf_raw")),
+      "decision" -> when(col("_trail") === "", lit("heuristic")).otherwise(col("_trail"))))
+    // clamp: a missing field caps conf at 0.5, then [0, 1]
+    val conf1 = when(col("company") === "", least(col("conf"), lit(0.5)))
+      .otherwise(col("conf"))
+    val conf2 = when(col("role") === "", least(conf1, lit(0.5))).otherwise(conf1)
+    val decided = picked.withColumn("conf", greatest(least(conf2, lit(1.0)), lit(0.0)))
 
     val alwaysDrop = Seq(
-      "_jsonld", "_og_site", "_h1", "_og_title", "_title",
-      "_c1", "_c2", "_c3", "_c4", "_r1", "_r2", "_split",
-      "_conf0", "_conf1", "_conf2")
+      "_jsonld", "_og_site", "_h1", "_og_title", "_title", "_r1", "_c3",
+      "_split", "_conf_raw", "_trail", "_r2") ++ weights.map(_._1)
     val urlCols = Seq("_host", "_is_agg", "_ats_slug", "_canon")
     decided.drop(
       (if (keepUrlSignals) alwaysDrop else alwaysDrop ++ urlCols): _*)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 import graft.functions.{HtmlFns, UrlFns}
 
@@ -90,8 +91,12 @@ object FetchCascade {
         "api_role", "fetch_error")
         .withColumn("fetch_error",
           graft.ops.Provenance.error_message(col("fetch_error"), 300))
+    // wave 1 is read twice (the wave-2 targets and the union) and must
+    // drive the client once per url: a lazy local checkpoint keeps its
+    // rows for both reads and leaves no CacheManager entry behind
+    // (ContextCleaner frees the blocks with the frame)
     val wave1 = fetchWave(links.select(col("url")).distinct().as[String])
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     // wave 2: first ATS href inside aggregator pages, minus already-fetched
     val targets = wave1
       .filter(UrlFns.is_aggregator_host(UrlFns.host_from_url(col("url"))))
@@ -162,8 +167,9 @@ object FetchCascade {
 
   /** One cascade level over joined fixture columns for `urlCol`; returns
     * a struct(provider, status, final_url, html, api_company, api_role)
-    * or null-provider when nothing at this level answered. */
-  private def level(urlCol: Column, p: String): Column = {
+    * or null-provider when nothing at this level answered. Every provider
+    * name carries `tag` (the unwrap level's `-unwrapped`). */
+  private def level(urlCol: Column, p: String, tag: String = ""): Column = {
     val ghSlug = regexp_extract(urlCol, GhUrlRe, 1)
     val leverSlug = regexp_extract(urlCol, LeverUrlRe, 1)
     val apiHit = col(s"${p}api_role").isNotNull
@@ -173,19 +179,19 @@ object FetchCascade {
       col(s"${p}direct_status") < 400 && col(s"${p}direct_useful")
     val renderedOk = col(s"${p}rendered_useful")
     when(ghApi, struct(
-      lit("gh-api").as("provider"), lit(200).as("status"),
+      lit("gh-api" + tag).as("provider"), lit(200).as("status"),
       UrlFns.canonical_url(urlCol).as("final_url"), lit("").as("html"),
       UrlFns.nice_case(ghSlug).as("api_company"), col(s"${p}api_role").as("api_role")))
     .when(leverApi, struct(
-      lit("lever-api").as("provider"), lit(200).as("status"),
+      lit("lever-api" + tag).as("provider"), lit(200).as("status"),
       UrlFns.canonical_url(urlCol).as("final_url"), lit("").as("html"),
       UrlFns.nice_case(leverSlug).as("api_company"), col(s"${p}api_role").as("api_role")))
     .when(directOk, struct(
-      lit("direct").as("provider"), col(s"${p}direct_status").as("status"),
+      lit("direct" + tag).as("provider"), col(s"${p}direct_status").as("status"),
       urlCol.as("final_url"), col(s"${p}direct_html").as("html"),
       lit(null).cast("string").as("api_company"), lit(null).cast("string").as("api_role")))
     .when(renderedOk, struct(
-      lit("renderer").as("provider"), lit(200).as("status"),
+      lit("renderer" + tag).as("provider"), lit(200).as("status"),
       urlCol.as("final_url"), col(s"${p}rendered_html").as("html"),
       lit(null).cast("string").as("api_company"), lit(null).cast("string").as("api_role")))
     .otherwise(lit(null).cast(
@@ -199,19 +205,21 @@ object FetchCascade {
     * fixture side is genuinely small (a forced broadcast of a large
     * fixture table costs more than the shuffle it avoids).
     *
-    * The projected fixture side is computed ONCE and persisted: both
-    * joins read the same materialized rows, so the useful-signal regexes
-    * (the dominant per-row cost) run once per fixture row instead of
-    * once per join. At production scale this persist is a checkpointed
-    * signal table written next to the fixture store. */
+    * The projected fixture side is computed ONCE and cached: both joins
+    * read the same materialized rows, so the useful-signal regexes (the
+    * dominant per-row cost) run once per fixture row instead of once per
+    * join. The cache has no CacheManager entry, so it goes with the
+    * frame instead of piling up one entry per trigger. At production
+    * scale this is a checkpointed signal table written next to the
+    * fixture store.
+    *
+    * Each level is one named column read back by name (`_lvl1`,
+    * `_ats_url`, `fetched`): a level is a wide struct-valued tree, and
+    * a Column read twice is planned twice. */
   def apply(links: DataFrame, fixtures: DataFrame): DataFrame = {
-    val side = fixtureSide(fixtures).persist(StorageLevel.MEMORY_AND_DISK)
-    val j1 = links.join(prefixed(side, "f_"),
-      links("url") === col("f_url"), "left_outer")
-
-    val lvl1 = level(col("url"), "f_")
+    val side = Bridge.cacheUnregistered(fixtureSide(fixtures), StorageLevel.MEMORY_AND_DISK)
     val isAgg = UrlFns.is_aggregator_host(UrlFns.host_from_url(col("url")))
-    val atsUrl = UrlFns.find_first_ats_link(
+    val atsLink = UrlFns.first_ats_link(
       concat(coalesce(col("f_rendered_html"), lit("")),
         coalesce(col("f_direct_html"), lit(""))))
 
@@ -224,23 +232,20 @@ object FetchCascade {
     // uniformly while the left-outer still passes them through with
     // null unwrap columns. The extra `_ats_url IS NOT NULL` predicate
     // makes the bypass airtight rather than resting on "no fixture url
-    // starts with the sentinel": Catalyst keeps `_ats_key = u_url` as
+    // starts with the sentinel": Catalyst keeps the coalesced key as
     // the equi key (the exchange still spreads the null rows) and
     // applies the null guard as a post-match filter, so a pathological
     // sentinel-prefixed fixture url can never spuriously unwrap a
     // non-aggregator row.
-    val withAts = j1
-      .withColumn("_lvl1", lvl1)
-      .withColumn("_ats_url",
-        when(col("_lvl1").isNull && isAgg && atsUrl =!= "", atsUrl))
-      .withColumn("_ats_key",
-        coalesce(col("_ats_url"), concat(lit(" "), col("url"))))
+    val withAts = links
+      .join(prefixed(side, "f_"), links("url") === col("f_url"), "left_outer")
+      .withColumn("_lvl1", level(col("url"), "f_"))
+      .withColumn("_ats_url", when(col("_lvl1").isNull && isAgg, atsLink))
       .join(prefixed(side, "u_"),
-        col("_ats_key") === col("u_url") && col("_ats_url").isNotNull,
+        coalesce(col("_ats_url"), concat(lit("\u0000"), col("url"))) === col("u_url") &&
+          col("_ats_url").isNotNull,
         "left_outer")
-      .drop("_ats_key")
 
-    val lvl2 = level(col("_ats_url"), "u_")
     // last resort: rendered else direct, from the original url's fixtures
     val lastResort = when(coalesce(col("f_rendered_html"), lit("")) =!= "", struct(
         lit("renderer").as("provider"), lit(200).as("status"),
@@ -253,11 +258,8 @@ object FetchCascade {
         coalesce(col("f_direct_html"), lit("")).as("html"),
         lit(null).cast("string").as("api_company"),
         lit(null).cast("string").as("api_role")))
-
-    val unwrapped = when(lvl2.isNotNull, lvl2.withField("provider",
-      concat(lvl2.getField("provider"), lit("-unwrapped"))))
-
-    val fetched = coalesce(col("_lvl1"), unwrapped, lastResort)
+    val fetched = coalesce(col("_lvl1"),
+      level(col("_ats_url"), "u_", tag = "-unwrapped"), lastResort)
 
     withAts
       .withColumn("fetched", fetched)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.functions.HtmlFns
 import graft.ops.Provenance
@@ -70,38 +71,39 @@ object Llm {
   def extractRescue(df: DataFrame, transport: LlmTransport,
                     promptCol: Column): DataFrame = {
     // nondeterministic pin: stops Catalyst from duplicating the transport
-    // call when downstream projections reference _llm_raw several times —
+    // call when downstream projections reference _llm_res several times —
     // with a real endpoint a duplicated UDF means duplicate model calls.
     val callUdf = guardedCall(transport)
     val needs = col("company") === "" || HtmlFns.is_generic_title(col("role"))
-    val parsed = from_json(brace_slice(col("_llm_raw")), extractSchema)
+    // the parsed completion is one named struct, read by field
+    val parsed = col("_llm_parsed")
     val gotAny = parsed.isNotNull &&
       (coalesce(parsed.getField("company"), lit("")) =!= "" ||
        coalesce(parsed.getField("role"), lit("")) =!= "")
-    df.withColumn("_needs_rescue", needs)
-      .withColumn("_llm_res", when(needs, callUdf(promptCol)))
-      .withColumn("_llm_raw", col("_llm_res._1"))
-      // V3 shape: the caller maps a non-empty llm_error to a row-level
-      // error status, message pre-truncated to the reference's 300
-      .withColumn("llm_error",
-        Provenance.error_message(col("_llm_res._2"), 300))
-      .withColumn("_llm_ok", needs && gotAny)
-      .withColumn("company",
-        when(col("_llm_ok") && col("company") === "",
-          coalesce(parsed.getField("company"), lit("")))
-        .otherwise(col("company")))
+    val ok = col("_llm_ok")
+    df.withColumns(ListMap(
+        "_needs_rescue" -> needs,
+        "_llm_res" -> when(needs, callUdf(promptCol))))
+      .withColumns(ListMap(
+        // V3 shape: the caller maps a non-empty llm_error to a row-level
+        // error status, message pre-truncated to the reference's 300
+        "llm_error" -> Provenance.error_message(col("_llm_res._2"), 300),
+        "_llm_parsed" -> from_json(brace_slice(col("_llm_res._1")), extractSchema)))
+      .withColumn("_llm_ok", col("_needs_rescue") && gotAny)
+      .withColumns(ListMap(
+        "company" -> when(ok && col("company") === "",
+            coalesce(parsed.getField("company"), lit("")))
+          .otherwise(col("company")),
+        "conf" -> when(ok, greatest(col("conf"), lit(0.6))).otherwise(col("conf")),
+        "extract_token" -> when(ok, lit("extract:{mode=llm}"))
+          .when(col("_needs_rescue"), lit("extract:{mode=llm, err=no-output}"))))
+      // the rescued role is cleaned against the rescued company
       .withColumn("role",
-        when(col("_llm_ok") && HtmlFns.is_generic_title(col("role")) &&
+        when(ok && HtmlFns.is_generic_title(col("role")) &&
           coalesce(parsed.getField("role"), lit("")) =!= "",
           graft.functions.RoleFns.clean_role(parsed.getField("role"), col("company")))
         .otherwise(col("role")))
-      .withColumn("conf",
-        when(col("_llm_ok"), greatest(col("conf"), lit(0.6)))
-          .otherwise(col("conf")))
-      .withColumn("extract_token",
-        when(col("_llm_ok"), lit("extract:{mode=llm}"))
-        .when(col("_needs_rescue"), lit("extract:{mode=llm, err=no-output}")))
-      .drop("_llm_res", "_llm_raw", "_llm_ok", "_needs_rescue")
+      .drop("_llm_res", "_llm_parsed", "_llm_ok", "_needs_rescue")
   }
 
   /** R5+R7 notes generation with template fallback: LLM first (when
@@ -111,34 +113,30 @@ object Llm {
                         promptCol: Column, useLlm: Boolean = true): DataFrame = {
     // nondeterministic pin — same rationale as extractRescue's transport.
     val callUdf = guardedCall(transport)
-    val parsed = from_json(brace_slice(col("_notes_raw")), notesSchema)
-    val ok = parsed.isNotNull &&
-      coalesce(parsed.getField("invite"), lit("")) =!= "" &&
-      coalesce(parsed.getField("followup"), lit("")) =!= ""
-    val base =
-      if (useLlm) df.withColumn("_notes_res", callUdf(promptCol))
-        .withColumn("_notes_raw", col("_notes_res._1"))
-        // reference lines 1176-1178: the LLM error is LOGGED (sliced to
-        // 300) and the row still falls back to template — a transport
-        // throw must not lose the note
-        .withColumn("llm_error",
-          Provenance.error_message(col("_notes_res._2"), 300))
-      else df.withColumn("_notes_res",
-          lit(null).cast("struct<_1:string,_2:string>"))
-        .withColumn("_notes_raw", lit(null).cast("string"))
-        .withColumn("llm_error", lit(""))
-    base
-      .withColumn("_llm_ok", ok)
-      .withColumn("li_invite",
-        substring(when(col("_llm_ok"), parsed.getField("invite"))
-          .otherwise(col("template_invite")), 1, 280))
-      .withColumn("li_followup",
-        when(col("_llm_ok"), parsed.getField("followup"))
-          .otherwise(col("template_followup")))
-      .withColumn("notes_mode",
-        when(col("_llm_ok"), lit("llm")).otherwise(lit("template")))
-      .withColumn("source", Provenance.source_token_upsert(col("source"), "notes",
-        Provenance.render_token("notes", Seq("mode" -> col("notes_mode")))))
-      .drop("_notes_res", "_notes_raw", "_llm_ok")
+    val parsed = col("_notes_parsed")
+    val ok = col("_llm_ok")
+    // reference lines 1176-1178: the LLM error is LOGGED (sliced to 300)
+    // and the row still falls back to template — a transport throw must
+    // not lose the note
+    val (res, err) =
+      if (useLlm) (callUdf(promptCol), Provenance.error_message(col("_notes_res._2"), 300))
+      else (lit(null).cast("struct<_1:string,_2:string>"), lit(""))
+    val mode = when(ok, lit("llm")).otherwise(lit("template"))
+    df.withColumn("_notes_res", res)
+      .withColumns(ListMap(
+        "llm_error" -> err,
+        "_notes_parsed" -> from_json(brace_slice(col("_notes_res._1")), notesSchema)))
+      .withColumn("_llm_ok", parsed.isNotNull &&
+        coalesce(parsed.getField("invite"), lit("")) =!= "" &&
+        coalesce(parsed.getField("followup"), lit("")) =!= "")
+      .withColumns(ListMap(
+        "li_invite" -> substring(when(ok, parsed.getField("invite"))
+          .otherwise(col("template_invite")), 1, 280),
+        "li_followup" -> when(ok, parsed.getField("followup"))
+          .otherwise(col("template_followup")),
+        "notes_mode" -> mode,
+        "source" -> Provenance.source_token_upsert(col("source"), "notes",
+          Provenance.render_token("notes", Seq("mode" -> mode)))))
+      .drop("_notes_res", "_notes_parsed", "_llm_ok")
   }
 }

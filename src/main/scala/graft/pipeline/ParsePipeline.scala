@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 import graft.ops.{Provenance, Resolution}
 
 /** §3.1 end-to-end parse stage: cascade fetch → signal fusion → renderer
@@ -16,33 +17,26 @@ object ParsePipeline {
 
   /** R3 escalation (reference lines 897-906): rows that parsed at conf 0
     * from a non-renderer provider get one re-parse on the rendered html;
-    * the better parse wins and the fetch token records the escalation. */
+    * the better parse wins and the fetch token records the escalation.
+    * One projection renames the first-pass columns and names the gate and
+    * the re-parse input, one merges the two passes. */
   def withEscalation(decided: DataFrame): DataFrame = {
-    // rename the first-pass columns, then gate the re-parse on them
-    val renamed = decided
-      .withColumnRenamed("company", "company_1")
-      .withColumnRenamed("role", "role_1")
-      .withColumnRenamed("canonical", "canonical_1")
-      .withColumnRenamed("conf", "conf_1")
-      .withColumnRenamed("decision", "decision_1")
-    val needs = col("conf_1") === 0.0 && col("provider") =!= "renderer" &&
+    val decisionCols = Seq("company", "role", "canonical", "conf", "decision")
+    val needs = col("conf") === 0.0 && col("provider") =!= "renderer" &&
       coalesce(col("rendered_html"), lit("")) =!= ""
+    val renamed = decided.select(decided.columns.toIndexedSeq.map { c =>
+      if (decisionCols.contains(c)) col(c).as(c + "_1") else col(c)
+    } ++ Seq(needs.as("_esc"),
+      when(needs, col("rendered_html")).otherwise(lit("")).as("_esc_html")): _*)
     // URL-derived signals are identical in both passes — reuse them when
     // the first pass kept them instead of re-running the URL regexes
-    val re = Resolution.decideCompanyRole(renamed,
-      when(needs, col("rendered_html")).otherwise(lit("")),
-      col("final_url"),
-      reuseUrlSignals = renamed.columns.contains("_canon"))
+    val re = Resolution.decideCompanyRole(renamed, col("_esc_html"),
+      col("final_url"), reuseUrlSignals = renamed.columns.contains("_canon"))
     val better = col("conf") > col("conf_1")
-    re
-      .withColumn("escalated", needs && better)
-      .withColumn("company", when(better, col("company")).otherwise(col("company_1")))
-      .withColumn("role", when(better, col("role")).otherwise(col("role_1")))
-      .withColumn("canonical", when(better, col("canonical")).otherwise(col("canonical_1")))
-      .withColumn("decision", when(better, col("decision")).otherwise(col("decision_1")))
-      .withColumn("conf", when(better, col("conf")).otherwise(col("conf_1")))
-      .drop("company_1", "role_1", "canonical_1", "conf_1", "decision_1",
-        "_host", "_is_agg", "_ats_slug", "_canon")
+    re.withColumns(ListMap("escalated" -> (col("_esc") && better)) ++
+        decisionCols.map(c => c -> when(better, col(c)).otherwise(col(c + "_1"))))
+      .drop(decisionCols.map(_ + "_1") ++ Seq("_esc", "_esc_html",
+        "_host", "_is_agg", "_ats_slug", "_canon"): _*)
   }
 
   /** Full parse stage over a links batch (columns: sheet_name, row_index,
@@ -52,15 +46,14 @@ object ParsePipeline {
     val fetched = FetchCascade(links, fixtures)
     val decided = Resolution.decideCompanyRole(fetched, col("html"),
       col("final_url"), keepUrlSignals = true)
-    val escalated = withEscalation(decided)
-    escalated.withColumn("parse_token",
-      Provenance.parse_token(col("provider"), col("decision"), col("conf")))
+    // upserting the parse token into an empty trail yields the token itself
+    withEscalation(decided)
+      .withColumn("parse_token",
+        Provenance.parse_token(col("provider"), col("decision"), col("conf")))
       .withColumn("source_new",
-        Provenance.source_token_upsert(lit(""), "parse", col("parse_token")))
-      .withColumn("source_new",
-        when(col("escalated"), Provenance.source_token_upsert(col("source_new"),
+        when(col("escalated"), Provenance.source_token_upsert(col("parse_token"),
           "fetch", lit("fetch:{escalated=renderer}")))
-          .otherwise(col("source_new")))
+          .otherwise(col("parse_token")))
   }
 
   /** J3/S9 write-back: overwrite derived columns on matching tracker rows,

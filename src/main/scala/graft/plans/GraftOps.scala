@@ -42,8 +42,14 @@ object GraftOps {
     // calls re-derived the per-user aggregate 6×). The sampling job
     // materializes the checkpoint; every later pass reads it.
     val src = df.localCheckpoint(false)
+    // The partition id is stamped ONCE and kept: the counts and the
+    // ranking below both read these rows. Derived per branch instead,
+    // each branch plans its own read of the range exchange, and without
+    // exchange reuse (or with AQE coalescing the two reads differently)
+    // the two can disagree on a row's partition, silently shifting ranks.
     val sorted = src.repartitionByRange(order: _*)
       .withColumn("__nt_part", spark_partition_id())
+      .localCheckpoint(false)
     val counts = sorted.groupBy(col("__nt_part"))
       .agg(count(lit(1)).as("__nt_cnt"))
     // tiny frame (one row per shuffle partition): the unpartitioned

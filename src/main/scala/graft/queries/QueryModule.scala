@@ -24,9 +24,21 @@ trait QueryModule {
   */
 object Dsl {
   /** Fresh temp dir for queries that materialize a layout under test
-    * (CSV sheets, queues, partitioned/bucketed/compacted parquet). */
-  def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    * (CSV sheets, queues, partitioned/bucketed/compacted parquet). It is
+    * removed, with everything under it, when the JVM exits: a query's
+    * frame may read it until then. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir.toString
+  }
+
+  /** Every [[tempDir]] of this JVM; one shutdown hook deletes them all. */
+  private lazy val tempDirs = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+    sys.addShutdownHook(dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+    dirs
+  }
 
   /** Exact 2-decimal sum: matches SQL `SUM(CAST(x AS DECIMAL(18,2)))`. */
   def dsum2(c: Column): Column = sum(c.cast(DecimalType(18, 2)))

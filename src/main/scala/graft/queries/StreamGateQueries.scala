@@ -44,22 +44,24 @@ object StreamGateQueries extends QueryModule {
     import scala.concurrent.duration.Duration
     val watch = Dsl.tempDir("graft_stream_watch_")
     val base = System.currentTimeMillis() - 3600L * 1000
-    val staged = waves.map { df =>
-      Future {
-        val stage = Dsl.tempDir("graft_stream_stage_")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        stage
-      }
+    val staged = waves.zipWithIndex.map { case (df, i) =>
+      Future(writeSingleFile(df, new java.io.File(watch, s"b$i.parquet"), base + i * 2000L))
     }
-    staged.zipWithIndex.foreach { case (f, i) =>
-      val stage = Await.result(f, Duration.Inf)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(watch, s"b$i.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(base + i * 2000L)
-    }
+    staged.foreach(Await.result(_, Duration.Inf))
     watch
+  }
+
+  /** Write `df` as the one parquet file `dest`, modified at `mtime`: it is
+    * written into a fresh stage dir, moved out, and the stage dir, which
+    * then holds only the writer's markers, deleted. */
+  private def writeSingleFile(df: DataFrame, dest: java.io.File, mtime: Long): Unit = {
+    val stage = Dsl.tempDir("graft_stream_stage_")
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, dest.toPath)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+    dest.setLastModified(mtime)
   }
 
   /** The gates' ordered file source: the parquet files in `watch` as a
@@ -1109,16 +1111,8 @@ object StreamGateQueries extends QueryModule {
     * stamped NOW — strictly after anything [[stageWaves]] stamped (its
     * base rides an hour in the past), so a second drain over the same
     * checkpoint picks it up as the next batch. */
-  private def appendWave(watch: String, df: DataFrame, name: String): Unit = {
-    val stage = Dsl.tempDir("graft_stream_stage_")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val dest = new java.io.File(watch, name)
-    java.nio.file.Files.move(part.toPath, dest.toPath)
-    dest.setLastModified(System.currentTimeMillis())
-    ()
-  }
+  private def appendWave(watch: String, df: DataFrame, name: String): Unit =
+    writeSingleFile(df, new java.io.File(watch, name), System.currentTimeMillis())
 
   /** T27 — DELETE/RETRACTION through the maintained VIEW, the one store
     * family member whose takedown couldn't land before round 17 (the

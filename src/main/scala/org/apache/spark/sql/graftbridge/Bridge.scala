@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Column ↔ Expression bridge. Spark 4 moved Column construction behind
   * `org.apache.spark.sql.classic` (package-private to `sql`); custom
@@ -25,6 +27,14 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `df` cached at `level` like `Dataset.persist` — computed on first
+    * use, its rows kept for every later read of the returned frame — but
+    * without an entry in the session's CacheManager: no other query's
+    * cache lookup sees it, nothing outlives the frame, and ContextCleaner
+    * frees the blocks once the frame is unreachable. */
+  def cacheUnregistered(df: DataFrame, level: StorageLevel): DataFrame =
+    ofRows(df.sparkSession, InMemoryRelation(level, df.queryExecution, None))
 
   /** The analyzed logical plan behind a DataFrame. */
   def logicalPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed

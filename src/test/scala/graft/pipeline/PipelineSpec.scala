@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
 
 /** Top-level (no `$outer` capture — the client ships to executors): a
   * FetchClient whose failure modes are keyed by host — timeout throw,
@@ -317,6 +318,23 @@ class PipelineSpec extends SparkSpec {
     assert(out("https://reset.example/job") == null)
   }
 
+  test("live mode: parsing over live fixtures leaves no cache entry behind") {
+    // both fixture waves and the cascade's signal side are read twice;
+    // whatever keeps them for the second read must not outlive the
+    // trigger as a CacheManager entry that every later lookup scans
+    spark.catalog.clearCache()
+    val client = FetchCascade.FixtureClient(directs = Map(
+      "https://direct.example/job" -> (200 -> richHtml),
+      "https://www.linkedin.com/jobs/view/1" -> (200 -> aggHtml),
+      "https://jobs.lever.co/acme/123" -> (200 -> h1Html)))
+    val ls = links("https://direct.example/job", "https://www.linkedin.com/jobs/view/1")
+    val out = ParsePipeline.parse(ls, FetchCascade.liveFixtures(ls, client))
+      .select("url", "provider").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(out("https://www.linkedin.com/jobs/view/1") == "direct-unwrapped")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the live fetch or the cascade left a cached frame behind")
+  }
+
   test("llm extract: a throwing transport captures the error and fills nothing") {
     val longMsg = "HTTP 529 overloaded: " + ("y" * 500)
     val rows = Seq(
@@ -417,5 +435,29 @@ class PipelineSpec extends SparkSpec {
     assert(acc.value == fixtures.count(),
       s"fixture side evaluated ${acc.value}x for ${fixtures.count()} rows " +
         "— the signal projection must run once, not once per join")
+  }
+
+  test("plan size: parse → rescue builds each costly value once") {
+    // A Column is an expression tree, not a value: read twice as a Column
+    // it is planned twice. At the parent of this check the frame below
+    // held 5,015 expression nodes in its optimized plan, its largest
+    // Alias (`fetched`) held 1,228 and the rescue's `role` 701, and the
+    // analyzed plan had 89 operators.
+    val allUrls = fixtures.select("url").collect().map(_.getString(0))
+    val transport = Llm.FixtureTransport(_ => Some("""{"company":"C","role":"R"}"""))
+    val rescued = Llm.extractRescue(
+      ParsePipeline.parse(links(allUrls.toIndexedSeq: _*), fixtures),
+      transport, concat(lit("EXTRACT "), col("url")))
+    def nodes(e: Expression): Int = { var n = 0; e.foreach(_ => n += 1); n }
+    val opt = rescued.queryExecution.optimizedPlan
+    val total = opt.collect { case p => p.expressions.map(nodes).sum }.sum
+    assert(total <= 5015 / 2, s"optimized plan holds $total expression nodes")
+    val aliases = opt.collect { case p =>
+      p.expressions.flatMap(_.collect { case a: Alias => a.name -> nodes(a) })
+    }.flatten
+    val (name, largest) = aliases.maxBy(_._2)
+    assert(largest <= 250, s"alias $name holds $largest expression nodes")
+    val operators = rescued.queryExecution.analyzed.collect { case p => p }.size
+    assert(operators <= 50, s"analyzed plan has $operators operators")
   }
 }

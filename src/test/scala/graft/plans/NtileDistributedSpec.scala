@@ -41,6 +41,22 @@ class NtileDistributedSpec extends SparkSpec {
       desc = false) // heavy duplicate-key skew
   }
 
+  test("matches global ntile without exchange reuse or AQE") {
+    // the counts and the ranking must agree on each row's range
+    // partition even when nothing makes their two reads share one
+    // exchange instance
+    val keys = Seq("spark.sql.exchange.reuse", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "false"))
+    try {
+      check(n = 103, tiles = 4, keyOf = i => (i * 37 % 11).toLong, desc = false)
+      check(n = 500, tiles = 7, keyOf = i => (i * 7919 % 97).toLong, desc = true)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("plans no single-partition window over the data") {
     val df = (0 until 50).map(i => (i.toLong, (i % 5).toLong)).toDF("id", "k")
     val plan = GraftOps.ntileDistributed(df, 4,
