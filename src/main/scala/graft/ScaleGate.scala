@@ -84,7 +84,7 @@ object ScaleGate {
     import graft.dedup.Dedup
     val emb = Tables.spread(Tables.embeddings(s, dir))
     val pairs = Dedup.embeddingPairs(emb, col("vec_id"), col("embedding"),
-        minCosine = 0.4, portable = true, dim = 64,
+        minCosine = 0.4, dim = 64,
         maxBucket = Int.MaxValue)
       .filter(col("id_a") >= StratumBase && col("id_b") >= StratumBase)
       .select(col("id_a"), col("id_b"))

@@ -23,11 +23,11 @@ import graft.functions.{TextFns, VectorFns}
   *    the threshold, and hot-shingle skew no longer produces n² rows;
   *  - `id < id2` keeps each pair once and makes output deterministic.
   *
-  * The signature families hash with codegen'd xxhash64 by default; each
-  * operator takes `portable = true` to hash via
-  * [[graft.functions.TextFns.portable_hash60]] (md5-derived) instead, so
-  * an independent engine — the DuckDB correctness oracle — can rebuild
-  * byte-identical signatures. Same plan shape, swappable hash.
+  * Every signature family hashes through md5
+  * ([[graft.functions.TextFns.portable_hash60]] and its one-digest
+  * MinHash and hyperplane-weight siblings), so an independent engine —
+  * the DuckDB correctness oracle — rebuilds byte-identical signatures,
+  * and the operators a pipeline runs are the ones the oracle verifies.
   */
 object Dedup {
 
@@ -44,24 +44,17 @@ object Dedup {
     * 30× faster at sf0.1 and the right plan at 100 TB: partial min on the
     * map side means the shuffle carries `numHashes` longs per doc).
     *
-    * The default path seeds xxhash64 per slot (codegen'd, the 100 TB
-    * choice); the portable path digests each shingle ONCE and derives all
-    * slots by double hashing ([[graft.expressions.PortableMinHashes]]),
-    * so the md5 cost is per-shingle, not per-shingle-per-seed. */
+    * Each shingle is digested ONCE and all slots derive by double
+    * hashing ([[graft.expressions.PortableMinHashes]]), so the md5 cost
+    * is per-shingle, not per-shingle-per-seed; `numHashes` ≤ 63. */
   def minhashSignatures(docs: DataFrame, id: Column, text: Column,
-                        numHashes: Int, portable: Boolean = false): DataFrame = {
-    val shingled = docs.select(id.as("id"),
-      explode(TextFns.word_shingles(text)).as("shingle"))
-    val hashed =
-      if (portable) shingled.select(col("id"),
-        graft.expressions.PortableMinHashes
-          .portable_minhashes(col("shingle"), numHashes).as("hs"))
-      else shingled
+                        numHashes: Int): DataFrame = {
+    val hashed = docs.select(id.as("id"),
+        explode(TextFns.word_shingles(text)).as("shingle"))
+      .select(col("id"), graft.expressions.PortableMinHashes
+        .portable_minhashes(col("shingle"), numHashes).as("hs"))
     val minCols = (0 until numHashes).map { seed =>
-      val slot =
-        if (portable) element_at(col("hs"), seed + 1)
-        else xxhash64(lit(seed), col("shingle"))
-      min(slot).as(s"h$seed")
+      min(element_at(col("hs"), seed + 1)).as(s"h$seed")
     }
     hashed.groupBy("id").agg(minCols.head, minCols.tail: _*)
       .select(col("id"),
@@ -90,17 +83,14 @@ object Dedup {
     * count only when replaying a pinned config. */
   def minhashPairs(docs: DataFrame, id: Column, text: Column,
                    numHashes: Int = 32, bands: Int = 0,
-                   minAgreement: Double = 0.5,
-                   portable: Boolean = false): DataFrame = {
+                   minAgreement: Double = 0.5): DataFrame = {
     val nBands =
       if (bands > 0) bands else chooseBands(numHashes, minAgreement)._1
     val rowsPerBand = numHashes / nBands
-    val sigs = minhashSignatures(docs, id, text, numHashes, portable)
+    val sigs = minhashSignatures(docs, id, text, numHashes)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val bandKeys =
-      if (portable) TextFns.minhash_band_strings(col("sig"), nBands, rowsPerBand)
-      else TextFns.minhash_bands(col("sig"), nBands, rowsPerBand)
-    val banded = sigs.select(col("id"), explode(bandKeys).as("bk"))
+    val banded = sigs.select(col("id"),
+      explode(TextFns.minhash_bands(col("sig"), nBands, rowsPerBand)).as("bk"))
     val pairs = banded.select(col("id").as("id_a"), col("bk"))
       .join(banded.select(col("id").as("id_b"), col("bk")), Seq("bk"))
       .filter(col("id_a") < col("id_b"))
@@ -168,16 +158,12 @@ object Dedup {
   def minhashIncremental(corpusSigs: DataFrame, deltaSigs: DataFrame,
                          bands: Int = 8, rowsPerBand: Int = 4,
                          minAgreement: Double = 0.5,
-                         portable: Boolean = false,
                          broadcastDelta: Boolean = false,
                          broadcastPairsUpTo: Long = 2000000L): DataFrame = {
     val numHashes = bands * rowsPerBand
-    def banded(sigs: DataFrame): DataFrame = {
-      val keys =
-        if (portable) TextFns.minhash_band_strings(col("sig"), bands, rowsPerBand)
-        else TextFns.minhash_bands(col("sig"), bands, rowsPerBand)
-      sigs.select(col("id"), explode(keys).as("bk"))
-    }
+    def banded(sigs: DataFrame): DataFrame =
+      sigs.select(col("id"),
+        explode(TextFns.minhash_bands(col("sig"), bands, rowsPerBand)).as("bk"))
     val build = banded(corpusSigs).withColumn("is_corpus", lit(true))
       .unionByName(banded(deltaSigs).withColumn("is_corpus", lit(false)))
       .select(col("id").as("cand_id"), col("bk"), col("is_corpus"))
@@ -233,30 +219,25 @@ object Dedup {
   }
 
   /** SimHash signatures, same single-pass shape: hash each shingle once,
-    * take per-bit majority votes in one codegen'd aggregation. The
-    * portable variant votes over 60 bits (the md5-derived hash width);
-    * the default over xxhash64's full 64. */
-  def simhashSignatures(docs: DataFrame, id: Column, text: Column,
-                        portable: Boolean = false): DataFrame = {
-    val numBits = simhashBits(portable)
+    * take per-bit majority votes in one codegen'd aggregation, over the
+    * [[simhashBits]] bits of the md5-derived hash. */
+  def simhashSignatures(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val hashed = docs.select(id.as("id"),
       explode(TextFns.word_shingles(text)).as("shingle"))
-      .select(col("id"),
-        (if (portable) TextFns.portable_hash60(col("shingle"))
-         else xxhash64(col("shingle"))).as("h"))
-    val voteCols = (0 until numBits).map { b =>
+      .select(col("id"), TextFns.portable_hash60(col("shingle")).as("h"))
+    val voteCols = (0 until simhashBits).map { b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1))
         .as(s"v$b")
     }
     hashed.groupBy("id").agg(voteCols.head, voteCols.tail: _*)
       .select(col("id"),
-        (0 until numBits).map { b =>
+        (0 until simhashBits).map { b =>
           when(col(s"v$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
         }.reduce(_.bitwiseOR(_)).as("sig"))
   }
 
-  /** Signature width per hash family. */
-  def simhashBits(portable: Boolean): Int = if (portable) 60 else 64
+  /** SimHash signature width: the md5-derived hash's 60 bits. */
+  val simhashBits: Int = 60
 
   /** SimHash near-dup pairs: docs whose signatures are within `maxHamming`
     * bits.
@@ -268,13 +249,12 @@ object Dedup {
     * unlike single-prefix blocking which misses pairs differing inside
     * the prefix). Cost: blocks × n join rows instead of n². */
   def simhashPairs(docs: DataFrame, id: Column, text: Column,
-                   maxHamming: Int = 8, portable: Boolean = false): DataFrame = {
-    val numBits = simhashBits(portable)
+                   maxHamming: Int = 8): DataFrame = {
     val blocks = maxHamming + 1
-    val sigs = simhashSignatures(docs, id, text, portable)
+    val sigs = simhashSignatures(docs, id, text)
     val blockKeys = array((0 until blocks).map { i =>
-      val start = i * numBits / blocks
-      val width = (i + 1) * numBits / blocks - start
+      val start = i * simhashBits / blocks
+      val width = (i + 1) * simhashBits / blocks - start
       val mask = (1L << width) - 1
       struct(lit(i).as("blk"),
         shiftright(col("sig"), start).bitwiseAND(lit(mask)).as("key"))
@@ -391,9 +371,10 @@ object Dedup {
         col("survivor_id"), col("cluster_size"))
   }
 
-  /** Embedding-cosine near-dup pairs via hyperplane-LSH blocking.
-    * `portable = true` derives the hyperplanes from md5 (oracle-
-    * replicable); default is xxhash64.
+  /** Embedding-cosine near-dup pairs via hyperplane-LSH blocking; the
+    * hyperplanes and the cap's per-id draw derive from md5, so the
+    * oracle replays both. `dim` is the vector width the plan-time
+    * hyperplane weights are built for.
     *
     * Hot-bucket bound: a degenerate embedding cluster (and a near-dup
     * corpus is exactly that) can put n docs in ONE bucket — n² pairs
@@ -424,22 +405,17 @@ object Dedup {
     * (e.g. an oracle contract). */
   def embeddingPairs(vecs: DataFrame, id: Column, vec: Column,
                      minCosine: Double = 0.95, planes: Int = 0,
-                     portable: Boolean = false, dim: Int = 64,
+                     dim: Int = 64,
                      maxBucket: Int = 4096): DataFrame = {
     val nPlanes =
       if (planes > 0) planes
       else choosePlanes(math.max(1L, vecs.count()))
-    val bucket =
-      if (portable) VectorFns.hyperplane_bucket_portable(vec, nPlanes, dim)
-      else VectorFns.hyperplane_bucket(vec, nPlanes)
-    val bucketed = vecs.select(id.as("id"), vec.as("v"), bucket.as("bucket"))
-    val draw =
-      if (portable) md5(col("id").cast("string"))
-      else xxhash64(col("id"))
+    val bucketed = vecs.select(id.as("id"), vec.as("v"),
+      VectorFns.hyperplane_bucket(vec, nPlanes, dim).as("bucket"))
     val capped =
       if (maxBucket == Int.MaxValue) bucketed
       else graft.plans.GraftOps.topKPerKey(
-        bucketed.withColumn("_draw", draw),
+        bucketed.withColumn("_draw", md5(col("id").cast("string"))),
         Seq(col("bucket")), Seq(col("_draw"), col("id")), maxBucket)
         .drop("_draw")
     val a = capped.select(col("id").as("id_a"), col("v").as("v_a"), col("bucket"))
@@ -478,16 +454,13 @@ object Dedup {
     * past the cap. */
   def embeddingIncremental(corpusVecs: DataFrame, deltaVecs: DataFrame,
                            planes: Int, minCosine: Double,
-                           portable: Boolean = false, dim: Int = 64,
+                           dim: Int = 64,
                            broadcastDelta: Boolean = false,
                            broadcastPairsUpTo: Long = 2000000L): DataFrame = {
     require(planes > 0, s"planes must be positive: $planes")
-    def bucketed(vecs: DataFrame): DataFrame = {
-      val b =
-        if (portable) VectorFns.hyperplane_bucket_portable(col("v"), planes, dim)
-        else VectorFns.hyperplane_bucket(col("v"), planes)
-      vecs.select(col("id"), b.as("bucket"))
-    }
+    def bucketed(vecs: DataFrame): DataFrame =
+      vecs.select(col("id"),
+        VectorFns.hyperplane_bucket(col("v"), planes, dim).as("bucket"))
     val build = bucketed(corpusVecs).withColumn("is_corpus", lit(true))
       .unionByName(bucketed(deltaVecs).withColumn("is_corpus", lit(false)))
       .select(col("id").as("cand_id"), col("bucket"), col("is_corpus"))

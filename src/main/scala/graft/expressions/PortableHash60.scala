@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hex-digit arithmetic ([[graft.queries.Dsl.hex60Sql]]) — computed
   * straight from the digest bytes. Skipping the hex-string render and
   * the base-16 string parse, and reusing a thread-local MessageDigest,
-  * makes the portable signature pipelines ~2× cheaper while producing
+  * makes the md5 signature pipelines ~2× cheaper while producing
   * byte-identical values.
   *
   * First 15 hex chars = bytes 0..6 plus the high nibble of byte 7:
@@ -64,7 +64,7 @@ case class PortableHash60Expr(child: Expression) extends UnaryExpression {
   * double hashing: slot_i = (h1 + i·h2) mod 2^60, where h1 is the first
   * 15 hex chars of md5(s) (60 bits) and h2 the next 14 (56 bits). One
   * digest per shingle replaces `numHashes` digests of seed-prefixed
-  * strings — the dominant cost of the portable signature path — while
+  * strings — the dominant cost of the signature path — while
   * staying engine-reproducible: i ≤ 63 keeps i·h2 < 2^62, so
   * h1 + i·h2 < 2^63 never overflows a signed 64-bit value and DuckDB's
   * checked BIGINT arithmetic computes the identical result

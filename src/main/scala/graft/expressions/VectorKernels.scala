@@ -167,15 +167,20 @@ object VectorKernels {
     * mismatch with the weight row nulls that plane's projection and
     * the original's `when(proj > 0, bit).otherwise(0)` maps it to 0 —
     * so such rows land in bucket 0 rather than erroring, exactly as
-    * before. Weight rows are data-independent (md5 of "plane,dim" for
-    * the portable variant, xxhash64 of (plane, index) otherwise), so
-    * the matrix is resolved once at plan time, never per row. */
+    * before. `proj > 0` is SQL's comparison: a NaN projection (a NaN
+    * element, or +Inf meeting −Inf) is greatest and sets the bit, and
+    * −0.0 ties 0.0 — the order Spark and the DuckDB oracle apply,
+    * which a plain `>` breaks on NaN. Weight rows are data-independent
+    * (md5 of "plane,dim"), so the matrix is resolved once at plan
+    * time, never per row. */
   def bucket(v: ArrayData, weights: Array[Array[Double]], tag: Int): Int = {
     var result = 0
     var p = 0
     while (p < weights.length) {
       val w = w2(v, weights(p), tag)
-      if (w != null && w.doubleValue() > 0.0) result |= (1 << p)
+      if (w != null && org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(w.doubleValue(), 0.0) > 0)
+        result |= (1 << p)
       p += 1
     }
     result
@@ -194,40 +199,6 @@ object VectorKernels {
       i += 1
     }
     java.lang.Double.valueOf(acc)
-  }
-
-  /** The xxhash64 weight row for plane `p`, matching
-    * `xxhash64(lit(p), i)`'s low bit: seed 42, hashInt(p) then
-    * hashInt(i). Data-independent, cached per (planes-count-free) index
-    * so growing vector widths extend, never recompute. */
-  def xxWeightRow(p: Int, dim: Int): Array[Double] = {
-    val row = new Array[Double](dim)
-    val hp = org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashInt(p, 42L)
-    var i = 0
-    while (i < dim) {
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(i, hp)
-      row(i) = if ((h & 1L) == 1L) 1.0 else -1.0
-      i += 1
-    }
-    row
-  }
-
-  /** The ±1 weight matrix for the xxhash64 variant at a given width —
-    * cached (data-independent plan constants, the same way the portable
-    * variant's md5 weights are plan literals). */
-  private val xxCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()
-  def xxWeights(planes: Int, dim: Int): Array[Array[Double]] =
-    xxCache.computeIfAbsent((planes, dim),
-      _ => Array.tabulate(planes)(p => xxWeightRow(p, dim)))
-
-  /** Bucket for the xxhash64 variant, where the vector width is not
-    * known at plan time: the weight matrix is looked up (and lazily
-    * built) for the row's own width. */
-  def bucketXx(v: ArrayData, planes: Int, tag: Int): Int = {
-    if (v == null) return 0
-    bucket(v, xxWeights(planes, v.numElements()), tag)
   }
 
   // ------------------------------------------------ nearest centroid
@@ -416,9 +387,6 @@ object VectorKernels {
   def hyperplane_bucket_fused(v: Column, weights: Array[Array[Double]]): Column =
     Bridge.column(HyperplaneBucketExpr(Bridge.expression(v), weights))
 
-  def hyperplane_bucket_xx(v: Column, planes: Int): Column =
-    Bridge.column(HyperplaneBucketXxExpr(Bridge.expression(v), planes))
-
   def quantize_scale_fused(v: Column): Column =
     Bridge.column(QuantScaleExpr(Bridge.expression(v)))
 
@@ -522,8 +490,8 @@ case class SigAgreementExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** LSH bucket over a plan-time weight matrix (the portable md5
-  * variant's literals, fused). NEVER null: a null/mismatched vector
+/** LSH bucket over a plan-time weight matrix (the md5-derived
+  * literals of [[graft.functions.VectorFns.hyperplane_bucket]], fused). NEVER null: a null/mismatched vector
   * degrades to bucket 0 (the original when/otherwise chain's value),
   * so eval and codegen handle the null child themselves. */
 case class HyperplaneBucketExpr(child: Expression,
@@ -560,42 +528,6 @@ case class HyperplaneBucketExpr(child: Expression,
 
   override protected def withNewChildInternal(
       newChild: Expression): HyperplaneBucketExpr = copy(child = newChild)
-}
-
-/** LSH bucket for the xxhash64-weight variant, where the vector width
-  * is a runtime property: the (data-independent) weight matrix is
-  * cached per (planes, width). Same never-null degradation. */
-case class HyperplaneBucketXxExpr(child: Expression, planes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-  override def prettyName: String = "hyperplane_bucket_xx_fused"
-
-  @transient private lazy val tag: Int = child.dataType match {
-    case ArrayType(et, _) => VectorKernels.typeTag(et)
-    case other => throw new IllegalArgumentException(
-      s"$prettyName expects array<numeric>, got $other")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) 0
-    else VectorKernels.bucketXx(v.asInstanceOf[ArrayData], planes, tag)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      |${c.code}
-      |int ${ev.value} = graft.expressions.VectorKernels.bucketXx(
-      |  ${c.isNull} ? null : ${c.value}, $planes, $tag);
-      |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HyperplaneBucketXxExpr = copy(child = newChild)
 }
 
 /** max |xᵢ| — the int8 quantization scale. */

@@ -130,33 +130,12 @@ object TextFns {
         i => md5(norm.substr(i, lit(k)).cast("binary")))))
   }
 
-  /** MinHash signature: for each of `numHashes` seeds, the min of
-    * xxhash64(seed, shingle) over the shingle set. Two docs' signatures
-    * agree per-position with probability = their Jaccard similarity.
-    *
-    * Per-row scalar variant (interpreted HOFs — one pass per seed); for
-    * dataset-sized inputs use [[graft.dedup.Dedup.minhashSignatures]],
-    * the single-pass explode/groupBy shape, which computes identical
-    * signatures ~30× faster. */
-  def minhash_signature(shingles: Column, numHashes: Int = 32): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingles, sh => xxhash64(lit(seed), sh)))
-    }: _*)
-
-  /** LSH band keys from a MinHash signature: `bands` hashes over
-    * consecutive rows of the signature. Docs sharing any band key are
-    * near-dup candidates — the join key that avoids the O(n²) compare. */
+  /** LSH band keys from a MinHash signature: per band, the band index
+    * and that band's `rowsPerBand` signature slots rendered as one
+    * string, so any engine can rebuild the exact key (the correctness
+    * oracle does). Docs sharing any band key are near-dup candidates —
+    * the join key that avoids the O(n²) compare. */
   def minhash_bands(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(signature, b * rowsPerBand + 1, rowsPerBand)).as("key"))
-    }: _*)
-
-  /** Engine-portable variant of [[minhash_bands]]: the band key is the
-    * band index + the raw signature slice rendered as a string, so any
-    * engine can rebuild the exact key (the correctness oracle does).
-    * ~10× wider than the hashed key — prefer [[minhash_bands]] at scale. */
-  def minhash_band_strings(signature: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
       concat_ws("|", lit(b) +:
         (0 until rowsPerBand).map(r => element_at(signature, b * rowsPerBand + r + 1)): _*)
@@ -168,26 +147,11 @@ object TextFns {
     * used by the correctness gate to replicate signature pipelines
     * exactly. Backed by the native codegen'd expression
     * [[graft.expressions.PortableHash60]] (digest bytes → long directly,
-    * no hex render / string parse). The codegen'd xxhash64 family stays
-    * the scale-path default. */
+    * no hex render / string parse). SimHash and the hashed grams call
+    * it directly; MinHash slots and hyperplane weights take the same
+    * md5 prefix. */
   def portable_hash60(s: Column): Column =
     graft.expressions.PortableHash60.portable_hash60(s)
-
-  /** 64-bit SimHash over word shingles: per-bit majority vote of shingle
-    * hashes. Near-dup docs differ in few bits (Hamming distance).
-    *
-    * Per-row scalar variant; for dataset-sized inputs use
-    * [[graft.dedup.Dedup.simhashSignatures]] (identical signatures,
-    * single codegen'd aggregation pass). */
-  def simhash64(shingles: Column): Column = {
-    val bits = (0 until 64).map { b =>
-      val vote = aggregate(shingles, lit(0),
-        (acc, sh) => acc + when(shiftright(xxhash64(sh), b).bitwiseAND(1) === 1,
-          lit(1)).otherwise(lit(-1)))
-      when(vote > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce(_.bitwiseOR(_))
-  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

@@ -63,7 +63,7 @@ object VectorFns {
     * scale = max|x| — the 4× storage cut (float32 → int8) an embedding
     * store takes at corpus scale, as a pure codegen'd projection. The
     * ⌊·+½⌋ convention (not `round`) keeps every lane integer-exact and
-    * engine-portable: floor is IEEE-deterministic where banker's/half-up
+    * engine-portable, because floor is IEEE-deterministic where banker's/half-up
     * tie rules differ between engines. Zero vectors quantize to zeros.
     *
     * The scale is a PRECOMPUTED column (e.g. a
@@ -95,30 +95,6 @@ object VectorFns {
       (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v)
 
-  /** Random-hyperplane LSH bucket: sign bits of dot products against
-    * `planes` pseudo-random hyperplanes derived from xxhash64 of the
-    * element index and plane seed (deterministic, data-independent).
-    * Vectors in the same bucket are cosine-similar candidates — the
-    * 100 TB path that replaces the all-pairs cross join. */
-  def hyperplane_bucket(vec: Column, planes: Int = 8): Column =
-    VectorKernels.hyperplane_bucket_xx(vec, planes)
-
-  /** The HOF formulation [[hyperplane_bucket]] fused — executable spec. */
-  private[graft] def hyperplaneBucketHof(vec: Column, planes: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      // pseudo-random ±1 weights per (plane, dimension), summed via
-      // position-aware transform; sign of the projection is the bit.
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (x, i) =>
-          x.cast("double") *
-            when(xxhash64(lit(p), i).bitwiseAND(1) === 1, lit(1.0))
-              .otherwise(lit(-1.0))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1), p)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** The ±1 weight for (plane p, dimension i): the low bit of the first
     * 15 hex chars of md5("p,i") — i.e. the low bit of
     * [[graft.functions.TextFns.portable_hash60]] over the same string,
@@ -132,21 +108,24 @@ object VectorFns {
     if ((Integer.parseInt(hex.substring(14, 15), 16) & 1) == 1) 1.0 else -1.0
   }
 
-  /** Engine-portable variant of [[hyperplane_bucket]]: the ±1 weights
-    * derive from md5 of "plane,dim" (see [[portableWeight]]), so any
-    * engine with md5 — the correctness oracle — rebuilds identical
-    * hyperplanes. Weights are plan-time constants (`dim` must be the
-    * actual vector length); per row the fused kernel runs the same
-    * left-to-right double accumulation the oracle's list_sum uses. */
-  def hyperplane_bucket_portable(vec: Column, planes: Int = 8,
-                                 dim: Int = 64): Column =
+  /** Random-hyperplane LSH bucket: sign bits of the dot products
+    * against `planes` hyperplanes whose ±1 weights derive from md5 of
+    * "plane,dim" (see [[portableWeight]]), so any engine with md5 — the
+    * correctness oracle — rebuilds identical buckets. Vectors in the
+    * same bucket are cosine-similar candidates — the path that replaces
+    * the all-pairs cross join. Weights are plan-time constants (`dim`
+    * must be the actual vector length); per row the fused kernel runs
+    * the same left-to-right double accumulation the oracle's list_sum
+    * uses. */
+  def hyperplane_bucket(vec: Column, planes: Int = 8,
+                        dim: Int = 64): Column =
     VectorKernels.hyperplane_bucket_fused(vec,
       Array.tabulate(planes, dim)((p, i) => portableWeight(p, i)))
 
-  /** The HOF formulation [[hyperplane_bucket_portable]] fused —
-    * executable spec. */
-  private[graft] def hyperplaneBucketPortableHof(vec: Column, planes: Int,
-                                                 dim: Int): Column = {
+  /** The HOF formulation [[hyperplane_bucket]] fused — executable
+    * spec. */
+  private[graft] def hyperplaneBucketHof(vec: Column, planes: Int,
+                                         dim: Int): Column = {
     val bits = (0 until planes).map { p =>
       val weights = array((0 until dim).map(i => lit(portableWeight(p, i))): _*)
       val proj = aggregate(

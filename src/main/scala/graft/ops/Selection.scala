@@ -105,26 +105,21 @@ object Selection {
         .as("pass"))
   }
 
+  /** A gram's bucket, `pmod(portable_hash60(gram), buckets)` — the
+    * dedup signature families' md5-derived hash, so the DuckDB oracle
+    * replays the bucketing digit-for-digit. */
+  private def gramBucket(gram: Column, buckets: Int): Column =
+    pmod(TextFns.portable_hash60(gram), lit(buckets.toLong))
+
   /** Hashed n-gram occurrences: one row per unigram + bigram occurrence,
-    * mapped to `pmod(hash(gram), buckets)`. Empty docs emit nothing
-    * (restored by the left join in [[importanceWeights]]).
-    *
-    * Same hash convention as the dedup signature families: codegen'd
-    * xxhash64 is the scale default; `portable = true` swaps in
-    * [[TextFns.portable_hash60]] so the DuckDB oracle can replay the
-    * bucketing digit-for-digit — the gated queries pin portable mode.
-    * Measured honestly: on this operator the two modes time the SAME
-    * (±5% at the 10× image) because the split/explode gram construction
-    * dominates, not the hash — the flag is here for convention and for
-    * engines where md5 is the bottleneck, not as a measured win. */
+    * mapped to its [[gramBucket]]. Empty docs emit nothing (restored by
+    * the left join in [[importanceWeights]]). */
   private def hashedGrams(df: DataFrame, id: Column, text: Column,
-                          buckets: Int, portable: Boolean): DataFrame =
+                          buckets: Int): DataFrame =
     df.select(id.as("doc_id"),
       explode(concat(TextFns.word_grams(text, 1), TextFns.word_grams(text, 2)))
         .as("gram"))
-      .select(col("doc_id"),
-        pmod(if (portable) TextFns.portable_hash60(col("gram"))
-             else xxhash64(col("gram")), lit(buckets.toLong)).as("b"))
+      .select(col("doc_id"), gramBucket(col("gram"), buckets).as("b"))
 
   /** Per-bucket importance scorecard: for every bucket seen in either
     * corpus, the integer bit-score
@@ -165,11 +160,10 @@ object Selection {
     * and the per-doc reduce is map-side partial. Nothing driver-side. */
   def importanceWeights(raw: DataFrame, target: DataFrame,
                         id: Column, text: Column,
-                        buckets: Int = 512,
-                        portable: Boolean = false): DataFrame = {
+                        buckets: Int = 512): DataFrame = {
     require(buckets > 0, s"buckets: $buckets")
-    val rawG = hashedGrams(raw, id, text, buckets, portable)
-    val tgtG = hashedGrams(target, id, text, buckets, portable)
+    val rawG = hashedGrams(raw, id, text, buckets)
+    val tgtG = hashedGrams(target, id, text, buckets)
     val scores = bucketScores(rawG, tgtG, buckets)
     val perDoc = rawG.join(broadcast(scores), Seq("b"))
       .groupBy("doc_id")
@@ -203,16 +197,13 @@ object Selection {
   def distributionDrift(corpus: DataFrame,
                         beforeCond: Column, afterCond: Column,
                         text: Column,
-                        buckets: Int = 512,
-                        portable: Boolean = false): DataFrame = {
+                        buckets: Int = 512): DataFrame = {
     require(buckets > 0, s"buckets: $buckets")
     val g = corpus.filter(beforeCond || afterCond)
       .select(beforeCond.as("in_b"), afterCond.as("in_a"),
         explode(concat(TextFns.word_grams(text, 1),
           TextFns.word_grams(text, 2))).as("gram"))
-      .select(col("in_b"), col("in_a"),
-        pmod(if (portable) TextFns.portable_hash60(col("gram"))
-             else xxhash64(col("gram")), lit(buckets.toLong)).as("b"))
+      .select(col("in_b"), col("in_a"), gramBucket(col("gram"), buckets).as("b"))
     def bits(total: String, c: String): String =
       s"length(bin(($total + ${buckets.toLong}) div (coalesce($c, 0L) + 1L))) - 1"
     val both = g.groupBy("b").agg(
@@ -241,12 +232,11 @@ object Selection {
   def importanceResample(raw: DataFrame, target: DataFrame,
                          id: Column, text: Column,
                          buckets: Int = 512,
-                         keepNum: Int = 1, keepDen: Int = 4,
-                         portable: Boolean = false): DataFrame = {
+                         keepNum: Int = 1, keepDen: Int = 4): DataFrame = {
     require(keepNum >= 0 && keepDen > 0, s"keep: $keepNum/$keepDen")
     // four consumers (k, histogram, full-keep join, boundary join) —
     // without the persist the whole gram pipeline would replay per branch
-    val w = importanceWeights(raw, target, id, text, buckets, portable)
+    val w = importanceWeights(raw, target, id, text, buckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val kRow = w.agg(
       expr(s"(count(1) * $keepNum + ${keepDen - 1}) div $keepDen").as("k"))

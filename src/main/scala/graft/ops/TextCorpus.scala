@@ -767,7 +767,6 @@ object TextCorpus {
   def bm25TopK(docs: DataFrame, id: Column, text: Column,
                queries: DataFrame, k: Int,
                k1: Double = 1.2, b: Double = 0.75,
-               broadcastQueriesUpTo: Long = Long.MaxValue,
                analyzer: Option[Analyzer] = None): DataFrame = {
     val words = tokenize(docs, id, text, analyzer)
     // dl and df both derive from the ONE canonical tf frame (dl is
@@ -786,8 +785,7 @@ object TextCorpus {
     // BEFORE aggregating, so the full-vocabulary df table — billions
     // of terms on a web-scale corpus — is never built or broadcast
     val df = tf.select(col("word"), lit(1L).as("df"))
-    bm25ScoreTopK(tf, dl, df, queries, k, k1, b, broadcastQueriesUpTo,
-      analyzer)
+    bm25ScoreTopK(tf, dl, df, queries, k, k1, b, analyzer)
   }
 
   /** A reusable, EXPLICITLY-SCOPED BM25 index over a fixed corpus — the
@@ -814,10 +812,8 @@ object TextCorpus {
       * the index's shared frames; queries are analyzed through the
       * index's analyzer, like a store serve. */
     def topK(queries: DataFrame, k: Int, k1: Double = 1.2,
-             b: Double = 0.75,
-             broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame =
-      bm25ScoreTopK(tfFrame, dl, df, queries, k, k1, b,
-        broadcastQueriesUpTo, analyzer)
+             b: Double = 0.75): DataFrame =
+      bm25ScoreTopK(tfFrame, dl, df, queries, k, k1, b, analyzer)
     /** Release the persisted tf frame (idempotent). */
     def close(): Unit = { tfFrame.unpersist(); () }
   }
@@ -955,21 +951,19 @@ object TextCorpus {
     * enter as the DIFFERENCE `pos - off`, so any consistent base (ours
     * is 0-based; the SQL oracle's is 1-based) yields identical output. */
   def phraseMatchTopK(pos: DataFrame, queries: DataFrame, k: Int,
-                      broadcastQueriesUpTo: Long = Long.MaxValue,
                       analyzer: Option[Analyzer] = None)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, s"phraseSearch: k must be positive, got $k")
-    val side = querySide(queries, broadcastQueriesUpTo)
     val qoff = positional(queries, col("query_id"), col("query_text"),
       "query_id", "off", analyzer)
     val qlen = qoff.groupBy("query_id").agg(count(lit(1)).as("phrase_len"))
-    val starts = pos.join(side(qoff), Seq("word"))
+    val starts = pos.join(broadcast(qoff), Seq("word"))
       .select(col("query_id"), col("doc_id"),
         (col("pos") - col("off")).as("start"))
     val occ = starts.groupBy("query_id", "doc_id", "start")
       .agg(count(lit(1)).as("n_off"))
-    val perDoc = occ.join(side(qlen), Seq("query_id"))
+    val perDoc = occ.join(broadcast(qlen), Seq("query_id"))
       .where(col("n_off") === col("phrase_len"))
       .groupBy("query_id", "doc_id").agg(count(lit(1)).as("n_occ"))
     val cut = graft.plans.GraftOps.topKPerKey(perDoc,
@@ -979,23 +973,6 @@ object TextCorpus {
       .orderBy(col("n_occ").desc, col("doc_id").asc)
     cut.withColumn("rank", row_number().over(w))
       .select("query_id", "rank", "doc_id", "n_occ")
-  }
-
-  /** Size-aware query-side join policy for the serve paths, mirroring
-    * [[graft.streaming.DedupStream]]'s `broadcastDeltaUpTo`: ad-hoc
-    * query batches (the overwhelmingly common case) broadcast so the
-    * corpus-sized postings never shuffle by query count, but a BATCH
-    * retrieval workload (dedup-by-retrieval, eval sweeps — millions of
-    * queries) must not be forced through a driver-OOM broadcast. The
-    * cap is a row count over the `queries` input:
-    *  - `Long.MaxValue` (default) — always broadcast, no count job
-    *    (the caller asserts the batch is dimension-sized);
-    *  - `0` — never broadcast: plain shuffle joins on the join key;
-    *  - otherwise — one count of the query frame decides. */
-  private def querySide(queries: DataFrame, cap: Long)
-      : DataFrame => DataFrame = {
-    val bc = cap == Long.MaxValue || (cap > 0 && queries.count() <= cap)
-    if (bc) broadcast _ else identity _
   }
 
   /** Proximity (NEAR/k) search: top-k documents per query where EVERY
@@ -1032,7 +1009,7 @@ object TextCorpus {
     * arithmetic, no anchor ever materialized. A doc missing ANY
     * offset short-circuits on the group count before the sweep runs.
     *
-    * SCALE SHAPE: broadcast offset table (or the size-aware fallback),
+    * SCALE SHAPE: broadcast offset table,
     * corpus postings never shuffled by query, matched rows cross the
     * network ONCE — one hash aggregation versus the old ×(slop+1)
     * fan-out into a distinct-aggregate pair (NEAR wall −70% at the
@@ -1048,17 +1025,15 @@ object TextCorpus {
     * [[phraseMatchTopK]]. */
   def proximityMatchTopK(pos: DataFrame, queries: DataFrame, k: Int,
                          slop: Int,
-                         broadcastQueriesUpTo: Long = Long.MaxValue,
                          analyzer: Option[Analyzer] = None)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, s"proximitySearch: k must be positive, got $k")
     require(slop >= 0, s"proximitySearch: slop must be >= 0, got $slop")
-    val side = querySide(queries, broadcastQueriesUpTo)
     val qoff = positional(queries, col("query_id"), col("query_text"),
       "query_id", "off", analyzer)
     val qlen = qoff.groupBy("query_id").agg(count(lit(1)).as("phrase_len"))
-    val hits = pos.join(side(qoff), Seq("word"))
+    val hits = pos.join(broadcast(qoff), Seq("word"))
       .select(col("query_id"), col("doc_id"),
         struct(col("off").cast("long").as("grp"),
           (col("pos") - col("off")).cast("long").as("v")).as("oa"))
@@ -1071,7 +1046,7 @@ object TextCorpus {
     // precheck rides the n_windows > 0 filter.
     val perDoc = hits.groupBy("query_id", "doc_id")
       .agg(sort_array(collect_list(col("oa"))).as("oa"))
-      .join(side(qlen), Seq("query_id"))
+      .join(broadcast(qlen), Seq("query_id"))
       .select(col("query_id"), col("doc_id"),
         graft.expressions.SlopWindows.slop_windows(col("oa"),
           lit(slop.toLong), col("phrase_len")).as("n_windows"))
@@ -1121,12 +1096,10 @@ object TextCorpus {
     * frame (doc_id, pos, word) — store-serve ready. */
   def nearMatchTopK(pos: DataFrame, queries: DataFrame, k: Int,
                     slop: Int,
-                    broadcastQueriesUpTo: Long = Long.MaxValue,
                     analyzer: Option[Analyzer] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, s"nearSearch: k must be positive, got $k")
     require(slop >= 0, s"nearSearch: slop must be >= 0, got $slop")
-    val side = querySide(queries, broadcastQueriesUpTo)
     // unordered: the query is a SET of terms (offsets are meaningless)
     val qterms = queries
       .select(col("query_id"),
@@ -1136,7 +1109,7 @@ object TextCorpus {
       .where(col("word") =!= "" && !stopworded(col("word"), analyzer))
       .distinct()
     val qlen = qterms.groupBy("query_id").agg(count(lit(1)).as("n_terms"))
-    val hits = pos.join(side(qterms), Seq("word"))
+    val hits = pos.join(broadcast(qterms), Seq("word"))
       .select(col("query_id"), col("doc_id"),
         struct(col("word").as("grp"),
           col("pos").cast("long").as("v")).as("oa"))
@@ -1149,7 +1122,7 @@ object TextCorpus {
     // term counts 0 and rides the n_windows > 0 filter.
     val perDoc = hits.groupBy("query_id", "doc_id")
       .agg(sort_array(collect_list(col("oa"))).as("oa"))
-      .join(side(qlen), Seq("query_id"))
+      .join(broadcast(qlen), Seq("query_id"))
       .select(col("query_id"), col("doc_id"),
         graft.expressions.SlopWindows.slop_windows(col("oa"),
           col("n_terms") + lit(slop.toLong) - lit(1L),
@@ -1199,15 +1172,11 @@ object TextCorpus {
   def bm25ScoreTopK(tf: DataFrame, dl: DataFrame, df: DataFrame,
                     queries: DataFrame, k: Int,
                     k1: Double = 1.2, b: Double = 0.75,
-                    broadcastQueriesUpTo: Long = Long.MaxValue,
                     analyzer: Option[Analyzer] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(k > 0, s"bm25TopK: k must be positive, got $k")
-    // size-aware query-side policy (see [[querySide]]): under the cap
-    // the query tables broadcast and the corpus-sized postings are only
-    // scanned; a batch-retrieval workload over the cap takes plain
-    // shuffle joins on `word` instead of a forced broadcast
-    val side = querySide(queries, broadcastQueriesUpTo)
+    // the query tables broadcast, so the corpus-sized postings are only
+    // scanned, never shuffled by query count
     // N over the full doc set (empty docs count: they dilute avgdl's
     // denominator is a modeling choice — HERE avgdl is over docs WITH
     // tokens, the set the postings can ever score)
@@ -1223,11 +1192,11 @@ object TextCorpus {
     // df aggregated AFTER the query-vocab restriction (qvocab, not
     // qterms: a word shared by two queries must count its docs once)
     val qvocab = qterms.select("word").distinct()
-    val dfq = df.join(side(qvocab), Seq("word"))
+    val dfq = df.join(broadcast(qvocab), Seq("word"))
       .groupBy("word").agg(sum("df").as("df"))
     val contrib = tf
-      .join(side(qterms), Seq("word"))
-      .join(side(dfq), Seq("word"))
+      .join(broadcast(qterms), Seq("word"))
+      .join(broadcast(dfq), Seq("word"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .withColumn("idf",

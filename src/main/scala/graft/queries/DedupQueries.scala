@@ -11,12 +11,11 @@ import Dsl.{hex60Sql, shinglesCte}
   * embedding-cosine.
   *
   * Every query here carries a full DuckDB oracle. The signature families
-  * run in portable mode — hashes derive from md5
-  * ([[graft.functions.TextFns.portable_hash60]]), which the oracle
-  * replicates digit-by-digit in SQL ([[Dsl.hex60Sql]]) — so LSH banding,
-  * blocking, verification, and thresholds are all hash-compared, not just
-  * rows-counted. The xxhash64 fast path (identical plan shape, swapped
-  * hash) stays the production default and is value-checked in M8Spec. */
+  * hash through md5 ([[graft.functions.TextFns.portable_hash60]]), which
+  * the oracle replicates digit-by-digit in SQL ([[Dsl.hex60Sql]]) — so
+  * LSH banding, blocking, verification, and thresholds are all
+  * hash-compared, not just rows-counted, on the same operators a
+  * pipeline runs. */
 object DedupQueries extends QueryModule {
 
   /** Exact dedup survivors: one row per distinct content hash. */
@@ -52,11 +51,11 @@ object DedupQueries extends QueryModule {
        |      >= 0.5""".stripMargin
 
   /** MinHash+LSH near-dup candidates (32 hashes, 8 bands, agreement ≥ .5),
-    * portable hashing. `sig_agreement` = k/32 is a dyadic rational —
+    * md5-derived hashing. `sig_agreement` = k/32 is a dyadic rational —
     * exact in doubles on both engines, no rounding needed. */
   private def minhash(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashPairs(Tables.spread(Tables.documents(s, dir)), col("doc_id"), col("text"),
-      numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+      numHashes = 32, bands = 8, minAgreement = 0.5)
 
   /** The full MinHash+LSH pipeline as a reusable CTE chain, ending in
     * `agree(id_a, id_b, sig_agreement)` — shared by the pair demo, the
@@ -93,7 +92,7 @@ object DedupQueries extends QueryModule {
 
   private val minhashCtes = minhashCtesFrom("documents")
 
-  /** The portable-MinHash CTE chain for reuse by other oracles (the
+  /** The MinHash CTE chain for reuse by other oracles (the
     * streaming-admission gate unrolls per-batch stages over it). */
   private[queries] def minhashOracleCtes: String = minhashCtes
 
@@ -110,11 +109,11 @@ object DedupQueries extends QueryModule {
   private def incremental(s: SparkSession, dir: String): DataFrame = {
     val sigs = Dedup.minhashSignatures(
       Tables.spread(Tables.documents(s, dir)), col("doc_id"), col("text"),
-      numHashes = 32, portable = true)
+      numHashes = 32)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.minhashIncremental(
       sigs.filter(col("id") % 5 =!= 4), sigs.filter(col("id") % 5 === 4),
-      bands = 8, rowsPerBand = 4, minAgreement = 0.5, portable = true)
+      bands = 8, rowsPerBand = 4, minAgreement = 0.5)
   }
 
   private val incrementalSql =
@@ -152,11 +151,11 @@ object DedupQueries extends QueryModule {
     val store = Dsl.tempDir("graft_sigstore_") + "/minhash_sigs"
     val sigs = Dedup.minhashSignatures(
       Tables.spread(Tables.documents(s, dir)), col("doc_id"), col("text"),
-      numHashes = 32, portable = true)
+      numHashes = 32)
     sigs.filter(col("id") % 5 =!= 4).write.mode("overwrite").parquet(store)
     Dedup.minhashIncremental(
       s.read.parquet(store), sigs.filter(col("id") % 5 === 4),
-      bands = 8, rowsPerBand = 4, minAgreement = 0.5, portable = true)
+      bands = 8, rowsPerBand = 4, minAgreement = 0.5)
   }
 
   /** Leakage-safe train/val/test split: assignment keyed on the near-dup
@@ -173,7 +172,7 @@ object DedupQueries extends QueryModule {
   private def leakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(s, dir))
     val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+        numHashes = 32, bands = 8, minAgreement = 0.5)
       .select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cc = graft.ops.ConnectedComponents.run(pairs)
@@ -279,7 +278,7 @@ object DedupQueries extends QueryModule {
   private def trainingExport(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(s, dir))
     val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+        numHashes = 32, bands = 8, minAgreement = 0.5)
       .select(col("id_a"), col("id_b"))
     val cc = graft.ops.ConnectedComponents.run(pairs)
     val assign = docs.select("doc_id")
@@ -331,7 +330,7 @@ object DedupQueries extends QueryModule {
     val truth = Dedup.ngramJaccardPairs(d, col("doc_id"), col("text"),
       minJaccard = 0.5).select("id_a", "id_b")
     val cand = Dedup.minhashPairs(d, col("doc_id"), col("text"),
-      numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+      numHashes = 32, bands = 8, minAgreement = 0.5)
       .select("id_a", "id_b")
     Dedup.pairEval(truth, cand)
   }
@@ -405,7 +404,7 @@ object DedupQueries extends QueryModule {
     val truth = Dedup.ngramJaccardPairs(sampled, col("doc_id"), col("text"),
       minJaccard = 0.5).select("id_a", "id_b")
     val cand = Dedup.minhashPairs(sampled, col("doc_id"), col("text"),
-      numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+      numHashes = 32, bands = 8, minAgreement = 0.5)
       .select("id_a", "id_b")
     Dedup.pairEval(truth, cand)
       .crossJoin(sampled.agg(count(lit(1)).as("n_docs_sampled")))
@@ -464,7 +463,7 @@ object DedupQueries extends QueryModule {
     def grade(config: String, bands: Int): DataFrame =
       Dedup.pairEval(truth,
           Dedup.minhashPairs(d, col("doc_id"), col("text"), numHashes = 32,
-            bands = bands, minAgreement = 0.5, portable = true)
+            bands = bands, minAgreement = 0.5)
             .select("id_a", "id_b"))
         .select(lit(config).as("config"), lit(bands).as("bands"),
           lit(32 / bands).as("rows_per_band"), col("n_truth"),
@@ -543,7 +542,7 @@ object DedupQueries extends QueryModule {
     val truth = Dedup.ngramJaccardPairs(d, col("doc_id"), col("text"),
       minJaccard = 0.5).select("id_a", "id_b")
     val cand = Dedup.simhashPairs(d, col("doc_id"), col("text"),
-      maxHamming = 8, portable = true).select("id_a", "id_b")
+      maxHamming = 8).select("id_a", "id_b")
     Dedup.pairEval(truth, cand)
   }
 
@@ -563,7 +562,7 @@ object DedupQueries extends QueryModule {
   private def triangles(s: SparkSession, dir: String): DataFrame = {
     val e = Dedup.minhashPairs(Tables.spread(Tables.documents(s, dir)),
         col("doc_id"), col("text"),
-        numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+        numHashes = 32, bands = 8, minAgreement = 0.5)
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val uvw = e
@@ -588,7 +587,7 @@ object DedupQueries extends QueryModule {
   private def clusters(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(s, dir))
     val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+        numHashes = 32, bands = 8, minAgreement = 0.5)
       .select(col("id_a"), col("id_b"))
     val cc = graft.ops.ConnectedComponents.run(pairs)
     docs.select("doc_id")
@@ -629,7 +628,7 @@ object DedupQueries extends QueryModule {
   private def clustersIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(s, dir))
     val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+        numHashes = 32, bands = 8, minAgreement = 0.5)
       .select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def isDelta(c: org.apache.spark.sql.Column) = c % 5 === 4
@@ -657,7 +656,7 @@ object DedupQueries extends QueryModule {
   private def survivors(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(s, dir))
     val pairs = Dedup.minhashPairs(docs, col("doc_id"), col("text"),
-        numHashes = 32, bands = 8, minAgreement = 0.5, portable = true)
+        numHashes = 32, bands = 8, minAgreement = 0.5)
       .select(col("id_a"), col("id_b"))
     val cc = graft.ops.ConnectedComponents.run(pairs)
     val clusters = docs.select("doc_id")
@@ -701,11 +700,11 @@ object DedupQueries extends QueryModule {
        |  cl.doc_id = w.survivor_id AS keep, w.survivor_id, sz.cluster_size
        |FROM cl JOIN win w USING (cluster_id) JOIN sz USING (cluster_id)""".stripMargin
 
-  /** SimHash near-dup candidates within 8 Hamming bits, portable 60-bit
-    * hashing with recall-complete pigeonhole blocking (9 blocks). */
+  /** SimHash near-dup candidates within 8 Hamming bits, md5-derived
+    * 60-bit hashing with recall-complete pigeonhole blocking (9 blocks). */
   private def simhash(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairs(Tables.spread(Tables.documents(s, dir)), col("doc_id"), col("text"),
-      maxHamming = 8, portable = true)
+      maxHamming = 8)
 
   /** The SimHash chain as a reusable CTE block ending in
     * `scand(id_a, id_b, sig_a, sig_b)` — shared by the pair demo and
@@ -739,7 +738,7 @@ object DedupQueries extends QueryModule {
        |SELECT id_a, id_b, CAST(bit_count(xor(sig_a, sig_b)) AS INT) AS hamming
        |FROM scand WHERE bit_count(xor(sig_a, sig_b)) <= 8""".stripMargin
 
-  /** Embedding-cosine near-dups via portable hyperplane-LSH blocking —
+  /** Embedding-cosine near-dups via hyperplane-LSH blocking —
     * the SIZED config: the hyperplane count comes from the live corpus
     * via [[Dedup.choosePlanes]] (the `planes <= 0` default of
     * [[Dedup.embeddingPairs]]) instead of a pinned constant, so expected
@@ -763,7 +762,7 @@ object DedupQueries extends QueryModule {
     val emb = Tables.spread(Tables.embeddings(s, dir))
     val planes = Dedup.choosePlanes(math.max(1L, emb.count()))
     Dedup.embeddingPairs(emb, col("vec_id"), col("embedding"),
-        minCosine = 0.4, portable = true, dim = 64,
+        minCosine = 0.4, dim = 64,
         maxBucket = Int.MaxValue) // planes omitted: the sized default
       .select(lit(planes).as("planes"), col("id_a"), col("id_b"),
         round(col("cosine"), 4).as("cosine"))
@@ -812,7 +811,7 @@ object DedupQueries extends QueryModule {
   private val embeddingSql = embeddingSqlFrom(sizedPlanesCte)
 
   /** SemDeDup-style SEMANTIC dedup end-to-end: embedding near-dup pairs
-    * (portable hyperplane LSH + cosine ≥ 0.4, corpus-SIZED plane count —
+    * (hyperplane LSH + cosine ≥ 0.4, corpus-SIZED plane count —
     * the linear-scaling config, same round-13 re-pin as
     * `m8_dedup_embedding`) → connected components → exactly one survivor
     * per semantic cluster. The quality proxy is a deterministic integer
@@ -825,7 +824,7 @@ object DedupQueries extends QueryModule {
   private def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.spread(Tables.embeddings(s, dir))
     val pairs = Dedup.embeddingPairs(emb, col("vec_id"), col("embedding"),
-        minCosine = 0.4, portable = true, dim = 64,
+        minCosine = 0.4, dim = 64,
         maxBucket = Int.MaxValue) // planes omitted: the sized default
       .select(col("id_a"), col("id_b"))
     val cc = graft.ops.ConnectedComponents.run(pairs)
@@ -943,7 +942,7 @@ object DedupQueries extends QueryModule {
     "m8_dedup_survivors"     -> survivorsSql)
 }
 
-/** Oracle-side rendering of the portable hyperplane weights: the same
+/** Oracle-side rendering of the hyperplane weights: the same
   * md5-derived ±1 values [[graft.functions.VectorFns.portableWeight]]
   * uses, interpolated as literal arrays so DuckDB's `list_inner_product`
   * reproduces the projection with identical left-to-right accumulation.

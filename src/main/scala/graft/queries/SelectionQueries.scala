@@ -81,7 +81,7 @@ object SelectionQueries extends QueryModule {
 
   private def importanceWeights(s: SparkSession, dir: String): DataFrame =
     Selection.importanceWeights(docs(s, dir), target(s, dir),
-      col("doc_id"), col("text"), Buckets, portable = true)
+      col("doc_id"), col("text"), Buckets)
 
   /** ONE builder for the DSIR oracle CTE chain, shared by the weights,
     * resample, and capstone oracles so the replica can never drift
@@ -149,8 +149,7 @@ object SelectionQueries extends QueryModule {
 
   private def importanceResample(s: SparkSession, dir: String): DataFrame =
     Selection.importanceResample(docs(s, dir), target(s, dir),
-      col("doc_id"), col("text"), Buckets, keepNum = 1, keepDen = 4,
-      portable = true)
+      col("doc_id"), col("text"), Buckets, keepNum = 1, keepDen = 4)
 
   /** The oracle states the top-k semantics directly (rank by weight
     * DESC, doc_id); the engine's histogram-threshold mechanics must land
@@ -185,8 +184,7 @@ object SelectionQueries extends QueryModule {
       .filter(col("pass")).select("doc_id")
     val survivors = d.join(passed, Seq("doc_id"))
     val picked = Selection.importanceResample(survivors, target(s, dir),
-      col("doc_id"), col("text"), Buckets, keepNum = 1, keepDen = 2,
-      portable = true)
+      col("doc_id"), col("text"), Buckets, keepNum = 1, keepDen = 2)
     val capped = Sampling.capPerGroup(
       picked.join(d.select(col("doc_id"), col("source")), Seq("doc_id")),
       col("source"), col("doc_id"), 8, "selexp")
@@ -239,7 +237,7 @@ object SelectionQueries extends QueryModule {
     // ~8/15 of it: the one gram pass grams each shared doc once
     Selection.distributionDrift(d,
       col("doc_id") % 3 =!= 0, col("doc_id") % 5 =!= 0,
-      col("text"), Buckets, portable = true)
+      col("text"), Buckets)
   }
 
   private val corpusDriftSql = {

@@ -11,9 +11,8 @@ import graft.similarity.Similarity
   * rank output is oracle-checked against DuckDB (cosine itself is
   * float-order-sensitive, so the *value* is rounded and the ranking
   * carries the correctness signal). The LSH variant is the 100 TB path
-  * (bucket join instead of cross join); it runs in portable-hyperplane
-  * mode so the oracle rebuilds the buckets and ranking exactly, and its
-  * xxhash64 fast path's recall is asserted in unit tests. */
+  * (bucket join instead of cross join); its hyperplanes derive from md5,
+  * so the oracle rebuilds the buckets and ranking exactly. */
 object SimilarityQueries extends QueryModule {
 
   private val K = 5
@@ -48,11 +47,10 @@ object SimilarityQueries extends QueryModule {
        |FROM ranked WHERE rank <= $K""".stripMargin
 
   /** Hyperplane-LSH approximate top-5 (bucketed join — the scale path),
-    * portable hyperplanes so the oracle rebuilds the buckets exactly. */
+    * md5-derived hyperplanes so the oracle rebuilds the buckets exactly. */
   private def topkLsh(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.spread(Tables.embeddings(s, dir))
-    Similarity.lshTopK(emb.filter(col("vec_id") < 8), emb, K, planes = 4,
-      portable = true)
+    Similarity.lshTopK(emb.filter(col("vec_id") < 8), emb, K, planes = 4)
       .select(col("query_id"), col("rank"), col("cand_id"),
         round(col("cosine"), 6).as("cosine"))
   }
@@ -184,13 +182,13 @@ object SimilarityQueries extends QueryModule {
   }
 
   /** Recall@5 of the LSH path against the exact brute-force ranking — the
-    * eval harness run as a first-class query (portable hyperplanes, so the
+    * eval harness run as a first-class query (md5-derived hyperplanes, so the
     * oracle rebuilds BOTH rankings and the same recall numbers). */
   private def annRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.spread(Tables.embeddings(s, dir))
     val queries = emb.filter(col("vec_id") < 8)
     Similarity.recallAtK(
-      Similarity.lshTopK(queries, emb, K, planes = 4, portable = true),
+      Similarity.lshTopK(queries, emb, K, planes = 4),
       Similarity.bruteForceTopK(queries, emb, K))
   }
 
@@ -637,7 +635,7 @@ object SimilarityQueries extends QueryModule {
     val emb = Tables.spread(Tables.embeddings(s, dir))
     val queries = emb.filter(col("vec_id") < 8)
     Similarity.rankEval(
-      Similarity.lshTopK(queries, emb, K, planes = 4, portable = true),
+      Similarity.lshTopK(queries, emb, K, planes = 4),
       Similarity.bruteForceTopK(queries, emb, K), K)
   }
 

@@ -133,14 +133,14 @@ object StreamGateQueries extends QueryModule {
     require(leaked == 0, s"compacted base of $store still holds $leaked $what")
   }
 
-  /** The admission gates' drain: portable 8×4-band MinHash admission of
+  /** The admission gates' drain: 8×4-band MinHash admission of
     * `stream` into `root`'s signature store and verdict sink, folding
     * the duplicate-group ledger at `root/labels` when `labels`. */
   private def admit(stream: DataFrame, root: String, labels: Boolean = false,
                     kindCol: Option[String] = None): StreamingQuery =
     DedupStream.admitDocuments(stream, s"$root/store", s"$root/verdicts",
       s"$root/ckpt", bands = 8, rowsPerBand = 4, minAgreement = 0.5,
-      portable = true, labelsDir = if (labels) Some(s"$root/labels") else None,
+      labelsDir = if (labels) Some(s"$root/labels") else None,
       kindCol = kindCol)
 
   private val verdictCols =
@@ -357,7 +357,7 @@ object StreamGateQueries extends QueryModule {
   private val t12Sql = viewSql("events")
 
   /** M8: streaming corpus admission. Three document batches stream
-    * through [[DedupStream.admitDocuments]] (portable MinHash, 8×4
+    * through [[DedupStream.admitDocuments]] (MinHash, 8×4
     * bands): each batch screens against the signature store that prior
     * batches' ADMITTED docs extended, plus earlier docs of its own batch.
     * Output: every verdict row from the durable sink. */
@@ -369,7 +369,7 @@ object StreamGateQueries extends QueryModule {
     s.read.parquet(s"$root/verdicts").select(verdictCols.map(col): _*)
   }
 
-  /** The minhash CTE chain is DedupQueries' portable replica (md5 hex
+  /** The minhash CTE chain is DedupQueries' replica (md5 hex
     * digits → h1/h2 → 32 affine min-hashes → 8 band keys); shared via
     * [[DedupQueries.minhashOracleCtes]]. */
   private val streamAdmissionSql =
@@ -408,10 +408,10 @@ object StreamGateQueries extends QueryModule {
       .count(f => f.isDirectory && f.getName.startsWith("graft_batch="))
     require(live == 2, s"expected base + 1 kept batch dir, found $live dirs")
     val delta = Dedup.minhashSignatures(docs.filter(col("doc_id") % 4 === 3),
-      col("doc_id"), col("text"), numHashes = 32, portable = true)
+      col("doc_id"), col("text"), numHashes = 32)
     val wave4 = Dedup.minhashIncremental(
         BatchStore.read(s, s"$root/store").select("id", "sig"), delta,
-        bands = 8, rowsPerBand = 4, minAgreement = 0.5, portable = true)
+        bands = 8, rowsPerBand = 4, minAgreement = 0.5)
       .withColumn("batch_id", lit(3L))
     s.read.parquet(s"$root/verdicts").select(verdictCols.map(col): _*)
       .unionByName(wave4.select(verdictCols.map(col): _*))
@@ -1317,7 +1317,7 @@ object StreamGateQueries extends QueryModule {
   /** M8 — streaming SEMANTIC admission ([[DedupStream.admitVectors]]):
     * three embedding waves (vec_id % 3) screen against the growing
     * store of admitted vectors via the hyperplane-LSH + cosine ≥ 0.4
-    * screen (portable planes, corpus-SIZED count — the oracle replays
+    * screen (md5-derived planes, corpus-SIZED count — the oracle replays
     * the [[graft.dedup.Dedup.choosePlanes]] derivation, the
     * `m8_dedup_embedding` contract), the batch-mode `m8_semantic_dedup`
     * composition run as an ingest loop. Output: every verdict row plus
@@ -1333,7 +1333,7 @@ object StreamGateQueries extends QueryModule {
       emb.select(col("vec_id").as("doc_id"), col("embedding")), "doc_id",
       "doc_id BIGINT, embedding ARRAY<FLOAT>")
     DedupStream.admitVectors(stream, s"$root/store", s"$root/verdicts",
-        s"$root/ckpt", planes = planes, minCosine = 0.4, portable = true)
+        s"$root/ckpt", planes = planes, minCosine = 0.4)
       .awaitTermination()
     verdictsAndStore(s, root, "best_cosine", round(col("best_cosine"), 6))
   }
@@ -1413,7 +1413,7 @@ object StreamGateQueries extends QueryModule {
       mixedWaves(emb.select(col("vec_id").as("doc_id"), col("embedding")),
         "doc_id", d && col("doc_id") % 3 =!= 2, d && col("doc_id") % 3 === 2))
     DedupStream.admitVectors(stream, s"$root/store", s"$root/verdicts",
-        s"$root/ckpt", planes = planes, minCosine = 0.4, portable = true,
+        s"$root/ckpt", planes = planes, minCosine = 0.4,
         kindCol = Some("kind"))
       .awaitTermination()
     verdictsAndStore(s, root, "best_cosine", round(col("best_cosine"), 6))
@@ -1476,7 +1476,7 @@ object StreamGateQueries extends QueryModule {
 
   /** One admission stage of the oracle: candidates for batch `i` docs are
     * earlier same-batch docs (any verdict — they're all in the delta) or
-    * the `admitted` prior-batch docs; agreement over the 32 portable
+    * the `admitted` prior-batch docs; agreement over the 32
     * MinHash slots; hits at ≥ 0.5 reduce to (dup_of = min, best, count).
     * `mod` is the batch-slicing modulus. */
   private def stageSql(i: Int, admitted: String, mod: Int): String =

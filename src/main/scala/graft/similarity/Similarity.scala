@@ -49,9 +49,10 @@ object Similarity {
 
   /** LSH-bucketed approximate top-k: queries only meet candidates in the
     * same hyperplane bucket. Recall < 1, cost ~ corpus/2^planes per query.
-    * `portable = true` derives the hyperplanes from md5 instead of
-    * xxhash64 so any engine (the correctness oracle) can rebuild the
-    * buckets exactly; xxhash64 stays the scale-path default.
+    * The hyperplanes and the cap's per-candidate draw derive from md5,
+    * so any engine (the correctness oracle) rebuilds the buckets
+    * exactly. The planes are 64-dim, the corpus embedding width; vectors
+    * of any other width all land in bucket 0.
     *
     * Hot-bucket bound: a degenerate embedding cluster puts n candidates
     * in one bucket, and every query probing it pays n cosines.
@@ -60,22 +61,16 @@ object Similarity {
     * corpus still rides the broadcast join in place; a hot bucket costs
     * ≤ maxBucket×tasks candidates instead of n. */
   def lshTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-              planes: Int = 8, portable: Boolean = false,
-              maxBucket: Int = 65536): DataFrame = {
-    def bucket(v: Column) =
-      if (portable) VectorFns.hyperplane_bucket_portable(v, planes)
-      else VectorFns.hyperplane_bucket(v, planes)
+              planes: Int = 8, maxBucket: Int = 65536): DataFrame = {
+    def bucket(v: Column) = VectorFns.hyperplane_bucket(v, planes)
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
       bucket(col("embedding")).as("bucket"))
     val c0 = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
       bucket(col("embedding")).as("bucket"))
-    val draw =
-      if (portable) md5(col("cand_id").cast("string"))
-      else xxhash64(col("cand_id"))
     val c =
       if (maxBucket == Int.MaxValue) c0
       else GraftOps.capPerKeyLocal(
-        c0.withColumn("_draw", draw),
+        c0.withColumn("_draw", md5(col("cand_id").cast("string"))),
         Seq(col("bucket")), Seq(col("_draw"), col("cand_id")), maxBucket)
         .drop("_draw")
     val scored = c.join(broadcast(q), Seq("bucket"))

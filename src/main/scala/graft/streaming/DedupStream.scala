@@ -154,8 +154,7 @@ object DedupStream {
     * verdict-for-verdict. Gated by `t30_semantic_delete`. */
   def admitVectors(vecs: DataFrame, vecStoreDir: String,
                    verdictDir: String, checkpointDir: String,
-                   planes: Int, minCosine: Double = 0.95,
-                   portable: Boolean = false, dim: Int = 64,
+                   planes: Int, minCosine: Double = 0.95, dim: Int = 64,
                    continuous: Boolean = false,
                    compactWhenBatchesExceed: Option[Int] = None,
                    broadcastDeltaUpTo: Long = 500000L,
@@ -177,7 +176,7 @@ object DedupStream {
       val useBroadcast = broadcastDeltaUpTo > 0 &&
         (if (b.nAdds >= 0) b.nAdds else delta.count()) <= broadcastDeltaUpTo
       val verdicts = Dedup.embeddingIncremental(corpus, delta,
-        planes, minCosine, portable, dim,
+        planes, minCosine, dim,
         broadcastDelta = useBroadcast).persist()
       writeVerdicts(b, verdicts, delta, verdictDir, vecStoreDir)
       verdicts.unpersist()
@@ -313,7 +312,6 @@ object DedupStream {
                      verdictDir: String, checkpointDir: String,
                      bands: Int = 8, rowsPerBand: Int = 4,
                      minAgreement: Double = 0.5,
-                     portable: Boolean = false,
                      continuous: Boolean = false,
                      labelsDir: Option[String] = None,
                      compactWhenBatchesExceed: Option[Int] = None,
@@ -335,7 +333,7 @@ object DedupStream {
       // shingle) — see [[graft.Tables.spread]]
       val delta = Dedup.minhashSignatures(graft.Tables.spread(b.adds),
         col("doc_id"), col("text"),
-        numHashes = bands * rowsPerBand, portable = portable).persist()
+        numHashes = bands * rowsPerBand).persist()
       val corpus = screenCorpus(b, sigStoreDir, sigSchema, kindCol.nonEmpty)
       // Size-aware screen policy: when the batch is a genuine
       // micro-batch (≤ broadcastDeltaUpTo rows — the count is one
@@ -355,7 +353,7 @@ object DedupStream {
       val useBroadcast = broadcastDeltaUpTo > 0 &&
         (if (b.nAdds >= 0) b.nAdds else delta.count()) <= broadcastDeltaUpTo
       val verdicts = Dedup.minhashIncremental(corpus, delta,
-        bands, rowsPerBand, minAgreement, portable,
+        bands, rowsPerBand, minAgreement,
         broadcastDelta = useBroadcast).persist()
       writeVerdicts(b, verdicts, delta, verdictDir, sigStoreDir)
       labelsDir.foreach(

@@ -326,13 +326,12 @@ object PostingsStream {
     * index that has lived through any number of refresh batches and
     * compactions serves the exact ranking of a from-scratch build. */
   def bm25Serve(spark: SparkSession, storeDir: String, queries: DataFrame,
-                k: Int, k1: Double = 1.2, b: Double = 0.75,
-                broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame = {
+                k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val (tf, dl, df) = readIndex(spark, storeDir)
     // the query side is analyzed through the STORE's recorded analyzer
     // — a serve can never mismatch the index's analysis by construction
     TextCorpus.bm25ScoreTopK(tf, dl, df, queries, k, k1, b,
-      broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
+      storeAnalyzer(spark, storeDir))
   }
 
   /** Exact-phrase top-k straight off a POSITIONAL store
@@ -343,10 +342,9 @@ object PostingsStream {
     * would simply be absent and every phrase would silently match
     * nothing. */
   def phraseServe(spark: SparkSession, storeDir: String, queries: DataFrame,
-                  k: Int,
-                  broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame =
+                  k: Int): DataFrame =
     TextCorpus.phraseMatchTopK(readPositional(spark, storeDir), queries, k,
-      broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
+      storeAnalyzer(spark, storeDir))
 
   /** The store's live positional rows `(doc_id, pos, word)` — pointer-
     * filtered and tombstone-masked, fail-closed on a position-less
@@ -370,19 +368,16 @@ object PostingsStream {
     * store's recorded analyzer: the same end-state-identity and
     * fail-closed contracts as [[phraseServe]]. */
   def proximityServe(spark: SparkSession, storeDir: String,
-                     queries: DataFrame, k: Int, slop: Int,
-                     broadcastQueriesUpTo: Long = Long.MaxValue)
-      : DataFrame =
+                     queries: DataFrame, k: Int, slop: Int): DataFrame =
     TextCorpus.proximityMatchTopK(readPositional(spark, storeDir), queries,
-      k, slop, broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
+      k, slop, storeAnalyzer(spark, storeDir))
 
   /** Unordered NEAR/w top-k off a POSITIONAL store —
     * [[TextCorpus.nearMatchTopK]] with the same pointer-filter /
     * tombstone-mask / stored-analyzer contracts as the other positional
     * serves. */
   def nearServe(spark: SparkSession, storeDir: String,
-                queries: DataFrame, k: Int, slop: Int,
-                broadcastQueriesUpTo: Long = Long.MaxValue): DataFrame =
+                queries: DataFrame, k: Int, slop: Int): DataFrame =
     TextCorpus.nearMatchTopK(readPositional(spark, storeDir), queries, k,
-      slop, broadcastQueriesUpTo, storeAnalyzer(spark, storeDir))
+      slop, storeAnalyzer(spark, storeDir))
 }

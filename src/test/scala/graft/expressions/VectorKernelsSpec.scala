@@ -111,26 +111,31 @@ class VectorKernelsSpec extends SparkSpec {
         lit(0.0), (acc, v) => acc + v))
   }
 
-  test("hyperplane bucket (xxhash64): fused == HOF") {
-    val df = vecDf(64, 400)
-    assertSame(df, VectorFns.hyperplane_bucket(col("a"), 8),
-      VectorFns.hyperplaneBucketHof(col("a"), 8))
-    // null elements / null vector degrade to bucket 0, as before
-    val dfn = vecDf(64, 200, withNulls = true)
-      .withColumn("a", when(col("id") % 5 === 0, lit(null))
-        .otherwise(col("a")))
-    assertSame(dfn, VectorFns.hyperplane_bucket(col("a"), 8),
-      VectorFns.hyperplaneBucketHof(col("a"), 8))
-  }
-
   test("hyperplane bucket (portable md5): fused == HOF incl. width mismatch") {
+    import spark.implicits._
+    def same(df: org.apache.spark.sql.DataFrame): Unit =
+      assertSame(df, VectorFns.hyperplane_bucket(col("a"), 8, 64),
+        VectorFns.hyperplaneBucketHof(col("a"), 8, 64))
     val df = vecDf(64, 400)
-    assertSame(df, VectorFns.hyperplane_bucket_portable(col("a"), 8, 64),
-      VectorFns.hyperplaneBucketPortableHof(col("a"), 8, 64))
+    same(df)
     // vector shorter than the declared dim → bucket 0 both ways
-    val short = df.withColumn("a", slice(col("a"), 1, 40))
-    assertSame(short, VectorFns.hyperplane_bucket_portable(col("a"), 8, 64),
-      VectorFns.hyperplaneBucketPortableHof(col("a"), 8, 64))
+    same(df.withColumn("a", slice(col("a"), 1, 40)))
+    // null elements / null vector degrade to bucket 0
+    same(vecDf(64, 200, withNulls = true)
+      .withColumn("a", when(col("id") % 5 === 0, lit(null))
+        .otherwise(col("a"))))
+    // SQL's `proj > 0`: a NaN projection (a NaN element, or +Inf
+    // meeting −Inf) is greatest and sets the bit; −0.0 ties 0.0
+    def v(f: Int => Float) = (0 until 64).map(i => java.lang.Float.valueOf(f(i)))
+    same(Seq(
+        v(i => if (i == 5) Float.NaN else 1f),
+        v(i => if (i == 0) Float.PositiveInfinity
+               else if (i == 1) Float.NegativeInfinity else 0f),
+        v(i => if (i == 3) Float.PositiveInfinity else -1f),
+        v(i => if (i == 3) Float.NegativeInfinity else 1f),
+        v(_ => -0f),
+        v(i => if (i % 2 == 0) -0f else 0f))
+      .zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "a"))
   }
 
   test("quantize scale + codes: fused == HOF incl. zero-scale and nulls") {

@@ -1,5 +1,6 @@
 package graft.m8
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.Tables
 import graft.dedup.Dedup
@@ -7,9 +8,9 @@ import graft.functions.{TextFns, VectorFns}
 import graft.similarity.Similarity
 import org.apache.spark.sql.functions._
 
-/** Unit tests for the LLM-pipeline operators (dedup, similarity, text),
-  * including value checks for the xxhash64-signature families that have
-  * no DuckDB oracle. */
+/** Unit tests for the LLM-pipeline operators (dedup, similarity, text):
+  * hand-computed values and behaviour (caps, sizing, broadcast plans)
+  * that the DuckDB-oracle queries do not pin. */
 class M8Spec extends SparkSpec {
   import spark.implicits._
 
@@ -130,8 +131,8 @@ class M8Spec extends SparkSpec {
     val a = "the quick brown fox jumps over the lazy dog again and again today"
     val b = a.replace("today", "tomorrow")
     val df = Seq((1L, a), (2L, b)).toDF("id", "text")
-    val sigs = df.select(TextFns.simhash64(TextFns.word_shingles(col("text"))).as("s"))
-      .collect().map(_.getLong(0))
+    val sigs = Dedup.simhashSignatures(df, col("id"), col("text"))
+      .orderBy("id").collect().map(_.getLong(1))
     val hamming = java.lang.Long.bitCount(sigs(0) ^ sigs(1))
     assert(hamming <= 16, s"near-dup hamming was $hamming")
   }
@@ -201,13 +202,13 @@ class M8Spec extends SparkSpec {
     val cold = (101L to 120L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
     val vecs = (hot ++ cold).toDF("vec_id", "embedding")
     val capped = Dedup.embeddingPairs(vecs, col("vec_id"), col("embedding"),
-      minCosine = 0.999, planes = 6, maxBucket = 10)
+      minCosine = 0.999, planes = 6, dim = 8, maxBucket = 10)
     val hotPairs = capped.filter(col("id_a") <= 100 && col("id_b") <= 100)
     assert(hotPairs.count() == 45,
       s"expected C(10,2)=45 hot-bucket pairs, got ${hotPairs.count()}")
     // the cap draw is deterministic: same input, same survivors
     val again = Dedup.embeddingPairs(vecs, col("vec_id"), col("embedding"),
-      minCosine = 0.999, planes = 6, maxBucket = 10)
+      minCosine = 0.999, planes = 6, dim = 8, maxBucket = 10)
       .filter(col("id_a") <= 100 && col("id_b") <= 100)
     assert(again.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       hotPairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
@@ -247,17 +248,17 @@ class M8Spec extends SparkSpec {
       val sized = Dedup.choosePlanes(n)
       assert(sized == (if (n == 1000) 4 else 6))
       val byDefault = Dedup.embeddingPairs(vecs, col("vec_id"),
-          col("embedding"), minCosine = 0.99, maxBucket = Int.MaxValue)
+          col("embedding"), minCosine = 0.99, dim = 4, maxBucket = Int.MaxValue)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val explicit = Dedup.embeddingPairs(vecs, col("vec_id"),
-          col("embedding"), minCosine = 0.99, planes = sized,
+          col("embedding"), minCosine = 0.99, planes = sized, dim = 4,
           maxBucket = Int.MaxValue)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(byDefault == explicit,
         s"n=$n: default path diverged from explicit planes=$sized")
       val pops = vecs
         .select(graft.functions.VectorFns
-          .hyperplane_bucket(col("embedding"), sized).as("b"))
+          .hyperplane_bucket(col("embedding"), sized, 4).as("b"))
         .groupBy("b").count().collect().map(_.getLong(1))
       val mean = pops.sum.toDouble / pops.length
       assert(mean <= 2 * 512,
@@ -275,7 +276,7 @@ class M8Spec extends SparkSpec {
     val hot = (1L to 100L).map(i => (i, Array.fill(8)(1.0f)))
     val vecs = hot.toDF("vec_id", "embedding")
     val pairs = Dedup.embeddingPairs(vecs, col("vec_id"), col("embedding"),
-      minCosine = 0.999, planes = 6, maxBucket = 10)
+      minCosine = 0.999, planes = 6, dim = 8, maxBucket = 10)
     // collect() drives THIS Dataset's queryExecution (count() would spin
     // up a separate aggregate execution whose metrics we can't see)
     pairs.collect()
@@ -540,7 +541,7 @@ class M8Spec extends SparkSpec {
     val fused = Similarity.ivfTopKQuantized(q, emb, 5, nlist = 16,
       nprobe = 4, lloydIters = 2, rescoreK = 15)
       .select("query_id", "rank", "cand_id").collect().toSet
-    val root = java.nio.file.Files.createTempDirectory("annstore").toString
+    val root = Dsl.tempDir("annstore")
     val (cent, lists) = Similarity.ivfBuildQuantized(emb, 16, 2)
     cent.write.mode("overwrite").parquet(root + "/centroids")
     lists.write.mode("overwrite").parquet(root + "/lists")
@@ -565,7 +566,7 @@ class M8Spec extends SparkSpec {
     // nothing else
     val d = Tables.spread(Tables.documents(spark, sf))
     val sigs = Dedup.minhashSignatures(d, col("doc_id"), col("text"),
-      numHashes = 32, portable = true).persist()
+      numHashes = 32).persist()
     val corpus = sigs.filter(col("id") % 5 =!= 4)
     val delta = sigs.filter(col("id") % 5 === 4)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -573,8 +574,8 @@ class M8Spec extends SparkSpec {
         if (r.isNullAt(2)) -1L else r.getLong(2),
         if (r.isNullAt(3)) -1.0 else r.getDouble(3),
         r.getLong(4))).toSet
-    val plain = Dedup.minhashIncremental(corpus, delta, portable = true)
-    val bc = Dedup.minhashIncremental(corpus, delta, portable = true,
+    val plain = Dedup.minhashIncremental(corpus, delta)
+    val bc = Dedup.minhashIncremental(corpus, delta,
       broadcastDelta = true)
     assert(rows(bc) == rows(plain),
       "broadcastDelta changed the verdicts — it must be plan-only")
@@ -585,7 +586,7 @@ class M8Spec extends SparkSpec {
     // MEASURED candidate count, not the delta size that can't bound it
     // in a collision-heavy corpus — forcing the cap to 0 must fall the
     // re-join back to the shuffle path with identical verdicts
-    val guarded = Dedup.minhashIncremental(corpus, delta, portable = true,
+    val guarded = Dedup.minhashIncremental(corpus, delta,
       broadcastDelta = true, broadcastPairsUpTo = 0L)
     assert(rows(guarded) == rows(plain),
       "pair-broadcast fallback changed the verdicts — it must be plan-only")
@@ -646,56 +647,26 @@ class M8Spec extends SparkSpec {
       .select(col("doc_id").as("query_id"),
         array_join(slice(split(trim(coalesce(col("text"), lit(""))),
           "\\s+"), 1, 4), " ").as("query_text"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("sfp", round(col("score") * 1e6).cast("long"))
-      .select("query_id", "rank", "doc_id", "sfp")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getLong(3))).toSet
-    // default: the ad-hoc regime — query tables broadcast into the
-    // postings join, the corpus never shuffles by query count
-    val bc = TextCorpus.bm25TopK(d, col("doc_id"), col("text"), q, k = 5)
-    val pBc = bc.queryExecution.executedPlan.toString
-    assert("BroadcastHashJoin".r.findAllIn(pBc).length >= 2,
-      s"expected broadcast qterms + dfq joins:\n$pBc")
-    // cap 0: the batch-retrieval fallback — the FORCED broadcast is
-    // gone, leaving the planner's size-based choice (which on a genuine
-    // million-query batch is a shuffle join). Auto-broadcast is disabled
-    // here to reveal the shuffle shape the cap exists to permit — with
-    // it on, tiny test-sized sides still legitimately broadcast.
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sh = TextCorpus.bm25TopK(d, col("doc_id"), col("text"), q, k = 5,
-        broadcastQueriesUpTo = 0L)
-      val pSh = sh.queryExecution.executedPlan.toString
-      assert("SortMergeJoin".r.findAllIn(pSh).nonEmpty,
-        s"expected the shuffle-join fallback:\n$pSh")
-      assert(rows(sh) === rows(bc),
-        "the query-side join policy changed the ranking — must be plan-only")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    // the counted middle ground: a cap above the query count takes the
-    // broadcast path (one count job, same plan as the default)
-    val counted = TextCorpus.bm25TopK(d, col("doc_id"), col("text"), q,
-      k = 5, broadcastQueriesUpTo = 1000000L)
-    assert(rows(counted) === rows(bc))
-    // phrase: same contract
+    // the query tables broadcast into the postings join, so the corpus
+    // never shuffles by query count — forced, so it holds with the
+    // planner's size-based broadcast switched off too
     val ph = d.filter(col("doc_id") % 7 === 3)
       .select(col("doc_id").as("query_id"),
         array_join(slice(split(trim(coalesce(col("text"), lit(""))),
           "\\s+"), 2, 3), " ").as("query_text"))
-    def prows(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        r.getLong(3))).toSet
-    val phBc = TextCorpus.phraseSearch(d, col("doc_id"), col("text"), ph, 5)
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val phSh = TextCorpus.phraseMatchTopK(
-        TextCorpus.positional(d, col("doc_id"), col("text"), "doc_id", "pos"),
-        ph, 5, broadcastQueriesUpTo = 0L)
-      assert("SortMergeJoin".r
-        .findAllIn(phSh.queryExecution.executedPlan.toString).nonEmpty)
-      assert(prows(phSh) === prows(phBc))
+      val bc = TextCorpus.bm25TopK(d, col("doc_id"), col("text"), q, k = 5)
+      val pBc = bc.queryExecution.executedPlan.toString
+      assert("BroadcastHashJoin".r.findAllIn(pBc).length >= 2,
+        s"expected broadcast qterms + dfq joins:\n$pBc")
+      assert(bc.count() > 0)
+      val phBc = TextCorpus.phraseSearch(d, col("doc_id"), col("text"), ph, 5)
+      val pPh = phBc.queryExecution.executedPlan.toString
+      assert("BroadcastHashJoin".r.findAllIn(pPh).length >= 2,
+        s"expected broadcast qoff + qlen joins:\n$pPh")
+      assert(phBc.count() > 0)
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.ops.IncrementalAgg.Measure
 import org.apache.spark.sql.functions._
@@ -56,7 +57,7 @@ class IncrementalAggSpec extends SparkSpec {
   test("state round-trips through parquet unchanged") {
     val df = Seq(("a", 1.25), ("b", 2.0), ("a", 0.75)).toDF("k", "v")
     val st = IncrementalAgg.state(df, Seq(col("k")), measures)
-    val dir = java.nio.file.Files.createTempDirectory("inc_agg").toString
+    val dir = Dsl.tempDir("inc_agg")
     st.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(snap(back) == snap(st))

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.queries.Dsl
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
@@ -52,7 +53,7 @@ class ScalePatternsSpec extends SparkSpec {
   test("write-back via dynamic partition overwrite touches only changed partitions") {
     val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val dir = java.nio.file.Files.createTempDirectory("graft_po").toString + "/t"
+    val dir = Dsl.tempDir("graft_po") + "/t"
     try {
       // initial tracker: two "sheets" as partitions
       Seq(("s1", 1, "old1"), ("s1", 2, "old2"), ("s2", 1, "keep"))

@@ -16,7 +16,7 @@ class SinkQueriesSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes to the queried days at the file index") {
-    val out = java.nio.file.Files.createTempDirectory("graft_prune_").toString
+    val out = Dsl.tempDir("graft_prune_")
     graft.Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("day").parquet(out)
@@ -34,7 +34,7 @@ class SinkQueriesSpec extends SparkSpec {
 
   test("compaction reduces the fragmented layout to few right-sized files") {
     // run the query's own layout pipeline at sf0.001 and count real files
-    val root = java.nio.file.Files.createTempDirectory("graft_compact_").toString
+    val root = Dsl.tempDir("graft_compact_")
     val slice = graft.Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_quantity")
     slice.repartition(128).write.mode("overwrite").parquet(s"$root/frag")

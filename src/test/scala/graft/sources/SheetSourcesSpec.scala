@@ -1,13 +1,13 @@
 package graft.sources
 
+import graft.queries.Dsl
 import graft.SparkSpec
-import java.nio.file.Files
 
 class SheetSourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv sheet roundtrip with header aliasing and extra columns") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = Dsl.tempDir("graft_csv")
     Seq(
       "Job URL,Company,Role,Notes,Extra",
       "https://a.example/1,Acme,SWE,note1,x",
@@ -25,7 +25,7 @@ class SheetSourcesSpec extends SparkSpec {
   }
 
   test("json sheet ingest normalizes to the tracker schema") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = Dsl.tempDir("graft_json")
     Seq("""{"link":"https://a.example/1","company_auto":"Acme","junk":1}""")
       .toDF("value").coalesce(1).write.mode("overwrite").text(dir + "/raw")
     val normalized = SheetSources.normalize(
@@ -56,7 +56,7 @@ class SheetSourcesSpec extends SparkSpec {
   }
 
   test("queue source: empty schema when absent, data when present") {
-    val dir = Files.createTempDirectory("graft_q").toString + "/queue"
+    val dir = Dsl.tempDir("graft_q") + "/queue"
     val empty = SheetSources.queueSource(spark, dir)
     assert(empty.count() == 0)
     assert(empty.columns.contains("enqueued_at"))

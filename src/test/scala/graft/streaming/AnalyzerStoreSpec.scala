@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.ops.TextCorpus
@@ -13,8 +14,7 @@ import graft.ops.TextCorpus.Analyzer
   * `m8_bm25_analyzed`. */
 class AnalyzerStoreSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = Dsl.tempDir(p)
 
   private val an = Analyzer(lowercase = true, stripPunct = true,
     stopwords = Seq("the", "a"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
@@ -14,8 +15,7 @@ import graft.similarity.Similarity
   * story is gated end-to-end by `t19_quantizer_refresh`. */
 class AnnIndexSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = Dsl.tempDir(p)
 
   private def emb: DataFrame =
     Tables.embeddings(spark, sf).select("vec_id", "embedding")

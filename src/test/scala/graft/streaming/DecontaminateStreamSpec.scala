@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.ops.TextCorpus
 import org.apache.spark.sql.functions._
@@ -14,7 +15,7 @@ class DecontaminateStreamSpec extends SparkSpec {
 
   private def writeBatch(watchDir: String, name: String,
                          rows: Seq[(Long, String)]): Unit = {
-    val stage = Files.createTempDirectory("decon_stage").toString
+    val stage = Dsl.tempDir("decon_stage")
     rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -37,7 +38,7 @@ class DecontaminateStreamSpec extends SparkSpec {
     6L -> "the final clean arrival in the last wave")
 
   test("streamed screen equals the batch decontaminate over the union") {
-    val root = Files.createTempDirectory("decon_stream").toString
+    val root = Dsl.tempDir("decon_stream")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeBatch(watch, "b0.parquet", b0)
     Thread.sleep(20)
@@ -83,7 +84,7 @@ class DecontaminateStreamSpec extends SparkSpec {
   }
 
   test("crash replay replaces the batch's sink dirs, never duplicates") {
-    val root = Files.createTempDirectory("decon_replay").toString
+    val root = Dsl.tempDir("decon_replay")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeBatch(watch, "b0.parquet", b0)
     Thread.sleep(20)

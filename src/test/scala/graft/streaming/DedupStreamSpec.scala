@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.dedup.Dedup
 import org.apache.spark.sql.DataFrame
@@ -15,7 +16,7 @@ class DedupStreamSpec extends SparkSpec {
 
   private def writeBatch(watchDir: String, name: String,
                          rows: Seq[(Long, String)]): Unit = {
-    val stage = Files.createTempDirectory("dedup_stage").toString
+    val stage = Dsl.tempDir("dedup_stage")
     rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -23,7 +24,7 @@ class DedupStreamSpec extends SparkSpec {
   }
 
   test("streaming admission matches batch-mode incremental admission") {
-    val root = Files.createTempDirectory("dedup_stream").toString
+    val root = Dsl.tempDir("dedup_stream")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val store = s"$root/store"; val verdicts = s"$root/verdicts"
     val ckpt = s"$root/ckpt"
@@ -140,7 +141,7 @@ class DedupStreamSpec extends SparkSpec {
       .parquet(watch)
 
     // continuous run with a mid-stream restart
-    val rootC = Files.createTempDirectory("dedup_cont").toString
+    val rootC = Dsl.tempDir("dedup_cont")
     val watchC = s"$rootC/in"; Files.createDirectories(Paths.get(watchC))
     val storeC = s"$rootC/store"; val verdictsC = s"$rootC/verdicts"
     val ckptC = s"$rootC/ckpt"
@@ -160,7 +161,7 @@ class DedupStreamSpec extends SparkSpec {
     q2.stop()
 
     // one-shot AvailableNow drain of the same three files, fresh state
-    val rootA = Files.createTempDirectory("dedup_avail").toString
+    val rootA = Dsl.tempDir("dedup_avail")
     val watchA = s"$rootA/in"; Files.createDirectories(Paths.get(watchA))
     writeBatch(watchA, "b0.parquet", b0)
     Thread.sleep(20)
@@ -190,7 +191,7 @@ class DedupStreamSpec extends SparkSpec {
   test("store compaction: read parity, crash debris excluded, replay target kept") {
     // Build a store the streaming writer's way: three admitted-signature
     // batch dirs.
-    val root = Files.createTempDirectory("dedup_compact").toString
+    val root = Dsl.tempDir("dedup_compact")
     val store = s"$root/store"
     def sigs(rows: Seq[(Long, String)]): DataFrame =
       Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
@@ -254,7 +255,7 @@ class DedupStreamSpec extends SparkSpec {
   test("compactIfOver on a store that does not exist yet: None, nothing created") {
     // the drains' compaction step runs before the first batch has
     // written anything, so the policy must be a no-op on a missing dir
-    val store = Files.createTempDirectory("dedup_nostore").toString + "/store"
+    val store = Dsl.tempDir("dedup_nostore") + "/store"
     assert(BatchStore.compactIfOver(spark, store, threshold = 2).isEmpty)
     assert(!Files.exists(Paths.get(store)),
       "compactIfOver created the missing store dir")
@@ -270,7 +271,7 @@ class DedupStreamSpec extends SparkSpec {
       (0 until n).map(i => s"wholly unique $tag document number $i with " +
         s"content words ${('a' + i % 26).toChar} ${('b' + i % 25).toChar}")
     def runSequence(policy: Option[Int]): (Map[Long, (String, Long)], Int, String) = {
-      val root = Files.createTempDirectory(s"dedup_pol${policy.isDefined}").toString
+      val root = Dsl.tempDir(s"dedup_pol${policy.isDefined}")
       val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
       var nextDoc = 0L
       for (drain <- 0 until 6) {
@@ -327,7 +328,7 @@ class DedupStreamSpec extends SparkSpec {
     // runs, threshold 2: the live dir count after the drain must be
     // policy-bounded (7 without the in-batch re-check), and the store
     // must still read complete through BatchStore.
-    val root = Files.createTempDirectory("dedup_contpol").toString
+    val root = Dsl.tempDir("dedup_contpol")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val q = DedupStream.admitDocuments(
       spark.readStream
@@ -355,7 +356,13 @@ class DedupStreamSpec extends SparkSpec {
     val ids = BatchStore.read(spark, s"$root/store")
       .select("id").collect().map(_.getLong(0))
     assert(ids.length == ids.distinct.length)
-    assert(ids.toSet == (0L until 14L).toSet,
+    // every doc got a verdict, and the store holds exactly the admitted
+    // ones (the near-identical texts may reject a few as duplicates)
+    val verdicts = spark.read.parquet(s"$root/verdicts")
+      .select("doc_id", "verdict").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(verdicts.keySet == (0L until 14L).toSet)
+    assert(ids.toSet == verdicts.filter(_._2 == "admit").keySet,
       s"policed continuous store lost signatures: ${ids.sorted.toSeq}")
   }
 
@@ -364,7 +371,7 @@ class DedupStreamSpec extends SparkSpec {
     // later batch; the ledger fold must keep its standing label instead
     // of carrying two label rows for one vertex (which would fan out
     // the relabel join and publish duplicate snapshot rows)
-    val root = Files.createTempDirectory("dedup_reseen").toString
+    val root = Dsl.tempDir("dedup_reseen")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeBatch(watch, "b0.parquet", Seq(
       1L -> "the quick brown fox jumps over the lazy dog every single day",
@@ -395,7 +402,7 @@ class DedupStreamSpec extends SparkSpec {
     // singletons, (b) never clobber a re-seen doc's standing label
     // with a fresh (d, d) row, and (c) leave a ledger a later dup
     // batch folds against correctly
-    val root = Files.createTempDirectory("dedup_clean").toString
+    val root = Dsl.tempDir("dedup_clean")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val dupText = "the recurring sentence that batch three finally duplicates"
     // batch 0: clean (3 unique docs, one carrying dupText)
@@ -436,7 +443,7 @@ class DedupStreamSpec extends SparkSpec {
     // affected neighborhood) label rows — the corpus's standing labels
     // are never re-serialized. Pinned on actual batch-dir row counts,
     // end-to-end through admitDocuments.
-    val root = Files.createTempDirectory("dedup_deltasize").toString
+    val root = Dsl.tempDir("dedup_deltasize")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def unique(tag: String, i: Int): String =
       s"wholly distinct $tag corpus document number $i about subject " +
@@ -477,7 +484,7 @@ class DedupStreamSpec extends SparkSpec {
     // the pointer file is briefly missing; the reader must recover the
     // folded corpus from the generation dirs' _HWM meta — falling back
     // to the no-pointer filter would silently drop every folded row.
-    val root = Files.createTempDirectory("dedup_ptr").toString
+    val root = Dsl.tempDir("dedup_ptr")
     val store = s"$root/store"
     def sigs(rows: Seq[(Long, String)]): DataFrame =
       Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
@@ -547,7 +554,7 @@ class DedupStreamSpec extends SparkSpec {
     // happened) is what lets the reader serve the intact batch dirs
     // instead of bricking the store — the throw would also block
     // compact() itself, so not even the healing path could run.
-    val root = Files.createTempDirectory("dedup_firststage").toString
+    val root = Dsl.tempDir("dedup_firststage")
     val store = s"$root/store"
     def sigs(rows: Seq[(Long, String)]): DataFrame =
       Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
@@ -587,7 +594,7 @@ class DedupStreamSpec extends SparkSpec {
     // silently serving only the un-folded batch dirs — the scaladoc's
     // once-published-never-fails-open promise extended to legacy
     // stores the current code has read at least once.
-    val root = Files.createTempDirectory("dedup_legacy").toString
+    val root = Dsl.tempDir("dedup_legacy")
     val store = s"$root/store"
     def sigs(rows: Seq[(Long, String)]): DataFrame =
       Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
@@ -625,7 +632,7 @@ class DedupStreamSpec extends SparkSpec {
     // rows beside the base copy
     val e = intercept[IllegalArgumentException] {
       BatchStore.compact(spark,
-        Files.createTempDirectory("cmp_k0").toString + "/store",
+        Dsl.tempDir("cmp_k0") + "/store",
         keepBatches = 0)
     }
     assert(e.getMessage.contains("replay idempotence"))
@@ -641,7 +648,7 @@ class DedupStreamSpec extends SparkSpec {
     // batched, folded, or compacted.
     val rnd = new scala.util.Random(41)
     for (trial <- 1 to 4) {
-      val root = Files.createTempDirectory(s"ledg_rand$trial").toString
+      val root = Dsl.tempDir(s"ledg_rand$trial")
       val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
       // duplicate groups: each group shares one exact text
       val nGroups = 4 + rnd.nextInt(4)
@@ -701,7 +708,7 @@ class DedupStreamSpec extends SparkSpec {
     // every fold, and a final compaction must leave base + kept dirs.
     val rnd = new scala.util.Random(29)
     for (trial <- 1 to 6) {
-      val root = Files.createTempDirectory(s"cmp_rand$trial").toString
+      val root = Dsl.tempDir(s"cmp_rand$trial")
       val store = s"$root/store"
       var nextId = 0L
       var expected = Set.empty[Long]
@@ -741,10 +748,10 @@ class DedupStreamSpec extends SparkSpec {
     val b0 = Seq(1L -> axis(0), 2L -> axis(1))
     val b1 = Seq(3L -> axis(0), 4L -> axis(2))            // 3 dups 1
     val b2 = Seq(5L -> axis(2), 6L -> axis(3), 7L -> axis(3)) // 5→4, 7→6
-    val root = Files.createTempDirectory("sem_stream").toString
+    val root = Dsl.tempDir("sem_stream")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def writeVecBatch(name: String, rows: Seq[(Long, Seq[Float])]): Unit = {
-      val stage = Files.createTempDirectory("sem_stage").toString
+      val stage = Dsl.tempDir("sem_stage")
       rows.toDF("doc_id", "embedding").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -759,8 +766,7 @@ class DedupStreamSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(watch)
     val ckpt = s"$root/ckpt"
     def drain(): Unit = DedupStream.admitVectors(mkStream(), s"$root/store",
-        s"$root/verdicts", ckpt, planes = 4, minCosine = 0.95,
-        portable = true, dim = dim)
+        s"$root/verdicts", ckpt, planes = 4, minCosine = 0.95, dim = dim)
       .awaitTermination()
     drain()
     def got(): Map[Long, (String, Long)] = spark.read
@@ -779,7 +785,7 @@ class DedupStreamSpec extends SparkSpec {
     val replayed = Seq(b0, b1, b2).flatMap { batch =>
       val delta = batch.toDF("id", "v")
       val v = Dedup.embeddingIncremental(corpus, delta, planes = 4,
-          minCosine = 0.95, portable = true, dim = dim)
+          minCosine = 0.95, dim = dim)
         .collect().map(r => r.getLong(0) ->
           (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
       val admitted = v.filter(_._2._1 == "admit").map(_._1).toSet
@@ -806,11 +812,11 @@ class DedupStreamSpec extends SparkSpec {
     val dim = 8
     def axis(a: Int): Seq[Float] =
       (0 until dim).map(d => if (d == a) 1f else 0f)
-    val root = Files.createTempDirectory("sem_sdel").toString
+    val root = Dsl.tempDir("sem_sdel")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def writeVecBatch(name: String,
                       rows: Seq[(String, Long, Option[Seq[Float]])]): Unit = {
-      val stage = Files.createTempDirectory("sem_sdel_stage").toString
+      val stage = Dsl.tempDir("sem_sdel_stage")
       rows.toDF("kind", "doc_id", "embedding").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -829,8 +835,8 @@ class DedupStreamSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(watch)
     val ckpt = s"$root/ckpt"
     def drain(): Unit = DedupStream.admitVectors(mkStream(), s"$root/store",
-        s"$root/verdicts", ckpt, planes = 4, minCosine = 0.95,
-        portable = true, dim = dim, kindCol = Some("kind"))
+        s"$root/verdicts", ckpt, planes = 4, minCosine = 0.95, dim = dim,
+        kindCol = Some("kind"))
       .awaitTermination()
     drain()
     def verdicts(): Map[Long, String] = spark.read

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
@@ -15,8 +16,7 @@ import graft.ops.TextCorpus
   * the failure windows and per-store behaviors the gates don't. */
 class DeleteSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = Dsl.tempDir(p)
 
   private def docs: DataFrame =
     Tables.documents(spark, sf).select("doc_id", "text")
@@ -140,13 +140,13 @@ class DeleteSpec extends SparkSpec {
     val store = tmp("delsig") + "/sigs"
     // seed the store with every doc's signature as batch 0
     Dedup.minhashSignatures(d, col("doc_id"), col("text"),
-        numHashes = 32, portable = true)
+        numHashes = 32)
       .write.mode("overwrite").parquet(s"$store/graft_batch=0")
     // a delta that exactly duplicates doc 3's text
     val delta = Dedup.minhashSignatures(
       d.filter(col("doc_id") === 3)
         .select((col("doc_id") + 1000).as("doc_id"), col("text")),
-      col("doc_id"), col("text"), numHashes = 32, portable = true)
+      col("doc_id"), col("text"), numHashes = 32)
     def screen(): String = {
       val corpus0 = BatchStore.read(spark, store).select("id", "sig")
       val corpus =
@@ -154,7 +154,7 @@ class DeleteSpec extends SparkSpec {
         else corpus0.join(BatchStore.readDeletes(spark, store),
           col("id") === col("del_id"), "left_anti")
       Dedup.minhashIncremental(corpus, delta, bands = 8, rowsPerBand = 4,
-        minAgreement = 0.5, portable = true)
+        minAgreement = 0.5)
         .select("verdict").head.getString(0)
     }
     assert(screen() === "reject", "twin present: must reject")

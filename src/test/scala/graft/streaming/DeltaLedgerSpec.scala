@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
-import java.nio.file.Files
 
 /** Storage invariants of the delta-published labeling: latest-wins
   * reads, lookup-shaped labelsFor/membersOf, latest-wins compaction,
@@ -10,7 +10,7 @@ import java.nio.file.Files
 class DeltaLedgerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def dir() = Files.createTempDirectory("dlg").toString + "/labels"
+  private def dir() = Dsl.tempDir("dlg") + "/labels"
 
   private def readMap(d: String, exclude: Long = Long.MinValue) =
     DeltaLedger.read(spark, d, exclude)

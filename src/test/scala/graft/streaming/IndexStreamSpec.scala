@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -12,8 +13,7 @@ import graft.similarity.Similarity
   * layout, and fail-closed behavior on a missing quantizer. */
 class IndexStreamSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = Dsl.tempDir(p)
 
   /** Delta rows written as `k` single-file ordered batches. */
   private def orderedBatches(df: DataFrame, k: Int): String = {

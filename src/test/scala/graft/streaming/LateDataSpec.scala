@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -14,7 +15,7 @@ class LateDataSpec extends SparkSpec {
 
   private def writeBatch(watchDir: String, name: String,
                          rows: Seq[(Long, Option[Long])]): Unit = {
-    val stage = Files.createTempDirectory("late_stage").toString
+    val stage = Dsl.tempDir("late_stage")
     rows.map { case (id, sec) =>
       (id, sec.map(s => new Timestamp(s * 1000)).orNull)
     }.toDF("id", "ts").coalesce(1).write.mode("overwrite").parquet(stage)
@@ -24,7 +25,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("stragglers and null timestamps are accounted, totals conserved") {
-    val root = Files.createTempDirectory("late_stream").toString
+    val root = Dsl.tempDir("late_stream")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val base = 1000000L
     // batch0 advances the mark to base+600; batch1 carries one row 300s
@@ -64,7 +65,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("first batch has no mark: valid rows on time, per-batch layout") {
-    val root = Files.createTempDirectory("late_first").toString
+    val root = Dsl.tempDir("late_first")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeBatch(watch, "b0.parquet", Seq((1L, Some(5000L)), (2L, Some(100L))))
     val rows = spark.readStream.schema("id LONG, ts TIMESTAMP").parquet(watch)
@@ -77,7 +78,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("lost mark pointer recovers from the sinks, not MinValue") {
-    val root = Files.createTempDirectory("late_recover").toString
+    val root = Dsl.tempDir("late_recover")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeBatch(watch, "b0.parquet", Seq((1L, Some(10000L))))
     val rows = spark.readStream.schema("id LONG, ts TIMESTAMP").parquet(watch)

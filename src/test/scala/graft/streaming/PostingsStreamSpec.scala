@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
@@ -11,8 +12,7 @@ import graft.ops.TextCorpus
   * the per-batch overwrite layout. */
 class PostingsStreamSpec extends SparkSpec {
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString
+  private def tmp(p: String) = Dsl.tempDir(p)
 
   private def orderedBatches(df: DataFrame, k: Int): String = {
     val watch = tmp("pswatch")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.ops.Sampling
 import org.apache.spark.sql.functions._
@@ -13,7 +14,7 @@ class SampleStreamSpec extends SparkSpec {
 
   private def writeBatch(watchDir: String, name: String,
                          rows: Seq[(Long, Long)]): Unit = {
-    val stage = Files.createTempDirectory("ssam_stage").toString
+    val stage = Dsl.tempDir("ssam_stage")
     rows.toDF("doc_id", "weight").coalesce(1)
       .write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
@@ -22,7 +23,7 @@ class SampleStreamSpec extends SparkSpec {
   }
 
   test("maintained sample equals batch weightedSample over the union") {
-    val root = Files.createTempDirectory("ssam").toString
+    val root = Dsl.tempDir("ssam")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val batches = Seq(
       (1L to 40L).map(i => (i, i % 7 + 1)),
@@ -66,13 +67,13 @@ class SampleStreamSpec extends SparkSpec {
     // the regression: a long-cast state schema floored these to 0 and
     // the fold then failed loudly on the non-positive-weight guard;
     // the double schema must keep the exact weightedSample identity
-    val root = Files.createTempDirectory("ssam_frac").toString
+    val root = Dsl.tempDir("ssam_frac")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val batches = Seq(
       (1L to 30L).map(i => (i, (i % 9 + 1) / 10.0)),
       (31L to 60L).map(i => (i, (i % 13 + 1) / 8.0)))
     batches.zipWithIndex.foreach { case (b, i) =>
-      val stage = Files.createTempDirectory("ssam_frac_stage").toString
+      val stage = Dsl.tempDir("ssam_frac_stage")
       b.toDF("doc_id", "weight").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()

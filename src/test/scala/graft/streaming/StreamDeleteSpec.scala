@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
@@ -19,7 +20,7 @@ class StreamDeleteSpec extends SparkSpec {
 
   private def writeDocBatch(watchDir: String, name: String,
                             rows: Seq[(String, Long, String)]): Unit = {
-    val stage = Files.createTempDirectory("sdel_stage").toString
+    val stage = Dsl.tempDir("sdel_stage")
     rows.toDF("kind", "doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
@@ -34,7 +35,7 @@ class StreamDeleteSpec extends SparkSpec {
 
   test("postings: same-batch add+del deletes; cross-batch del deletes; " +
        "crash-replay of the delete-carrying batch converges") {
-    val root = Files.createTempDirectory("sdel_post").toString
+    val root = Dsl.tempDir("sdel_post")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeDocBatch(watch, "b0.parquet", Seq(
       ("add", 1L, "alpha bravo charlie delta"),
@@ -85,7 +86,7 @@ class StreamDeleteSpec extends SparkSpec {
   test("admission: a deleted doc stops vetoing — its later duplicate is " +
        "admitted; same-batch add+del keeps its verdict but leaves the " +
        "store and ledger tombstoned") {
-    val root = Files.createTempDirectory("sdel_adm").toString
+    val root = Dsl.tempDir("sdel_adm")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val dupText = "the exact sentence that returns after its takedown"
     writeDocBatch(watch, "b0.parquet", Seq(
@@ -127,7 +128,7 @@ class StreamDeleteSpec extends SparkSpec {
 
   test("ANN lists: del rows carry NULL embeddings; deleted vectors leave " +
        "every shortlist; same-batch add+del deletes") {
-    val root = Files.createTempDirectory("sdel_ann").toString
+    val root = Dsl.tempDir("sdel_ann")
     val dim = 4
     def vec(seed: Int) = (0 until dim).map(i =>
       ((seed * 31 + i * 7) % 13 - 6).toFloat / 3f)
@@ -140,7 +141,7 @@ class StreamDeleteSpec extends SparkSpec {
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def writeVecBatch(name: String,
                       rows: Seq[(String, Long, Option[Seq[Float]])]): Unit = {
-      val stage = Files.createTempDirectory("sdel_vstage").toString
+      val stage = Dsl.tempDir("sdel_vstage")
       rows.toDF("kind", "vec_id", "embedding").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -169,10 +170,10 @@ class StreamDeleteSpec extends SparkSpec {
 
   test("maintained sample: in-stream deletes drop ids (same-batch and " +
        "cross-batch); later add batches refill naturally") {
-    val root = Files.createTempDirectory("sdel_samp").toString
+    val root = Dsl.tempDir("sdel_samp")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def writeBatch(name: String, rows: Seq[(String, Long, Long)]): Unit = {
-      val stage = Files.createTempDirectory("sdel_sstage").toString
+      val stage = Dsl.tempDir("sdel_sstage")
       rows.toDF("kind", "doc_id", "weight").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -205,7 +206,7 @@ class StreamDeleteSpec extends SparkSpec {
   test("admission pre-mask: a doc duplicating only content its OWN batch " +
        "deletes is admitted, and a crash-replay of that batch converges " +
        "verdict-for-verdict") {
-    val root = Files.createTempDirectory("sdel_premask").toString
+    val root = Dsl.tempDir("sdel_premask")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val dupText = "one sentence shared by the taken down doc and its twin"
     writeDocBatch(watch, "b0.parquet", Seq(
@@ -253,10 +254,10 @@ class StreamDeleteSpec extends SparkSpec {
   test("maintained sample: crash-replay of a delete-carrying batch must " +
        "NOT re-fold over the shrunken sample (no rank>k backfill)") {
     import graft.ops.Sampling
-    val root = Files.createTempDirectory("sdel_sreplay").toString
+    val root = Dsl.tempDir("sdel_sreplay")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def writeBatch(name: String, rows: Seq[(String, Long, Long)]): Unit = {
-      val stage = Files.createTempDirectory("sdel_srstage").toString
+      val stage = Dsl.tempDir("sdel_srstage")
       rows.toDF("kind", "doc_id", "weight").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -314,11 +315,11 @@ class StreamDeleteSpec extends SparkSpec {
        "same-batch add+del deletes, and a crash-replay converges") {
     import graft.ops.IncrementalAgg
     import graft.ops.IncrementalAgg.Measure
-    val root = Files.createTempDirectory("sdel_view").toString
+    val root = Dsl.tempDir("sdel_view")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     def writeBatch(name: String,
                    rows: Seq[(String, Long, String, java.lang.Long)]): Unit = {
-      val stage = Files.createTempDirectory("sdel_vstage2").toString
+      val stage = Dsl.tempDir("sdel_vstage2")
       rows.toDF("kind", "id", "k", "v").coalesce(1)
         .write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()
@@ -382,7 +383,7 @@ class StreamDeleteSpec extends SparkSpec {
 
   test("a kind value outside {add, del} fails the batch, not silently " +
        "ingests or drops") {
-    val root = Files.createTempDirectory("sdel_bad").toString
+    val root = Dsl.tempDir("sdel_bad")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     writeDocBatch(watch, "b0.parquet", Seq(
       ("add", 1L, "fine"), ("remove", 2L, null)))
@@ -394,7 +395,7 @@ class StreamDeleteSpec extends SparkSpec {
       s"wrong failure: ${e.getCause.getMessage}")
     // a NULL kind must fail too — a plain negated isin filter would
     // silently drop the row from adds, dels and the validation alike
-    val root2 = Files.createTempDirectory("sdel_null").toString
+    val root2 = Dsl.tempDir("sdel_null")
     val watch2 = s"$root2/in"; Files.createDirectories(Paths.get(watch2))
     writeDocBatch(watch2, "b0.parquet", Seq(
       ("add", 1L, "fine"), (null, 2L, "lost row")))

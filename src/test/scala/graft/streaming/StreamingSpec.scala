@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.Tables
 import org.apache.spark.sql.functions._
@@ -107,7 +108,7 @@ class StreamingSpec extends SparkSpec {
     val dir = s"$sf/events.parquet"
     // nanos timestamps aren't streamable either — read via Tables (batch)
     // and compare a file-source stream over a micro-converted copy
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val tmp = Dsl.tempDir("graft_stream")
     Tables.events(spark, sf).write.mode("overwrite").parquet(tmp)
     val streamed = EventStreams.eventsStream(spark, tmp, maxFilesPerTrigger = 2)
     // Complete mode: emit ALL windows at drain end, including the ones the
@@ -164,7 +165,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Ev]
     input.addData(Ev(1, ts(1), 1, "click", 1.0, "{}"),
       Ev(2, ts(2), 2, "view", 2.0, "{}"))
-    val base = java.nio.file.Files.createTempDirectory("graft_handoff").toString
+    val base = Dsl.tempDir("graft_handoff")
     EventStreams.stageHandoff(
       input.toDF().withColumn("phase", lit("post-parse")),
       s"$base/queue", s"$base/ckpt")
@@ -180,11 +181,11 @@ class StreamingSpec extends SparkSpec {
     // budgeted at 900 ms — it MUST cut before finishing; the second
     // (unbudgeted) drain must process precisely the uncommitted suffix,
     // and the final output must equal one uninterrupted drain's.
-    val root = java.nio.file.Files.createTempDirectory("graft_budget").toString
+    val root = Dsl.tempDir("graft_budget")
     val watch = s"$root/in"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
     (0 until 6).foreach { i =>
-      val stage = java.nio.file.Files.createTempDirectory("bud_stage").toString
+      val stage = Dsl.tempDir("bud_stage")
       Seq((i.toLong, s"row $i")).toDF("id", "payload")
         .coalesce(1).write.mode("overwrite").parquet(stage)
       val part = new java.io.File(stage).listFiles()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.Dsl
 import graft.SparkSpec
 import graft.ops.IncrementalAgg
 import graft.ops.IncrementalAgg.Measure
@@ -21,7 +22,7 @@ class ViewMaintenanceSpec extends SparkSpec {
 
   private def writeBatch(watchDir: String, name: String,
                          rows: Seq[(String, Double)]): Unit = {
-    val stage = Files.createTempDirectory("view_stage").toString
+    val stage = Dsl.tempDir("view_stage")
     rows.toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -35,7 +36,7 @@ class ViewMaintenanceSpec extends SparkSpec {
         r.getDouble(3), r.getDouble(4))).toSet
 
   test("3-batch maintained view equals the batch-mode aggregate") {
-    val root = Files.createTempDirectory("view_stream").toString
+    val root = Dsl.tempDir("view_stream")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val all = Seq(
       Seq("a" -> 1.5, "b" -> 2.0),
@@ -64,7 +65,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("dangling pointer recovers to the highest complete snapshot") {
-    val root = Files.createTempDirectory("view_recover").toString
+    val root = Dsl.tempDir("view_recover")
     val state = s"$root/state"
     // two published snapshots on disk
     IncrementalAgg.state(Seq("a" -> 1.0).toDF("k", "v"), Seq(col("k")),
@@ -83,14 +84,14 @@ class ViewMaintenanceSpec extends SparkSpec {
   }
 
   test("empty store reads as None, not an error") {
-    val root = Files.createTempDirectory("view_empty").toString
+    val root = Dsl.tempDir("view_empty")
     assert(ViewMaintenance.readLatest(spark, s"$root/nope").isEmpty)
   }
 
   test("deleteFromView retracts via keyed re-aggregation — min/max " +
        "holders recompute from survivors, untouched groups keep their " +
        "rows, and later folds merge onto the post-delete state") {
-    val root = Files.createTempDirectory("view_delete").toString
+    val root = Dsl.tempDir("view_delete")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
     val b0 = Seq("a" -> 1.5, "b" -> 2.0, "a" -> 9.0)
     val b1 = Seq("a" -> 0.25, "c" -> -3.0, "b" -> 7.5)
@@ -152,7 +153,7 @@ class ViewMaintenanceSpec extends SparkSpec {
     def writeWave(watch: String, name: String,
                   addRows: Seq[(Long, String, Double)],
                   dels: Seq[Long]): Unit = {
-      val stage = Files.createTempDirectory("view_ids_stage").toString
+      val stage = Dsl.tempDir("view_ids_stage")
       val df = addRows.map { case (id, k, v) =>
           ("add", id, k: String, Double.box(v)) }
         .++(dels.map(id => ("del", id, null: String, null: java.lang.Double)))
@@ -164,7 +165,7 @@ class ViewMaintenanceSpec extends SparkSpec {
     }
     val corpus = adds.toDF("event_id", "k", "v")
     def run(compactOver: Option[Int]): String = {
-      val root = Files.createTempDirectory("view_ids").toString
+      val root = Dsl.tempDir("view_ids")
       val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
       waves.zipWithIndex.foreach { case (w, i) =>
         writeWave(watch, s"b$i.parquet", w, Nil); Thread.sleep(20)
@@ -226,7 +227,7 @@ class ViewMaintenanceSpec extends SparkSpec {
   test("pointer-loss fallback follows publish order (mtime), not the " +
        "numeric version max — admin publishes must not shadow later " +
        "batch folds") {
-    val root = Files.createTempDirectory("view_admin").toString
+    val root = Dsl.tempDir("view_admin")
     val state = s"$root/state"
     // an ADMIN snapshot (SampleStream.deleteFromSample's far-above-batch
     // version) published FIRST, then a later stream-batch snapshot with
