@@ -491,7 +491,8 @@ case class SigAgreementExpr(left: Expression, right: Expression)
 }
 
 /** LSH bucket over a plan-time weight matrix (the md5-derived
-  * literals of [[graft.functions.VectorFns.hyperplane_bucket]], fused). NEVER null: a null/mismatched vector
+  * literals of [[graft.functions.VectorFns.hyperplane_bucket]], fused).
+  * NEVER null: a null/mismatched vector
   * degrades to bucket 0 (the original when/otherwise chain's value),
   * so eval and codegen handle the null child themselves. */
 case class HyperplaneBucketExpr(child: Expression,

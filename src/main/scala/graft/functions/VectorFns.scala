@@ -63,7 +63,7 @@ object VectorFns {
     * scale = max|x| — the 4× storage cut (float32 → int8) an embedding
     * store takes at corpus scale, as a pure codegen'd projection. The
     * ⌊·+½⌋ convention (not `round`) keeps every lane integer-exact and
-    * engine-portable, because floor is IEEE-deterministic where banker's/half-up
+    * engine-portable: floor is IEEE-deterministic where banker's/half-up
     * tie rules differ between engines. Zero vectors quantize to zeros.
     *
     * The scale is a PRECOMPUTED column (e.g. a

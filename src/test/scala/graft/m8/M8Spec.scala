@@ -639,8 +639,7 @@ class M8Spec extends SparkSpec {
     assert(again.toSet === got.toSet, "hash-ordered draw must be stable")
   }
 
-  test("bm25/phrase broadcastQueriesUpTo: identical results, both plan " +
-       "shapes pinned") {
+  test("bm25/phrase serves broadcast their query tables") {
     import graft.ops.TextCorpus
     val d = Tables.spread(Tables.documents(spark, sf))
     val q = d.filter(col("doc_id") % 7 === 3)

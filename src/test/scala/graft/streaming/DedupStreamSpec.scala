@@ -23,6 +23,26 @@ class DedupStreamSpec extends SparkSpec {
     Files.copy(part.toPath, Paths.get(watchDir, name))
   }
 
+  /** Verdicts (doc_id -> (verdict, dup_of or -1)) of `batches` admitted
+    * one by one through batch-mode incremental admission. */
+  private def batchReplay(batches: Seq[Seq[(Long, String)]])
+      : Map[Long, (String, Long)] = {
+    def sigs(rows: Seq[(Long, String)]): DataFrame =
+      Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
+        col("doc_id"), col("text"), numHashes = 32)
+    var corpus = sigs(Seq.empty).limit(0)
+    batches.flatMap { batch =>
+      val delta = sigs(batch)
+      val v = Dedup.minhashIncremental(corpus, delta)
+        .collect().map(r => r.getLong(0) ->
+          (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
+      val admitted = v.filter(_._2._1 == "admit").map(_._1).toSet
+      corpus = corpus.unionByName(
+        delta.filter(col("id").isInCollection(admitted)))
+      v
+    }.toMap
+  }
+
   test("streaming admission matches batch-mode incremental admission") {
     val root = Dsl.tempDir("dedup_stream")
     val watch = s"$root/in"; Files.createDirectories(Paths.get(watch))
@@ -69,21 +89,7 @@ class DedupStreamSpec extends SparkSpec {
     assert(storedIds == Set(1L, 2L, 4L, 6L))
 
     // parity: replay the same batches through batch-mode admission
-    def sigs(rows: Seq[(Long, String)]): DataFrame =
-      Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
-        col("doc_id"), col("text"), numHashes = 32)
-    var corpus = sigs(Seq.empty).limit(0)
-    val replayed = Seq(b0, b1, b2).flatMap { batch =>
-      val delta = sigs(batch)
-      val v = Dedup.minhashIncremental(corpus, delta)
-        .collect().map(r => r.getLong(0) ->
-          (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
-      val admitted = v.filter(_._2._1 == "admit").map(_._1).toSet
-      corpus = corpus.unionByName(
-        delta.filter(col("id").isInCollection(admitted)))
-      v
-    }.toMap
-    assert(replayed == got)
+    assert(batchReplay(Seq(b0, b1, b2)) == got)
 
     // crash-replay idempotency: drop the LAST batch's commit marker (a
     // crash after the foreachBatch body but before the checkpoint commit)
@@ -337,12 +343,13 @@ class DedupStreamSpec extends SparkSpec {
         .parquet(watch),
       s"$root/store", s"$root/verdicts", s"$root/ckpt",
       continuous = true, compactWhenBatchesExceed = Some(2))
-    for (b <- 0 until 7) {
-      writeBatch(watch, s"b$b.parquet", Seq(
-        (b * 2L, s"first wholly distinct continuous text number $b about " +
-          s"${('a' + b).toChar} things"),
-        (b * 2L + 1, s"second wholly distinct continuous text number $b " +
-          s"covering ${('q' + b).toChar} topics")))
+    val batches = (0 until 7).map(b => Seq(
+      (b * 2L, s"first wholly distinct continuous text number $b about " +
+        s"${('a' + b).toChar} things"),
+      (b * 2L + 1, s"second wholly distinct continuous text number $b " +
+        s"covering ${('q' + b).toChar} topics")))
+    for ((batch, b) <- batches.zipWithIndex) {
+      writeBatch(watch, s"b$b.parquet", batch)
       q.processAllAvailable()
     }
     q.stop()
@@ -356,13 +363,16 @@ class DedupStreamSpec extends SparkSpec {
     val ids = BatchStore.read(spark, s"$root/store")
       .select("id").collect().map(_.getLong(0))
     assert(ids.length == ids.distinct.length)
-    // every doc got a verdict, and the store holds exactly the admitted
-    // ones (the near-identical texts may reject a few as duplicates)
+    // the verdicts equal batch-mode admission of the same batches (the
+    // near-identical texts reject a few as duplicates), and the store
+    // holds exactly the admitted ones
     val verdicts = spark.read.parquet(s"$root/verdicts")
-      .select("doc_id", "verdict").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+      .select("doc_id", "verdict", "dup_of").collect()
+      .map(r => r.getLong(0) ->
+        (r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
+    assert(verdicts == batchReplay(batches))
     assert(verdicts.keySet == (0L until 14L).toSet)
-    assert(ids.toSet == verdicts.filter(_._2 == "admit").keySet,
+    assert(ids.toSet == verdicts.filter(_._2._1 == "admit").keySet,
       s"policed continuous store lost signatures: ${ids.sorted.toSeq}")
   }
 
